@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from informers_spark.functions.similarity import cosine
-from informers_spark.operators.dedup import spread_scan
+from informers_spark.operators.dedup import drop_oversized_buckets, spread_scan
 
 
 def _expr_vec(vals) -> Column:
@@ -159,33 +159,16 @@ def _banded_blocks(
     out_id: str,
     bands: int,
     planes_per_band: int,
-    max_bucket: int | None,
 ) -> DataFrame:
-    """(id, band, bucket) blocking table with the two-phase skew guard:
-    any (band, bucket) cell above max_bucket is dropped BEFORE any
-    self-join touches it — a dense embedding region can never go quadratic
-    (the same groupBy-count → broadcast-anti-join guard minhash_pairs
-    uses; see dedup.drop_oversized_buckets for why not a window count)."""
-    from informers_spark.operators.dedup import drop_oversized_buckets
-
-    if max_bucket:
-        # corpus/self-join side: the banded-bucket expressions are the
-        # heavy part — spread a coarse scan so they use every core (the
-        # broadcast query side passes max_bucket=None and stays put)
-        df = spread_scan(df)
-    blocks = df.select(
+    """(out_id, band, key) banded-hyperplane cells, one row per vector
+    per band; `key` is the band's bucket, named like every other
+    blocker's cell so one join key fits them all. No skew guard and no
+    checkpoint here: embedding_neardup's self-join goes through
+    dedup.band_pairs, and knn_lsh guards its corpus side itself."""
+    return df.select(
         F.col(id_col).alias(out_id),
         F.explode(banded_buckets(F.col(vec_col), bands, planes_per_band)).alias("bk"),
-    ).select(out_id, F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket"))
-    if max_bucket:
-        # materialize the bucket computation ONCE: the guard's count
-        # branch, its anti-join side, and the downstream join side(s) all
-        # consume this table — without a checkpoint the bands×planes
-        # aggregate expressions re-run per branch (measured 4x on the
-        # embedding_neardup self-join). Three small columns.
-        blocks = blocks.localCheckpoint()
-        blocks = drop_oversized_buckets(blocks, ["band", "bucket"], max_bucket)
-    return blocks
+    ).select(out_id, "bk.band", F.col("bk.bucket").alias("key"))
 
 
 def knn_lsh(
@@ -196,17 +179,22 @@ def knn_lsh(
     k: int = 5,
     bands: int = 4,
     planes_per_band: int = 8,
-    max_bucket: int | None = 10_000,
+    max_bucket: int = 10_000,
 ) -> DataFrame:
     """Approximate top-k with banded (multi-probe) LSH: candidates =
     corpus rows sharing ANY band's bucket with the query (equi-join on
-    (band, bucket), never a cross join), deduped, then cosine-scored.
+    (band, key), never a cross join), deduped, then cosine-scored.
     OR-amplification over `bands` tables fixes the single-table recall
-    collapse; max_bucket caps any hot cell before the join."""
-    c = _banded_blocks(corpus, id_col, vec_col, "neighbor_id", bands, planes_per_band, max_bucket)
-    q = _banded_blocks(queries, id_col, vec_col, "query_id", bands, planes_per_band, None)
+    collapse; max_bucket caps any hot corpus cell before the join."""
+    # corpus side: spread a coarse scan so the bucket expressions use
+    # every core, and materialize them once for the guard's two branches
+    c = _banded_blocks(
+        spread_scan(corpus), id_col, vec_col, "neighbor_id", bands, planes_per_band
+    )
+    c = drop_oversized_buckets(c.localCheckpoint(), ["band", "key"], max_bucket)
+    q = _banded_blocks(queries, id_col, vec_col, "query_id", bands, planes_per_band)
     cand = (
-        c.join(F.broadcast(q), ["band", "bucket"])
+        c.join(F.broadcast(q), ["band", "key"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
         .distinct()

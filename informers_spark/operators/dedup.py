@@ -53,6 +53,31 @@ def drop_oversized_buckets(
     return blocks.join(F.broadcast(over), key_cols, "left_anti")
 
 
+def band_pairs(blocks: DataFrame, max_bucket: int) -> DataFrame:
+    """The banded-LSH pair core every self-join blocker shares (MinHash
+    dedup, entity linking, embedding near-dup): (id, band, key) cells →
+    distinct (a, b) with a < b that share a cell left after the
+    two-phase guard. Equi-join on (band, key), never a cross join.
+    Checkpoints nothing: callers materialize their expensive signature
+    table once, before the cheap explode into cells."""
+    blocks = drop_oversized_buckets(blocks, ["band", "key"], max_bucket)
+    a, b = blocks.alias("a"), blocks.alias("b")
+    return (
+        a.join(b, ["band", "key"])
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
+        .distinct()
+    )
+
+
+def minhash_blocks(sigs: DataFrame) -> DataFrame:
+    """(id, sig) → (id, band, key): the 16-hash MinHash signature cut
+    into 8 bands of 2 rows — the banding the DuckDB oracle hard-codes."""
+    return sigs.select(
+        "id", F.explode(minhash_bands(F.col("sig"), 8, 2)).alias("bk")
+    ).select("id", "bk.band", "bk.key")
+
+
 def exact_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -73,8 +98,6 @@ def minhash_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     shingle_n: int = 3,
-    k: int = 16,
-    bands: int = 8,
     max_bucket: int = 200,
     threshold: float = 0.5,
     portable: bool = True,
@@ -88,9 +111,8 @@ def minhash_pairs(
     one fold step per character).
 
     Plan shape: one scan computes signature+shingles, explode to (band,
-    key), bucket self-join (equi-join — NOT a cross join), exact-Jaccard
-    verify on the joined shingle sets. The max_bucket guard caps any
-    band bucket before the self-join (quadratic blowup protection).
+    key), band_pairs (guarded equi-join — NOT a cross join), exact-Jaccard
+    verify on the joined shingle sets.
     """
     # materialize the shingle/signature computation ONCE: the skew-guard
     # aggregate, both self-join sides, and both fps re-attach joins all
@@ -103,25 +125,14 @@ def minhash_pairs(
             F.col(id_col).alias("id"),
             shingle_fingerprints(F.col(text_col), shingle_n, portable=portable).alias("fps"),
         )
-        .withColumn("sig", minhash_signature(F.col("fps"), k=k))
+        .withColumn("sig", minhash_signature(F.col("fps")))
         .localCheckpoint()
     )
     # band WITHOUT the shingle arrays: the 8-way band explosion and the
     # bucket self-join shuffle only (id, band, key) — the heavy fps
     # arrays are re-attached once per side AFTER pair dedup (2 joins
     # instead of 8x array duplication through the shuffle)
-    banded = base.select(
-        "id", F.explode(minhash_bands(F.col("sig"), bands, k // bands)).alias("bk")
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-    banded = drop_oversized_buckets(banded, ["band", "key"], max_bucket)
-    a, b = banded.alias("a"), banded.alias("b")
-    id_pairs = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
-        .distinct()
-    )
+    id_pairs = band_pairs(minhash_blocks(base), max_bucket)
     fps = base.select("id", "fps")
     pairs = (
         id_pairs.join(fps.select(F.col("id").alias("a"), F.col("fps").alias("fa")), "a")
@@ -156,8 +167,10 @@ def simhash_neardup(
     hamming distance < bands must agree on at least one slice, so the
     candidate join is an equi-join on (band, slice) — never all-pairs.
     Verified with the exact popcount(xor) distance ≤ max_hamming.
-    → (a, b, hamming). Same window-count bucket guard as the other
-    blocked dedups.
+    → (a, b, hamming). Same two-phase bucket guard as the other blocked
+    dedups — a groupBy count per (band, key) cell, then a broadcast join
+    against the over-limit keys — inlined per regime in
+    simhash_pairs_from_hashes.
 
     Recall contract: EXACT for max_hamming <= bands - 1 (pigeonhole);
     for larger thresholds candidates are only block-collision pairs
@@ -461,21 +474,19 @@ def embedding_neardup(
     OR-amplified — a near-pair that differs on one plane sign in one
     table still collides in another). → (a, b, cos_sim).
 
-    Scale shape: the self-join is an equi-join on (band, bucket); the
-    window-count guard drops any cell above max_bucket BEFORE the join,
-    so a dense embedding region (the 100-TB failure mode of single-table
-    LSH) can never go quadratic. Vectors are re-attached to the deduped
-    id pairs, so the blocking shuffle carries only (id, band, bucket)."""
+    Scale shape: band_pairs self-joins the (band, key) cells after the
+    two-phase guard has dropped any cell above max_bucket, so a dense
+    embedding region (the 100-TB failure mode of single-table LSH) can
+    never go quadratic. Vectors are re-attached to the deduped id pairs,
+    so the blocking shuffle carries only (id, band, key)."""
     from informers_spark.operators.ann import _banded_blocks
 
-    blocks = _banded_blocks(df, id_col, vec_col, "id", bands, planes_per_band, max_bucket)
-    a, b = blocks.alias("a"), blocks.alias("b")
-    id_pairs = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("a"), F.col("b.id").alias("b"))
-        .distinct()
-    )
+    # spread a coarse scan so the bands×planes bucket expressions use
+    # every core, then materialize them ONCE: the guard's count branch,
+    # its anti-join probe and both self-join sides all read this table
+    # (without it they re-run per branch — measured 4x). Three small columns.
+    blocks = _banded_blocks(spread_scan(df), id_col, vec_col, "id", bands, planes_per_band)
+    id_pairs = band_pairs(blocks.localCheckpoint(), max_bucket)
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     return (
         id_pairs.join(vecs.select(F.col("id").alias("a"), F.col("v").alias("va")), "a")

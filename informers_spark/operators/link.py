@@ -1,18 +1,19 @@
 """Entity linking: two-stage blocked join (north-rule contract).
 
 Stage 1 (blocking / candidate generation): character-shingle MinHash
-signatures on the distinct surface forms → LSH band buckets → self-join
-within buckets. This avoids the O(n²) cross join: at 10^12 scale only
-near-duplicate surfaces collide in a band.
+signatures on the distinct surface forms → LSH band cells → the shared
+banded self-join, dedup.band_pairs. This avoids the O(n²) cross join: at
+10^12 scale only near-duplicate surfaces collide in a band.
 
 Stage 2 (scoring): cosine over sentence-embedding vectors of the surface
 forms (mean-pooled transformer outputs, reference pipeline semantics via
 informers_spark.pipelines.embed) ∧ threshold → same_as edges; per-surface
 best match kept with a window.
 
-Skew guard: band buckets larger than `max_bucket` are dropped (a band key
-shared by millions of surfaces generates a quadratic pair explosion —
-standard LSH practice; those pairs are re-findable with more bands).
+Skew guard: band_pairs' two-phase guard drops band cells holding more
+than 1,000 surfaces (a band key shared by millions of surfaces generates
+a quadratic pair explosion — standard LSH practice; those pairs are
+re-findable with more bands).
 """
 
 from __future__ import annotations
@@ -20,11 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from informers_spark.functions.similarity import (
-    cosine,
-    minhash_bands,
-    minhash_signature,
-)
+from informers_spark.functions.similarity import cosine, minhash_signature
+from informers_spark.operators.dedup import band_pairs, minhash_blocks
 from informers_spark.pipelines.embed import embed
 
 
@@ -45,9 +43,6 @@ def _char_shingle_fps(col, n: int = 3):
 def candidate_pairs(
     surfaces: DataFrame,
     surface_col: str = "surface",
-    k: int = 16,
-    bands: int = 8,
-    max_bucket: int = 1000,
     small_cutoff: int = 1024,
 ) -> DataFrame:
     """Candidate pairs (a, b) with a < b over distinct surface forms.
@@ -65,42 +60,15 @@ def candidate_pairs(
             a = surfaces.select(F.col(surface_col).alias("sa"))
             b = surfaces.select(F.col(surface_col).alias("sb"))
             return a.crossJoin(F.broadcast(b)).filter(F.col("sa") < F.col("sb"))
-    rows = k // bands
-    sig = surfaces.select(
-        F.col(surface_col).alias("surface"),
-        minhash_signature(_char_shingle_fps(F.col(surface_col)), k=k).alias("sig"),
-    )
-    # materialize once: the skew-guard aggregate and both self-join sides
-    # would otherwise each recompute the per-char shingle fold
-    banded = (
-        sig.select(
-            "surface", F.explode(minhash_bands(F.col("sig"), bands, rows)).alias("bk")
-        )
-        .select("surface", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-        .localCheckpoint()
-    )
-
-    # skew guard: drop pathological buckets before the self-join — a
-    # window count over the (band, key) partitioning costs ONE shuffle
-    # (vs groupBy + re-join = two) and the self-join below reuses the
-    # same partitioning
-    banded = (
-        banded.withColumn(
-            "_bn", F.count("*").over(Window.partitionBy("band", "key"))
-        )
-        .filter(F.col("_bn") <= max_bucket)
-        .drop("_bn")
-    )
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("a.surface") < F.col("b.surface"))
-        .select(F.col("a.surface").alias("sa"), F.col("b.surface").alias("sb"))
-        .distinct()
-    )
-    return pairs
+    # materialize the per-char shingle fold ONCE: the guard's count
+    # branch, its anti-join probe and both self-join sides all read the
+    # cells exploded from it (the explode itself is cheap)
+    sigs = surfaces.select(
+        F.col(surface_col).alias("id"),
+        minhash_signature(_char_shingle_fps(F.col(surface_col))).alias("sig"),
+    ).localCheckpoint()
+    pairs = band_pairs(minhash_blocks(sigs), max_bucket=1000)
+    return pairs.select(F.col("a").alias("sa"), F.col("b").alias("sb"))
 
 
 def link_entities(
@@ -108,15 +76,13 @@ def link_entities(
     surface_col: str = "surface",
     threshold: float = 0.8,
     backend: str = "auto",
-    k: int = 16,
-    bands: int = 8,
 ) -> DataFrame:
     """same_as edges (src, dst, score) between surface forms.
 
     surfaces: DataFrame with one distinct surface form per row.
     """
     distinct = surfaces.select(F.col(surface_col).alias("surface")).distinct()
-    pairs = candidate_pairs(distinct, "surface", k=k, bands=bands)
+    pairs = candidate_pairs(distinct, "surface")
 
     # embed each distinct surface once, then join vectors onto the pairs
     vecs = embed(distinct.withColumnRenamed("surface", "text"), text_col="text",

@@ -1292,7 +1292,10 @@ def _band_bucket_sql(vec: str, band: int, r: int = 8, bands: int = 4) -> str:
 
 def _banded_blocks_sql(max_bucket: int | None, bands: int = 4, where: str = "") -> str:
     """(id, band, bucket) banded blocking CTE body mirroring
-    ann._banded_blocks, including the window-count skew guard."""
+    ann._banded_blocks plus the skew guard its callers apply
+    (dedup.band_pairs, knn_lsh's corpus side). QUALIFY COUNT(*) OVER is
+    the oracle's statement of the cap; it drops the same cells as the
+    Spark side's groupBy count → broadcast anti-join."""
     unions = " UNION ALL ".join(
         f"SELECT vec_id AS id, {t} AS band, {_band_bucket_sql('embedding', t, bands=bands)} AS bucket "
         f"FROM embeddings {where}"

@@ -188,7 +188,7 @@ def test_knn_ivf_df_assignment_is_map_only(spark):
 
 
 def test_embedding_neardup_guard_caps_buckets(spark):
-    """The max_bucket window guard must bound candidate pairs even when
+    """The max_bucket guard must bound candidate pairs even when
     every vector lands in one cell (all-identical vectors = the dense
     region that makes unguarded LSH quadratic)."""
     from pyspark.sql import functions as F
@@ -205,6 +205,20 @@ def test_embedding_neardup_guard_caps_buckets(spark):
     assert full == n * (n - 1) // 2
     # guard on: the hot cell is dropped entirely -> zero quadratic work
     assert embedding_neardup(one, threshold=0.0, max_bucket=200).count() == 0
+
+
+def test_link_candidates_guard_drops_hot_cells(spark):
+    """The linker's LSH path (above small_cutoff) must drop every band
+    cell over its 1,000-surface cap and keep the near pairs elsewhere.
+    Runs of 'a' share their only character 3-gram, so all 1,100 get one
+    signature and sit together in every band cell."""
+    from informers_spark.operators.link import candidate_pairs
+
+    runs = ["a" * n for n in range(3, 1103)]
+    planted = ("acme corp", "acme corp.")
+    surfaces = spark.createDataFrame([(s,) for s in runs + list(planted)], ["surface"])
+    pairs = {(r.sa, r.sb) for r in candidate_pairs(surfaces, "surface").collect()}
+    assert pairs == {planted}
 
 
 def _ref_simhash_pairs(hashes, max_hamming, bands=4, bits=31, max_bucket=10_000):

@@ -5,6 +5,7 @@ under-partitioned scan, nothing more). These guard the 100-TB posture —
 a plan that silently loses pushdown or broadcast still passes row-count
 tests but dies at scale."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -117,17 +118,6 @@ def test_structural_extraction_is_jvm_only(spark):
     assert "MapInPandas" not in plan
 
 
-def test_embedding_neardup_no_cartesian(spark):
-    # banded LSH blocking must plan as an equi-join on (band, bucket) —
-    # a CartesianProduct here is the 100-TB death sentence
-    from informers_spark.operators.dedup import embedding_neardup
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    plan = _plan(embedding_neardup(emb, threshold=0.3))
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
-
-
 def test_knn_lsh_broadcasts_query_blocks(spark):
     from informers_spark.queries import q_knn_lsh
 
@@ -204,20 +194,44 @@ def test_salt_buckets_knob_reaches_repartition_expression(spark):
     assert salt_partition(df, None, "repo", salt_buckets=7).columns == ["repo", "path"]
 
 
-def test_skew_guard_is_broadcast_anti_join(spark):
-    # the two-phase bucket-cap guard: over-limit keys come from a
-    # groupBy count (map-side partial agg — a hot cell never lands in
-    # one task) and are removed with a BROADCAST anti-join. A window
-    # count here would shuffle the entire pathological cell into a
-    # single window task just to drop it.
-    from informers_spark.operators.dedup import drop_oversized_buckets
+def _minhash_blocker(spark):
+    from informers_spark.operators.dedup import minhash_pairs
 
-    blocks = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 3).alias("band"), (F.col("id") % 17).alias("key")
+    return minhash_pairs(spark.read.parquet(f"{SF}/documents.parquet"))
+
+
+def _link_blocker(spark):
+    from informers_spark.operators.link import candidate_pairs
+
+    surfaces = spark.createDataFrame(
+        [(f"acme corp {i}",) for i in range(50)], ["surface"]
     )
-    plan = _plan(drop_oversized_buckets(blocks, ["band", "key"], 10))
+    return candidate_pairs(surfaces, "surface", small_cutoff=0)
+
+
+def _embedding_blocker(spark):
+    from informers_spark.operators.dedup import embedding_neardup
+
+    return embedding_neardup(spark.read.parquet(f"{SF}/embeddings.parquet"), threshold=0.3)
+
+
+@pytest.mark.parametrize(
+    "blocker",
+    [_minhash_blocker, _link_blocker, _embedding_blocker],
+    ids=["minhash_pairs", "candidate_pairs", "embedding_neardup"],
+)
+def test_skew_guard_is_broadcast_anti_join(spark, blocker):
+    # every banded self-join blocker goes through dedup.band_pairs: the
+    # two-phase bucket-cap guard takes over-limit keys from a groupBy
+    # count (map-side partial agg — a hot cell never lands in one task)
+    # and removes them with a BROADCAST anti-join. A window count here
+    # would shuffle the entire pathological cell into a single window
+    # task just to drop it; a CartesianProduct is the 100-TB death
+    # sentence the (band, key) equi-join exists to avoid.
+    plan = _plan(blocker(spark))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "Window" not in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
