@@ -74,82 +74,8 @@ def pagerank(
     following. Fixed `iterations` rather than an epsilon stop makes the
     result a pure deterministic function of
     (edges, weights, iterations, damping) — which is what lets the
-    correctness gate unroll the exact same recurrence in SQL.
-
-    Per iteration: one shuffle joining ranks onto the (src, dst, w, od)
-    edge table by src, one map-side-combined groupBy(dst), one broadcast
-    of the 1-row dangling aggregate, then localCheckpoint to pin the
-    iterate and cut lineage. Setup is ONE dual-explode aggregation
-    (node universe + out-weights + dangling flags in a single shuffle,
-    instead of a union-distinct plus a separate out-degree groupBy —
-    the r5 form spent as long in setup as in all five iterations), and
-    the dangling flag rides the rank table so the per-iteration
-    dangling mass is a filter + 1-row aggregate, not an anti-join.
-    Out-weights are joined onto edges ONCE before the loop. The dangling
-    zero-padding (dst occurrences contribute +0.0 to the out-weight
-    sum) is exact in IEEE arithmetic, so od values are unchanged."""
-    w_col = (
-        F.col(weight).cast("double") if weight is not None else F.lit(1.0)
-    )
-    both = F.array(
-        F.struct(F.col(src).alias("node"), w_col.alias("w")),
-        F.struct(F.col(dst).alias("node"), F.lit(0.0).alias("w")),
-    )
-    nodes_f = (
-        edges.select(F.explode(both).alias("e"))
-        .groupBy(F.col("e.node").alias("node"))
-        .agg(F.sum("e.w").alias("od"))
-        .select("node", "od", (F.col("od") > 0).alias("has_out"))
-        .localCheckpoint()
-    )
-    n = nodes_f.count()  # single scalar; the formula needs N on both sides
-    if n == 0:
-        return nodes_f.select("node").withColumn("rank", F.lit(0.0))
-    teleport = (1.0 - damping) / n
-
-    edges_w = (
-        edges.select(
-            F.col(src).alias("e_src"), F.col(dst).alias("e_dst"), w_col.alias("e_w")
-        )
-        .join(nodes_f.filter("has_out").select("node", "od"), F.col("e_src") == F.col("node"))
-        .select("e_src", "e_dst", "e_w", "od")
-        .localCheckpoint()  # scanned every iteration
-    )
-
-    ranks = nodes_f.select("node", "has_out").withColumn(
-        "rank", F.lit(1.0 / n)
-    ).localCheckpoint()
-    for _ in range(iterations):
-        contrib = (
-            edges_w.join(ranks, F.col("e_src") == F.col("node"))
-            .groupBy(F.col("e_dst").alias("node"))
-            .agg(F.sum(F.col("rank") * F.col("e_w") / F.col("od")).alias("contrib"))
-        )
-        # rank mass on dangling nodes (no out-edges): 1-row aggregate,
-        # broadcast onto every node — never a driver round-trip inside
-        # the loop's plan
-        dangling = ranks.filter(~F.col("has_out")).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass")
-        )
-        ranks = (
-            nodes_f.select("node", "has_out")
-            .join(contrib, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "has_out",
-                (
-                    F.lit(teleport)
-                    + F.lit(damping)
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.col("mass") / F.lit(float(n)))
-                ).alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    if metrics is not None:
-        metrics["iterations"] = iterations
-        metrics["n_nodes"] = n
-    return ranks.select("node", "rank")
+    correctness gate unroll the exact same recurrence in SQL."""
+    return _rank_walk(edges, None, src, dst, iterations, damping, weight, metrics)
 
 
 def personalized_pagerank(
@@ -173,74 +99,109 @@ def personalized_pagerank(
     returns to the seeds (the standard PPR treatment — total mass stays
     1, and nodes unreachable from the seeds stay at exactly 0). The node
     universe is edge endpoints ∪ seeds, so an isolated seed keeps its
-    teleport share instead of leaking it. Same per-iteration plan shape
-    as `pagerank`; the seed indicator is joined onto the node table ONCE
-    before the loop."""
-    seed_nodes = (
-        seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().localCheckpoint()
+    teleport share instead of leaking it. Same power iteration as
+    `pagerank` (`_rank_walk`); only the teleport vector differs."""
+    return _rank_walk(edges, seeds, src, dst, iterations, damping, weight, metrics)
+
+
+def _rank_walk(
+    edges: DataFrame,
+    seeds: DataFrame | None,
+    src: str,
+    dst: str,
+    iterations: int,
+    damping: float,
+    weight: str | None,
+    metrics: dict | None,
+) -> DataFrame:
+    """The one power iteration behind `pagerank` (`seeds` None: teleport
+    (1-d)/N, dangling share mass/N) and `personalized_pagerank`
+    (teleport (1-d)·s(v), dangling share mass·s(v)).
+
+    Setup is ONE dual-explode aggregation: node universe, out-weights
+    and dangling flags in a single shuffle (dst occurrences add an exact
+    +0.0 to the out-weight). Seeds join it as zero-weight rows flagged
+    `seed`, so the universe is endpoints ∪ seeds with no second shuffle.
+    Out-weights are joined onto edges ONCE before the loop. Per
+    iteration: one shuffle joining ranks onto the (src, dst, w, od) edge
+    table by src, one map-side-combined groupBy(dst), one broadcast of
+    the 1-row dangling aggregate (the dangling flag rides the rank
+    table, so it is a filter, not an anti-join), then localCheckpoint
+    to pin the iterate and cut lineage."""
+    w_col = F.col(weight).cast("double") if weight is not None else F.lit(1.0)
+    both = F.array(
+        F.struct(F.col(src).alias("node"), w_col.alias("w")),
+        F.struct(F.col(dst).alias("node"), F.lit(0.0).alias("w")),
     )
-    n_seeds = seed_nodes.count()
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank needs a non-empty seed set")
-    sv = 1.0 / n_seeds
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionAll(edges.select(F.col(dst).alias("node")))
-        .unionAll(seed_nodes.select("node"))
-        .distinct()
-    )
-    nodes_s = (
-        nodes.join(seed_nodes.withColumn("is_seed", F.lit(True)), "node", "left")
-        .select(
-            "node",
-            F.when(F.col("is_seed"), F.lit(sv)).otherwise(F.lit(0.0)).alias("sv"),
+    ends = edges.select(F.explode(both).alias("e"))
+    aggs = [F.sum("e.w").alias("od")]
+    if seeds is not None:
+        seed_rows = seeds.select(
+            F.struct(F.col(seeds.columns[0]).alias("node"), F.lit(0.0).alias("w")), F.lit(True)
         )
+        ends = ends.withColumn("seed", F.lit(False)).unionAll(seed_rows)
+        aggs.append(F.max("seed").alias("seed"))
+    nodes_f = (
+        ends.groupBy(F.col("e.node").alias("node"))
+        .agg(*aggs)
+        .select("*", (F.col("od") > 0).alias("has_out"))
         .localCheckpoint()
     )
+    if seeds is None:
+        n = nodes_f.count()  # single scalar; the formula needs N on both sides
+        if n == 0:
+            return nodes_f.select("node").withColumn("rank", F.lit(0.0))
+        sizes = {"n_nodes": n}
+        state = nodes_f.select("node", "has_out")
+        r0, teleport = F.lit(1.0 / n), F.lit((1.0 - damping) / n)
+        share = F.col("mass") / F.lit(float(n))
+    else:
+        n_seeds = nodes_f.filter("seed").count()
+        if n_seeds == 0:
+            raise ValueError("personalized_pagerank needs a non-empty seed set")
+        sizes = {"n_seeds": n_seeds}
+        sv = F.when(F.col("seed"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
+        state = nodes_f.select("node", "has_out", sv.alias("sv"))
+        r0, teleport = F.col("sv"), F.lit(1.0 - damping) * F.col("sv")
+        share = F.col("mass") * F.col("sv")
 
-    w_col = F.col(weight).cast("double") if weight is not None else F.lit(1.0)
-    out_deg = (
-        edges.select(F.col(src).alias("node"), w_col.alias("w"))
-        .groupBy("node")
-        .agg(F.sum("w").alias("od"))
-    )
     edges_w = (
         edges.select(
             F.col(src).alias("e_src"), F.col(dst).alias("e_dst"), w_col.alias("e_w")
         )
-        .join(out_deg, F.col("e_src") == F.col("node"))
+        .join(nodes_f.filter("has_out").select("node", "od"), F.col("e_src") == F.col("node"))
         .select("e_src", "e_dst", "e_w", "od")
-        .localCheckpoint()
+        .localCheckpoint()  # scanned every iteration
     )
 
-    ranks = nodes_s.select("node", F.col("sv").alias("rank")).localCheckpoint()
+    ranks = state.withColumn("rank", r0).localCheckpoint()
     for _ in range(iterations):
         contrib = (
             edges_w.join(ranks, F.col("e_src") == F.col("node"))
             .groupBy(F.col("e_dst").alias("node"))
             .agg(F.sum(F.col("rank") * F.col("e_w") / F.col("od")).alias("contrib"))
         )
-        dangling = (
-            ranks.join(out_deg.select("node"), "node", "left_anti")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass"))
+        # rank mass on dangling nodes (no out-edges): 1-row aggregate,
+        # broadcast onto every node — never a driver round-trip inside
+        # the loop's plan
+        dangling = ranks.filter(~F.col("has_out")).agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass")
         )
         ranks = (
-            nodes_s.join(contrib, "node", "left")
+            state.join(contrib, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
-                "node",
+                *state.columns,
                 (
-                    F.lit(1.0 - damping) * F.col("sv")
-                    + F.lit(damping)
-                    * (F.coalesce("contrib", F.lit(0.0)) + F.col("mass") * F.col("sv"))
+                    teleport
+                    + F.lit(damping) * (F.coalesce("contrib", F.lit(0.0)) + share)
                 ).alias("rank"),
             )
             .localCheckpoint()
         )
     if metrics is not None:
-        metrics["iterations"] = iterations
-        metrics["n_seeds"] = n_seeds
-    return ranks
+        metrics.update(iterations=iterations, **sizes)
+    return ranks.select("node", "rank")
 
 
 def personalized_pagerank_oracle_sql(
@@ -352,36 +313,14 @@ def k_hop(
     dst: str = "dst",
     metrics: dict | None = None,
 ) -> DataFrame:
-    """Min-hop BFS from a seed set → (node, hops), hops ∈ [0, k].
-
-    Frontier expansion: frontier ⋈ edges → dedup → anti-join visited.
-    The anti-join keeps the frontier MINIMAL (a node reached at hop 2 is
-    never re-expanded at hop 3), which is what bounds total work by
-    O(reachable edges), not O(k · edges). Early-exits on an empty
-    frontier via a bounded limit(1) probe, same trick as canon.py's
-    size gate."""
-    visited = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().withColumn(
-        "hops", F.lit(0)
-    ).localCheckpoint()
-    frontier = visited.select("node")
-    hops_run = 0
-    for i in range(1, k + 1):
-        nxt = (
-            edges.join(frontier, edges[src] == frontier.node)
-            .select(F.col(dst).alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hops", F.lit(i))
-            .localCheckpoint()
-        )
-        if not nxt.limit(1).collect():  # bounded probe, never a full count
-            break
-        hops_run = i
-        visited = visited.unionAll(nxt).localCheckpoint()
-        frontier = nxt.select("node")
-    if metrics is not None:
-        metrics["hops_expanded"] = hops_run
-    return visited
+    """Min-hop BFS from a seed set → (node, hops), hops ∈ [0, k]:
+    unit-weight `shortest_paths`. With unit weights a distance can only
+    improve on the round that first reaches the node, so the frontier is
+    exactly the newly reached nodes: work stays O(reachable edges), not
+    O(k · edges), with an early exit on an empty frontier."""
+    return shortest_paths(edges, seeds, k, src, dst, metrics=metrics).select(
+        "node", F.col("dist").cast("int").alias("hops")
+    )
 
 
 def k_hop_oracle_sql(edges_sql: str, seeds_sql: str, k: int) -> str:
@@ -506,24 +445,24 @@ def shortest_paths(
 
     from a seed set at distance 0, exact for every path of ≤ k hops
     (negative weights are rejected — with them a k-bounded answer is
-    not a distance). Unreached nodes are absent from the result, like
-    `k_hop`. MIN is order-independent and each path's weight sum is
-    accumulated in path order on both engines, so the oracle (a
-    depth-bounded recursive CTE + MIN rollup) matches bit-for-bit even
-    on double weights.
+    not a distance). Unreached nodes are absent from the result. MIN is
+    order-independent and each path's weight sum is accumulated in path
+    order on both engines, so the oracle (a depth-bounded recursive CTE
+    + MIN rollup) matches bit-for-bit even on double weights.
 
-    Per iteration: one equi-join (dists onto edges by src), one
-    map-side-combined groupBy(dst) MIN, a union + second MIN to keep
-    the monotone frontier, then localCheckpoint. Early-exits via a
-    bounded limit(1) probe when an iteration improves nothing."""
+    Frontier form: round t relaxes only the nodes whose distance
+    improved in round t-1 — same dist_t as relaxing every node, since a
+    node that did not improve has already offered its distance to every
+    neighbour. Per round: frontier ⋈ edges by src, a map-side-combined
+    groupBy(dst) MIN, a left join on the current distances keeping
+    strict improvements (the next frontier), then an anti-join + union
+    folding them in. A bounded limit(1) probe exits once a round
+    improves nothing; `metrics["rounds"]` counts the rounds that did."""
     if k < 0:
         raise ValueError(f"need k >= 0, got {k}")
     w_col = F.col(weight).cast("double") if weight is not None else F.lit(1.0)
-    ew = edges.select(
-        F.col(src).alias("e_src"), F.col(dst).alias("e_dst"), w_col.alias("w")
-    )
-    neg = ew.filter(F.col("w") < 0).limit(1).collect()
-    if neg:
+    ew = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"), w_col.alias("w"))
+    if weight is not None and ew.filter(F.col("w") < 0).limit(1).collect():
         raise ValueError("shortest_paths requires non-negative edge weights")
     ew = ew.localCheckpoint()  # scanned every iteration
     dists = (
@@ -532,28 +471,29 @@ def shortest_paths(
         .withColumn("dist", F.lit(0.0))
         .localCheckpoint()
     )
+    frontier = dists
     rounds = 0
     for _ in range(k):
         relaxed = (
-            ew.join(dists, F.col("e_src") == F.col("node"))
+            ew.join(frontier, F.col("e_src") == F.col("node"))
             .groupBy(F.col("e_dst").alias("node"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
         )
-        nxt = (
-            dists.unionAll(relaxed)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        improved = (
-            nxt.alias("n")
+        frontier = (
+            relaxed.alias("n")
             .join(dists.alias("o"), "node", "left")
             .filter(F.col("o.dist").isNull() | (F.col("n.dist") < F.col("o.dist")))
+            .select("node", "n.dist")
+            .localCheckpoint()
         )
-        if not improved.limit(1).collect():  # bounded probe, never a full count
+        if not frontier.limit(1).collect():  # bounded probe, never a full count
             break
         rounds += 1
-        dists = nxt
+        dists = (
+            dists.join(frontier.select("node"), "node", "left_anti")
+            .unionAll(frontier)
+            .localCheckpoint()
+        )
     if metrics is not None:
         metrics["rounds"] = rounds
     return dists
@@ -665,6 +605,13 @@ def _wedge_close(und: DataFrame, deg: DataFrame) -> DataFrame:
     )
 
 
+def _score_weight():
+    """An edge's extraction score as a rank-walk weight, clamped to a
+    small positive floor so a zero-score edge cannot zero a node's
+    out-weight."""
+    return F.greatest(F.col("score").cast("double"), F.lit(1e-6))
+
+
 def kg_graph_summary(
     spark,
     warehouse_dir: str,
@@ -683,17 +630,12 @@ def kg_graph_summary(
     "same_as"]); None = every predicate. The edges table is partitioned
     by pred (plans/kg.py), so a preds filter is partition pruning, not
     a scan-and-drop. `use_scores` weights the rank walk by each edge's
-    extraction score (clamped to a small positive floor so a zero-score
-    edge cannot zero a node's out-weight)."""
+    extraction score (`_score_weight`)."""
     edges = spark.read.parquet(f"{warehouse_dir.rstrip('/')}/edges")
     if preds is not None:
         edges = edges.filter(F.col("pred").isin(list(preds)))
     if use_scores:
-        weighted = edges.select(
-            "src",
-            "dst",
-            F.greatest(F.col("score").cast("double"), F.lit(1e-6)).alias("w"),
-        )
+        weighted = edges.select("src", "dst", _score_weight().alias("w"))
         ranks = pagerank(weighted, iterations=pagerank_iterations, weight="w")
     else:
         ranks = pagerank(edges.select("src", "dst"), iterations=pagerank_iterations)
@@ -721,11 +663,7 @@ def materialize_graph_stats(
     wh = Warehouse(spark, warehouse_dir)
     edges = wh.read("edges")
     if use_scores:
-        ranked_edges = edges.select(
-            "src",
-            "dst",
-            F.greatest(F.col("score").cast("double"), F.lit(1e-6)).alias("w"),
-        )
+        ranked_edges = edges.select("src", "dst", _score_weight().alias("w"))
         rank_kwargs = {"weight": "w"}
     else:
         ranked_edges = edges.select("src", "dst")

@@ -2388,8 +2388,8 @@ QUERIES = {
     "q_knn_lsh": q_knn_lsh,
     "q_centroids": q_centroids,
     "q_simhash": q_simhash,
-    # -- graph gates sharing operators/graph.py with the reworked
-    # pagerank/triangles (k_hop/sssp/lpa/degrees bodies unchanged) --
+    # -- graph gates over operators/graph.py (k_hop runs on
+    # shortest_paths' frontier loop; lpa/degrees stand alone) --
     "q_kg_degrees": q_kg_degrees,
     "q_khop_regions": q_khop_regions,
     "q_label_propagation": q_label_propagation,

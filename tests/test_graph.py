@@ -107,7 +107,7 @@ def test_k_hop_min_hops_and_early_exit(spark):
     m = {}
     got = {r["node"]: r["hops"] for r in k_hop(e, seeds, k=2, metrics=m).collect()}
     assert got == {"a": 0, "b": 1, "c": 1, "d": 2}
-    assert m["hops_expanded"] == 2
+    assert m["rounds"] == 2
 
 
 def test_k_hop_frontier_exhausts_before_k(spark):
@@ -116,7 +116,7 @@ def test_k_hop_frontier_exhausts_before_k(spark):
     m = {}
     got = {r["node"]: r["hops"] for r in k_hop(e, seeds, k=10, metrics=m).collect()}
     assert got == {"a": 0, "b": 1}
-    assert m["hops_expanded"] == 1  # early-exited, did not run 10 rounds
+    assert m["rounds"] == 1  # early-exited, did not run 10 rounds
 
 
 def test_k_hop_unreachable_nodes_absent(spark):
@@ -228,31 +228,52 @@ def test_label_propagation_star_absorbs_min_label(spark):
     assert got == _lpa_reference(pairs, 2)
 
 
-def test_label_propagation_deterministic_across_partitionings(spark):
+def _lpa_rows(e):
     from informers_spark.operators.graph import label_propagation
 
+    return [(r.node, r.label) for r in label_propagation(e, iterations=3).collect()]
+
+
+def _khop_rows(e):
+    seeds = e.sparkSession.createDataFrame([("n0",), ("n7",)], "node string")
+    return [(r.node, r.hops) for r in k_hop(e, seeds, k=4).collect()]
+
+
+def _sssp_rows(e):
+    from informers_spark.operators.graph import shortest_paths
+
+    w = e.withColumn("w", (F.length("src") + F.length("dst")) / F.lit(3.0))
+    seeds = e.sparkSession.createDataFrame([("n0",), ("n7",)], "node string")
+    return [(r.node, r.dist) for r in shortest_paths(w, seeds, k=4, weight="w").collect()]
+
+
+@pytest.mark.parametrize("run", [_lpa_rows, _khop_rows, _sssp_rows], ids=["lpa", "k_hop", "sssp"])
+def test_label_propagation_deterministic_across_partitionings(spark, run):
+    # MIN and integer votes are exact, so rows must not depend on how
+    # the edges are partitioned
     pairs = [(f"n{i}", f"n{(i * 5 + 2) % 23}") for i in range(40)]
     e1 = _edges(spark, pairs)
     e2 = _edges(spark, pairs).repartition(7)
-    a = sorted((r.node, r.label) for r in label_propagation(e1, iterations=3).collect())
-    b = sorted((r.node, r.label) for r in label_propagation(e2, iterations=3).collect())
-    assert a == b
+    a = sorted(run(e1))
+    assert a and a == sorted(run(e2))
 
 
-def _ppr_reference(pairs, seeds, iterations, damping):
-    """Independent dense personalized power iteration."""
+def _ppr_reference(pairs, seeds, iterations, damping, weights=None):
+    """Independent dense personalized power iteration; `weights` aligns
+    with `pairs` (None = unweighted)."""
+    ws = weights or [1.0] * len(pairs)
     nodes = sorted({n for p in pairs for n in p} | set(seeds))
     idx = {n: i for i, n in enumerate(nodes)}
     n = len(nodes)
-    out = [0] * n
-    for s, _ in pairs:
-        out[idx[s]] += 1
+    out = [0.0] * n
+    for (s, _), w in zip(pairs, ws):
+        out[idx[s]] += w
     sv = [1.0 / len(set(seeds)) if x in set(seeds) else 0.0 for x in nodes]
     rank = list(sv)
     for _ in range(iterations):
         contrib = [0.0] * n
-        for s, d in pairs:
-            contrib[idx[d]] += rank[idx[s]] / out[idx[s]]
+        for (s, d), w in zip(pairs, ws):
+            contrib[idx[d]] += rank[idx[s]] * w / out[idx[s]]
         dangling = sum(r for i, r in enumerate(rank) if out[i] == 0)
         rank = [
             (1.0 - damping) * sv[i] + damping * (contrib[i] + dangling * sv[i])
@@ -261,20 +282,26 @@ def _ppr_reference(pairs, seeds, iterations, damping):
     return dict(zip(nodes, rank))
 
 
-def test_personalized_pagerank_matches_dense_reference(spark):
+@pytest.mark.parametrize("weights", [None, [3.0, 1.0, 2.0, 1.0]], ids=["unweighted", "weighted"])
+def test_personalized_pagerank_matches_dense_reference(spark, weights):
     from informers_spark.operators.graph import personalized_pagerank
 
-    # a->b->c chain reachable from the seed, x->y disconnected,
-    # plus an isolated seed node "s2" not present in the edges
-    pairs = [("a", "b"), ("b", "c"), ("x", "y")]
-    e = _edges(spark, pairs)
+    # a->b->c chain plus shortcut a->c reachable from the seed (a's
+    # out-weight split is what the weighted case tests), x->y
+    # disconnected, plus an isolated seed node "s2" not present in the edges
+    pairs = [("a", "b"), ("b", "c"), ("x", "y"), ("a", "c")]
+    e = spark.createDataFrame(
+        [(s, d, w) for (s, d), w in zip(pairs, weights or [1.0] * len(pairs))],
+        "src string, dst string, w double",
+    )
     seeds = spark.createDataFrame([("a",), ("s2",)], "node string")
     m = {}
+    kw = {"weight": "w"} if weights else {}
     got = {
         r.node: r.rank
-        for r in personalized_pagerank(e, seeds, iterations=4, metrics=m).collect()
+        for r in personalized_pagerank(e, seeds, iterations=4, metrics=m, **kw).collect()
     }
-    want = _ppr_reference(pairs, ["a", "s2"], iterations=4, damping=0.85)
+    want = _ppr_reference(pairs, ["a", "s2"], iterations=4, damping=0.85, weights=weights)
     assert set(got) == set(want)
     for node in want:
         assert got[node] == pytest.approx(want[node], abs=1e-12)
@@ -306,12 +333,32 @@ def _sssp_reference(pairs, weights, seeds, k):
     return dist
 
 
-def test_shortest_paths_weighted_matches_bellman_ford(spark):
+@pytest.mark.parametrize(
+    "pairs, weights, want, rounds",
+    [
+        # diamond: a->b->d (1+1=2) vs a->c->d (5+0.5=5.5); plus unreachable
+        # z; the third round improves nothing -> early exit
+        (
+            [("a", "b"), ("b", "d"), ("a", "c"), ("c", "d"), ("y", "z")],
+            [1.0, 1.0, 5.0, 0.5, 2.0],
+            {"d": 2.0},
+            2,
+        ),
+        # late improvement: c is reached at 5 in round 1 and improves to 2
+        # in round 2, so round 3 must re-expand c (d: 6 -> 3); a frontier
+        # of newly reached nodes only would leave d at 6
+        (
+            [("a", "c"), ("a", "b"), ("b", "c"), ("c", "d")],
+            [5.0, 1.0, 1.0, 1.0],
+            {"c": 2.0, "d": 3.0},
+            3,
+        ),
+    ],
+    ids=["diamond", "late_improvement"],
+)
+def test_shortest_paths_weighted_matches_bellman_ford(spark, pairs, weights, want, rounds):
     from informers_spark.operators.graph import shortest_paths
 
-    # diamond: a->b->d (1+1=2) vs a->c->d (5+0.5=5.5); plus unreachable z
-    pairs = [("a", "b"), ("b", "d"), ("a", "c"), ("c", "d"), ("y", "z")]
-    weights = [1.0, 1.0, 5.0, 0.5, 2.0]
     e = spark.createDataFrame(
         [(s, d, w) for (s, d), w in zip(pairs, weights)],
         "src string, dst string, w double",
@@ -320,9 +367,9 @@ def test_shortest_paths_weighted_matches_bellman_ford(spark):
     m = {}
     got = {r.node: r.dist for r in shortest_paths(e, seeds, k=3, weight="w", metrics=m).collect()}
     assert got == _sssp_reference(pairs, weights, ["a"], 3)
-    assert got["d"] == 2.0  # shorter 2-hop path wins over heavier direct-ish one
+    assert {n: got[n] for n in want} == want
     assert "z" not in got  # unreachable absent
-    assert m["rounds"] == 2  # third round improves nothing -> early exit
+    assert m["rounds"] == rounds
 
 
 def test_shortest_paths_unweighted_equals_hop_counts(spark):
