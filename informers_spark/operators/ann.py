@@ -7,6 +7,13 @@
   plane weights w[i][j] = ((i*37 + j*101) % 19) - 9 keep the arithmetic
   exactly reproducible in ANSI SQL (DuckDB oracle parity) — at real
   scale these would be seeded gaussian planes.
+- IVF-flat: a coarse quantizer (one centroid per cell) shipped as
+  broadcast DATA — packed into one row and attached with a 1-row
+  broadcast nested-loop join — so cell assignment stays map-only and
+  the plan carries no centroid literals at any cell count K.
+
+All three end in the same per-query top-k (_top_k): cosine DESC, ties
+to the smaller neighbor id, cos_sim rounded to 6 places.
 """
 
 from __future__ import annotations
@@ -18,35 +25,16 @@ from informers_spark.functions.similarity import cosine
 from informers_spark.operators.dedup import drop_oversized_buckets, spread_scan
 
 
-def _expr_vec(vals) -> Column:
-    """array<double> literal parsed JVM-side from ONE SQL string: F.lit(list)
-    converts element-by-element over py4j (~0.8 ms/element — 1.6 s of DRIVER
-    time for a 32x64 plane matrix, paid per query construction), F.expr
-    parses the identical literal in ~2 ms. Python float repr round-trips,
-    so values are bit-identical to the F.lit form. Non-finite elements
-    (NaN centroids from NaN embeddings) would render as unparseable
-    'nan'/'inf' tokens — rejected up front with a real message instead of
-    a SQL parse error (ADVICE r4)."""
-    return F.expr("array(" + ",".join(_d(x) for x in vals) + ")")
-
-
-def _d(x) -> str:
-    import math
-
-    x = float(x)
-    if not math.isfinite(x):
-        raise ValueError(
-            f"non-finite vector element {x!r}: clean NaN/Inf embeddings "
-            "before deriving centroids/planes (they cannot be plan literals)"
-        )
-    return f"{x}D"
-
-
 def _expr_matrix(rows) -> Column:
-    """array<array<double>> literal, same rationale as _expr_vec."""
+    """array<array<double>> literal parsed JVM-side from ONE SQL string:
+    F.lit(list) converts element-by-element over py4j (~0.8 ms/element —
+    1.6 s of DRIVER time for a 32x64 plane matrix, paid per query
+    construction), F.expr parses the identical literal in ~2 ms. Python
+    float repr round-trips, so values are bit-identical to the F.lit
+    form."""
     return F.expr(
         "array("
-        + ",".join("array(" + ",".join(_d(x) for x in r) + ")" for r in rows)
+        + ",".join("array(" + ",".join(f"{float(x)}D" for x in r) + ")" for r in rows)
         + ")"
     )
 
@@ -56,21 +44,22 @@ def plane_weights(n_planes: int, dim: int) -> list[list[int]]:
 
 
 def hyperplane_bucket(vec: Column, n_planes: int = 8, dim: int = 64) -> Column:
-    """LSH bucket id: bit i = (Σ_j w[i][j]·v[j] > 0)."""
-    w = plane_weights(n_planes, dim)
-    bucket = F.lit(0).cast("long")
-    for i in range(n_planes):
-        dot_i = F.aggregate(
-            F.zip_with(
-                vec,
-                _expr_vec(w[i]),  # JVM-parsed literal (see _expr_vec)
-                lambda v, p: v.cast("double") * p,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(dot_i > 0, F.lit(2**i)).otherwise(F.lit(0)).cast("long")
-    return bucket
+    """LSH bucket id: bit i = (Σ_j w[i][j]·v[j] > 0) — the single band of
+    banded_buckets with r = n_planes."""
+    return banded_buckets(vec, 1, n_planes, dim)[0]["bucket"]
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of scored (query_id, neighbor_id, cos_sim) pairs:
+    cosine DESC with ties broken by neighbor id for determinism, then
+    cos_sim rounded to 6 places (the oracles' precision).
+    → (query_id, neighbor_id, rank, cos_sim)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
+    )
 
 
 def knn_bruteforce(
@@ -82,7 +71,7 @@ def knn_bruteforce(
 ) -> DataFrame:
     """Exact cosine top-k of each query against the corpus (self-matches
     excluded). → (query_id, neighbor_id, rank, cos_sim). The query side
-    is broadcast; ties broken by neighbor id for determinism."""
+    is broadcast."""
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
@@ -94,12 +83,7 @@ def knn_bruteforce(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
-    )
+    return _top_k(scored, k)
 
 
 def banded_buckets(
@@ -107,8 +91,8 @@ def banded_buckets(
 ) -> Column:
     """Multi-table (banded) hyperplane LSH: band t hashes with planes
     [t·r, (t+1)·r) — OR-amplification, so near-neighbors that disagree on
-    one plane of one table still collide in another. Band 0 with r=8 is
-    bit-identical to hyperplane_bucket(vec, 8) (same global plane weights).
+    one plane of one table still collide in another. Band 0 of r planes
+    is hyperplane_bucket(vec, r) (same global plane weights).
     → array<struct<band:int, bucket:bigint>>; explode to block on
     (band, bucket).
 
@@ -206,12 +190,7 @@ def knn_lsh(
         .join(F.broadcast(qv), "query_id")
         .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
-    )
+    return _top_k(scored, k)
 
 
 def centroids(
@@ -229,135 +208,10 @@ def centroids(
     )
 
 
-def _literal_vec(values) -> Column:
-    """One array literal per vector: a single F.lit(list) py4j call.
-    Building it as 64 separate F.lit() elements put ~1300 driver py4j
-    round-trips into plan CONSTRUCTION for a 10-centroid quantizer —
-    measured 5.2 s of driver time before a single task ran."""
-    return _expr_vec(values)
-
-
-def ivf_probe(
-    vec: Column | str, centroid_rows: list[tuple[int, list[float]]], nprobe: int = 1
-) -> Column:
-    """Top-nprobe coarse-quantizer cells for a vector, computed as INLINE
-    array expressions over literal centroids — no join, no shuffle: the
-    IVF assignment is a pure projection over the scan, which is what
-    keeps index build map-only at corpus scale (centroids are tiny and
-    ship inside the plan like a broadcast). Ties break to the smaller
-    cell label (struct sort on (cos DESC, -label DESC)).
-    → array<int> of cell labels, best first.
-
-    Pass `vec` as a COLUMN NAME string to build the whole probe as ONE
-    SQL text parsed in a single F.expr call: the per-centroid Column
-    builder costs ~15 py4j round-trips and one 64-literal SQL parse per
-    centroid, ~1.2 s of driver time per query construction at K=10
-    (paid inside every timed bench rep). The parsed tree is
-    operator-identical, so values are bit-equal — asserted against the
-    Column path in tests. Column input keeps the old builder for
-    arbitrary expressions."""
-    if isinstance(vec, str):
-        return F.expr(_ivf_probe_sql(vec, centroid_rows, nprobe))
-    from informers_spark.functions.similarity import dot, l2_norm
-
-    # centroid norms are plan-time constants (python floats, not
-    # expression trees); the row-vector norm Column is built ONCE and
-    # the same py4j object reused across all K cosines — together with
-    # the list-literal centroids this keeps plan construction O(K)
-    # py4j calls instead of O(K * dim)
-    vec_norm = l2_norm(vec)
-    entries = []
-    for lbl, cv in centroid_rows:
-        c_norm = float(sum(float(x) * float(x) for x in cv) ** 0.5)
-        entries.append(
-            F.struct(
-                (dot(vec, _literal_vec(cv)) / (vec_norm * F.lit(c_norm))).alias("cos"),
-                F.lit(-int(lbl)).cast("int").alias("neg"),
-            )
-        )
-    top = F.slice(F.sort_array(F.array(*entries), asc=False), 1, nprobe)
-    return F.transform(top, lambda s: -s["neg"])
-
-
-def _ivf_probe_sql(
-    vec_sql: str, centroid_rows: list[tuple[int, list[float]]], nprobe: int
-) -> str:
-    """SQL text of the ivf_probe expression tree — operator-for-operator
-    the same shape the Column builder produces (same fold order, same
-    casts, same tie-break struct), parsed once."""
-    norm = (
-        f"sqrt(aggregate({vec_sql}, 0.0D, "
-        f"(acc, x) -> acc + cast(x as double) * cast(x as double)))"
-    )
-    terms = []
-    for lbl, cv in centroid_rows:
-        c_norm = float(sum(float(x) * float(x) for x in cv) ** 0.5)
-        arr = "array(" + ",".join(_d(x) for x in cv) + ")"
-        dot_sql = (
-            f"aggregate(zip_with({vec_sql}, {arr}, "
-            f"(v, p) -> cast(v as double) * cast(p as double)), 0.0D, (acc, x) -> acc + x)"
-        )
-        terms.append(
-            f"struct({dot_sql} / ({norm} * {_d(c_norm)}) as cos, "
-            f"cast({-int(lbl)} as int) as neg)"
-        )
-    return (
-        f"transform(slice(sort_array(array({','.join(terms)}), false), 1, {nprobe}), "
-        f"s -> -s.neg)"
-    )
-
-
-def knn_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroid_rows: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF-flat approximate top-k (the brief's named scale-path variant
-    next to banded LSH): corpus vectors live in ONE cell each (nearest
-    centroid); each query probes its nprobe nearest cells and scores
-    only those cells' members. Candidate generation is an equi-join on
-    the cell id — never a cross join — with the query side broadcast;
-    a (query, corpus) pair can collide in at most one cell, so no
-    distinct is needed before scoring. centroid_rows is the trained
-    coarse quantizer [(cell_label, centroid_vec)]; here the per-label
-    means (ann.centroids) stand in deterministically.
-
-    K-growth caveat: the inline-literal probe puts O(K·dim) literals
-    into EVERY stage's serialized plan — fine at K≲100, a multi-MB
-    plan (driver serialization + per-stage task broadcast) at the
-    K≈4√N≈65k a 100-TB IVF needs. Past that, use knn_ivf_df, which
-    ships the centroids as broadcast DATA instead of plan text while
-    keeping the assignment map-only.
-    → (query_id, neighbor_id, rank, cos_sim)."""
-    cents = sorted(centroid_rows)
-    c = spread_scan(corpus).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
-    ).withColumn("cell", ivf_probe("cv", cents, 1)[0])
-    q = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-        .withColumn("cell", F.explode(ivf_probe("qv", cents, nprobe)))
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
-    )
-
-
 def centroid_vectors(df: DataFrame) -> DataFrame:
     """Assemble the per-label mean centroids (ann.centroids long format)
-    into a (label:int, vec:array<double>) DataFrame — the quantizer shape
-    knn_ivf_df broadcasts. Stays distributed: no collect."""
+    into a (label:int, vec:array<double>) DataFrame — the coarse
+    quantizer knn_ivf takes. Stays distributed: no collect."""
     return (
         centroids(df)
         .groupBy("label")
@@ -368,8 +222,9 @@ def centroid_vectors(df: DataFrame) -> DataFrame:
 
 def _ivf_cells_from_packed(vec: Column, cents: Column, nprobe: int) -> Column:
     """Top-nprobe cell labels for `vec` against a packed
-    array<struct<label,vec>> centroid column (broadcast data, not plan
-    literals). Same tie-break as ivf_probe: (cos DESC, label ASC)."""
+    array<struct<label,vec>> centroid column, best first. Ties break to
+    the smaller cell label (struct sort on (cos DESC, -label DESC)).
+    → array<int>."""
     scored = F.transform(
         cents,
         lambda s: F.struct(
@@ -381,28 +236,42 @@ def _ivf_cells_from_packed(vec: Column, cents: Column, nprobe: int) -> Column:
     return F.transform(top, lambda s: -s["neg"])
 
 
-def knn_ivf_df(
+def knn_ivf(
     corpus: DataFrame,
     queries: DataFrame,
-    centroids_df: DataFrame,
+    centroids: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
     nprobe: int = 2,
 ) -> DataFrame:
-    """IVF-flat top-k with the coarse quantizer as a broadcast DataFrame —
-    the scale path once K grows past the inline-literal plan's comfort
-    zone (see knn_ivf). The centroid set is packed into ONE row holding
-    an array<struct<label,vec>> and attached to each side with a
-    broadcast nested-loop join (1-row inner side → exactly one output
-    row per input row, map-only: no shuffle of the corpus, no O(K·dim)
-    plan literals — centroids travel once per executor as broadcast
-    data). Cell assignment, candidate equi-join, and scoring are then
-    identical to knn_ivf; the two are equality-tested at K=10.
+    """IVF-flat approximate top-k (the scale-path variant next to banded
+    LSH): corpus vectors live in ONE cell each (nearest centroid); each
+    query probes its nprobe nearest cells and scores only those cells'
+    members. `centroids` is the trained coarse quantizer as a
+    (label, vec) DataFrame (centroid_vectors: per-label means stand in
+    deterministically).
+
+    The centroid set is packed into ONE row holding an
+    array<struct<label,vec>> and attached to each side with a broadcast
+    nested-loop join (1-row inner side → exactly one output row per
+    input row): cell assignment is map-only, centroids travel once per
+    executor as broadcast data, and the plan holds no O(K·dim) literals.
+    A NaN/Inf centroid element fails the packing step (it would win
+    every cosine sort and absorb the whole corpus). Candidate generation
+    is an equi-join on the cell id — never a cross join — with the query
+    side broadcast; a (query, corpus) pair can collide in at most one
+    cell, so no distinct is needed before scoring.
     → (query_id, neighbor_id, rank, cos_sim)."""
+    nonfinite = F.exists("vec", lambda x: F.isnan(x) | (F.abs(x) == float("inf")))
     packed = F.broadcast(
-        centroids_df.agg(
-            F.array_sort(F.collect_list(F.struct("label", "vec"))).alias("_cents")
+        centroids.agg(
+            F.array_sort(F.collect_list(F.struct("label", "vec"))).alias("_cents"),
+            F.min(F.when(nonfinite, F.col("label"))).alias("_bad"),
+        ).select(
+            F.when(F.col("_bad").isNull(), F.col("_cents"))
+            .otherwise(F.raise_error(F.format_string("non-finite centroid: cell %d", "_bad")))
+            .alias("_cents")
         )
     )
     c = (
@@ -425,23 +294,4 @@ def knn_ivf_df(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("cos_sim", cosine(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("cos_sim", 6).alias("cos_sim"))
-    )
-
-
-def centroid_rows_from_labels(df: DataFrame) -> list[tuple[int, list[float]]]:
-    """Collect the per-label mean centroids (ann.centroids) into the
-    [(label, vec)] quantizer shape — a K×dim driver-side list (tiny by
-    construction; K = coarse-cell count, not corpus size)."""
-    rows = (
-        centroids(df)
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "mean_val"))).alias("dv"))
-        .select("label", F.col("dv.mean_val").alias("vec"))
-        .collect()
-    )
-    return sorted((int(r.label), list(r.vec)) for r in rows)
+    return _top_k(scored, k)

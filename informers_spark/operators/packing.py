@@ -71,6 +71,10 @@ def mixture_weights(
     that realises the mixture at that corpus size (rates cap at 1 —
     small strata cannot be upsampled by a filter; feed `rate` to
     temperature_sample / stratified_sample)."""
+    if target_rows is not None and target_rows <= 0:
+        # min(1, rate) would be 0 for every stratum — an empty sample
+        # that silently looks like "sampling happened"; fail loudly.
+        raise ValueError(f"target_rows must be positive, got {target_rows}")
     counts = df.groupBy(strata_col).agg(F.count(F.lit(1)).alias("n"))
     # |strata| rows from here on — the unpartitioned window is bounded.
     w = Window.partitionBy()
@@ -91,7 +95,8 @@ def temperature_sample(
     strata_col: str,
     key_col: str,
     alpha: float = 0.5,
-    target_rows: int = 0,
+    *,
+    target_rows: int,
     buckets: int = 10_000,
     seed: str = "",
 ) -> DataFrame:
@@ -99,11 +104,8 @@ def temperature_sample(
     the p^alpha mixture at `target_rows` total. The rate table
     (mixture_weights) is |strata| rows and broadcast; the corpus-side
     work is one map-only bucket-hash filter — re-running (or retrying
-    one task) selects the identical sample."""
-    if target_rows <= 0:
-        # min(1, rate) would be 0 for every stratum — an empty result
-        # that silently looks like "sampling happened"; fail loudly.
-        raise ValueError(f"target_rows must be positive, got {target_rows}")
+    one task) selects the identical sample. mixture_weights rejects
+    target_rows <= 0."""
     rates = mixture_weights(df, strata_col, alpha, target_rows).select(
         strata_col, (F.round(F.col("rate") * buckets)).cast("int").alias("cut")
     )

@@ -1336,14 +1336,13 @@ ORDER BY a, b
 
 def q_knn_ivf(spark, sf_dir):
     """IVF-flat approximate top-k (ann.knn_ivf): per-label mean centroids
-    as the deterministic coarse quantizer, map-only cell assignment
-    (inline literal-centroid cosines, no shuffle), nprobe=2 probing,
-    cell equi-join with the query side broadcast. Recall vs bruteforce
-    is asserted in tests/test_operators.py."""
+    (ann.centroid_vectors) as the deterministic coarse quantizer, shipped
+    as broadcast data; map-only cell assignment, nprobe=2 probing, cell
+    equi-join with the query side broadcast. Recall vs bruteforce is
+    asserted in tests/test_operators.py."""
     emb = _t(spark, sf_dir, "embeddings")
-    cents = ann.centroid_rows_from_labels(emb)
     return ann.knn_ivf(
-        emb, emb.filter(F.col("vec_id") < 10), cents, k=5, nprobe=2
+        emb, emb.filter(F.col("vec_id") < 10), ann.centroid_vectors(emb), k=5, nprobe=2
     ).orderBy("query_id", "rank")
 
 
@@ -1393,16 +1392,10 @@ FROM ranked WHERE rank <= {k} ORDER BY query_id, rank
 
 
 def q_knn_ivf_df(spark, sf_dir):
-    """IVF-flat top-k with the quantizer as broadcast DATA (ann.knn_ivf_df)
-    — the K-growth scale path: centroids are packed into one
-    array<struct> row and attached with a 1-row broadcast nested-loop
-    join (map-only), instead of O(K·dim) plan literals. Same oracle as
-    q_knn_ivf (the two variants are equality-tested in
-    tests/test_operators.py)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    return ann.knn_ivf_df(
-        emb, emb.filter(F.col("vec_id") < 10), ann.centroid_vectors(emb), k=5, nprobe=2
-    ).orderBy("query_id", "rank")
+    """Former name of the broadcast-quantizer IVF query, now q_knn_ivf
+    itself (one IVF path); kept so the query list keeps its order. Same
+    oracle as q_knn_ivf."""
+    return q_knn_ivf(spark, sf_dir)
 
 
 def q_knn_lsh(spark, sf_dir):

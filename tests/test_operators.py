@@ -152,41 +152,6 @@ def test_knn_lsh_recall_vs_bruteforce(spark):
     assert r16 >= r8 > r1  # more tables -> more recall
 
 
-def test_knn_ivf_df_equals_inline_literal_variant(spark):
-    """knn_ivf_df (centroids as broadcast DATA — the K-growth scale path)
-    must return exactly what knn_ivf (centroids as plan literals) returns
-    for the same quantizer, including tie-breaks."""
-    from informers_spark.operators import ann
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    rows = ann.centroid_rows_from_labels(emb)
-    cents_df = ann.centroid_vectors(emb)
-    lit_out = {
-        tuple(r) for r in ann.knn_ivf(emb, q, rows, k=5, nprobe=2).collect()
-    }
-    df_out = {
-        tuple(r) for r in ann.knn_ivf_df(emb, q, cents_df, k=5, nprobe=2).collect()
-    }
-    assert df_out == lit_out and len(df_out) == 50
-
-
-def test_knn_ivf_df_assignment_is_map_only(spark):
-    # the packed-centroid attach must be a broadcast nested-loop join
-    # (1-row side) with NO exchange between the corpus scan and the cell
-    # equi-join — same map-only property the literal plan has
-    from informers_spark.operators import ann
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = emb.filter(F.col("vec_id") < 10)
-    plan = ann.knn_ivf_df(emb, q, ann.centroid_vectors(emb), k=5, nprobe=2)._sc._jvm.PythonSQLUtils.explainString(
-        ann.knn_ivf_df(emb, q, ann.centroid_vectors(emb), k=5, nprobe=2)._jdf.queryExecution(), "formatted"
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" in plan  # the 1-row centroid attach
-    assert "BroadcastHashJoin" in plan  # the cell equi-join, query side broadcast
-
-
 def test_embedding_neardup_guard_caps_buckets(spark):
     """The max_bucket guard must bound candidate pairs even when
     every vector lands in one cell (all-identical vectors = the dense
@@ -397,7 +362,7 @@ def test_knn_ivf_recall_and_probe_monotonicity(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 10)
-    cents = ann.centroid_rows_from_labels(emb)
+    cents = ann.centroid_vectors(emb)
     bf = {(r.query_id, r.neighbor_id) for r in ann.knn_bruteforce(emb, q, k=5).collect()}
 
     def recall(nprobe):
@@ -407,7 +372,7 @@ def test_knn_ivf_recall_and_probe_monotonicity(spark):
         }
         return len(bf & got) / len(bf)
 
-    r1, r2, rall = recall(1), recall(2), recall(len(cents))
+    r1, r2, rall = recall(1), recall(2), recall(cents.count())
     assert r1 <= r2 <= rall
     assert r2 >= 0.3  # near-random sandbox vectors: cells are weak but real
     assert rall == 1.0  # probing every cell == exact
@@ -419,32 +384,31 @@ def test_ivf_probe_tie_breaks_to_smaller_label(spark):
     from informers_spark.operators import ann
 
     # two identical centroids -> equal cosines; the smaller label wins
-    cents = [(3, [1.0] * 4), (7, [1.0] * 4)]
-    df = spark.createDataFrame([([1.0, 1.0, 1.0, 1.0],)], ["v"])
-    row = df.select(ann.ivf_probe(F.col("v"), cents, 2).alias("p")).collect()[0]
-    assert row.p == [3, 7]
-    # the single-parse SQL fast path (column-name input) is value-equal
-    row = df.select(ann.ivf_probe("v", cents, 2).alias("p")).collect()[0]
-    assert row.p == [3, 7]
+    # whatever its position in the packed array
+    df = spark.createDataFrame(
+        [([1.0, 1.0, 1.0, 1.0], [(7, [1.0] * 4), (3, [1.0] * 4)])],
+        "v array<double>, cents array<struct<label:int, vec:array<double>>>",
+    )
+    p = ann._ivf_cells_from_packed(F.col("v"), F.col("cents"), 2)
+    assert df.select(p.alias("p")).collect()[0].p == [3, 7]
 
 
-def test_ivf_probe_sql_path_matches_column_path(spark):
-    """The one-F.expr probe (r6: column-name input) must reproduce the
-    Column-builder probe's cells exactly on non-trivial vectors."""
+@pytest.mark.parametrize("bad", [float("nan"), float("-inf")], ids=["nan", "inf"])
+def test_knn_ivf_rejects_non_finite_centroid(spark, bad):
+    """A NaN centroid element wins every cosine sort (Spark orders NaN
+    above any number), so unchecked its cell absorbs the whole corpus and
+    mixed-label neighbours come back without error. The packing step must
+    fail instead, naming the cell."""
     from pyspark.sql import functions as F
 
     from informers_spark.operators import ann
 
-    dim = 16
-    cents = [
-        (lbl, [((lbl * 13 + j * 7) % 11) - 5.0 + 0.25 * j for j in range(dim)])
-        for lbl in range(6)
-    ]
-    rows = [([float(((i * 31 + j * 3) % 17) - 8) for j in range(dim)],) for i in range(40)]
-    df = spark.createDataFrame(rows, ["v"])
-    a = [r.p for r in df.select(ann.ivf_probe(F.col("v"), cents, 3).alias("p")).collect()]
-    b = [r.p for r in df.select(ann.ivf_probe("v", cents, 3).alias("p")).collect()]
-    assert a == b
+    rows = [(i, i % 3, [float((i * 7 + j) % 5) + 1.0 for j in range(4)]) for i in range(30)]
+    rows.append((30, 7, [bad] * 4))
+    emb = spark.createDataFrame(rows, "vec_id long, label long, embedding array<double>")
+    out = ann.knn_ivf(emb, emb.filter(F.col("vec_id") < 3), ann.centroid_vectors(emb), k=5, nprobe=1)
+    with pytest.raises(Exception, match="non-finite centroid: cell 7"):
+        out.collect()
 
 
 def test_dedup_corpus_keeps_one_per_cluster(spark):

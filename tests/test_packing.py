@@ -121,12 +121,16 @@ def test_pack_greedy_partition_independent(spark):
 
 def test_temperature_sample_rejects_nonpositive_target(spark):
     df = spark.createDataFrame([(1, "a")], ["doc_id", "src"])
-    # default target_rows=0 would make every rate min(1, 0)=0 -> silently
-    # empty output; the operator must refuse instead
-    with pytest.raises(ValueError, match="target_rows"):
+    # target_rows is required: there is no valid default
+    with pytest.raises(TypeError, match="target_rows"):
         temperature_sample(df, "src", "doc_id")
+    # target_rows <= 0 would make every rate min(1, 0)=0 -> silently
+    # empty output; the operators must refuse instead
+    for bad in (0, -5):
+        with pytest.raises(ValueError, match="target_rows"):
+            temperature_sample(df, "src", "doc_id", target_rows=bad)
     with pytest.raises(ValueError, match="target_rows"):
-        temperature_sample(df, "src", "doc_id", target_rows=-5)
+        mixture_weights(df, "src", target_rows=0)
 
 
 def test_pack_greedy_preserves_id_type(spark):

@@ -161,17 +161,17 @@ def test_vision_query_prunes_scan_and_avoids_exchange(spark):
 
 
 def test_knn_ivf_assignment_is_map_only_and_broadcasts_queries(spark):
-    # IVF cell assignment must be a pure projection over the corpus scan
-    # (inline literal centroids — no join/exchange between scan and the
-    # cell equi-join), and the probe side must broadcast
+    # IVF cell assignment must stay map-only: the packed one-row centroid
+    # set attaches to each side with a broadcast nested-loop join, and the
+    # probe side of the cell equi-join must broadcast — no cartesian
+    # product and no shuffle join anywhere
     from informers_spark.queries import q_knn_ivf
 
     plan = _plan(q_knn_ivf(spark, SF))
+    assert "BroadcastNestedLoopJoin" in plan  # the 1-row centroid attach
+    assert "BroadcastHashJoin" in plan  # the cell equi-join
     assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan
-    # exactly the joins we expect: cell equi-join (broadcast); no
-    # shuffle join anywhere in candidate generation
-    assert "SortMergeJoin" not in plan.split("BroadcastHashJoin")[0]
+    assert "SortMergeJoin" not in plan
 
 
 def test_salt_buckets_knob_reaches_repartition_expression(spark):

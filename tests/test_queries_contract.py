@@ -16,6 +16,7 @@ FAST_QUERIES = [
     "q_lang_id",
     "q_kw_mentions",
     "q_knn_bruteforce",
+    "q_knn_ivf",
     "q_lsh_buckets",
     "q_classify_docs",
 ]
