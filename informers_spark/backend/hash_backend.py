@@ -204,12 +204,12 @@ class HashBackend:
             tag_cache.clear()
         label_idx = {l: i for i, l in enumerate(_NER_LABELS)}
         if self.wordpiece is None:
-            # fast path for the word-level tokenizer (the KG flagship's
-            # configuration): label ints computed directly per token —
-            # no per-token tuple/f-string construction — then ONE fancy-
-            # index logits fill. Output-identical to the general path
-            # below (equality-measured; ~25% off the dominant Python cost
-            # of the mentions stage at corpus scale).
+            # word-level tokenizer (the KG flagship's configuration): one
+            # piece per word, label ints computed directly per token — no
+            # per-token tuple/f-string construction — then ONE fancy-
+            # index logits fill (~25% off the dominant Python cost of the
+            # mentions stage at corpus scale). The loop below is the
+            # wordpiece path.
             tag_ids = {
                 t: (label_idx[f"B-{t}"], label_idx[f"I-{t}"])
                 for t in ("PER", "ORG", "LOC", "MISC")
@@ -247,15 +247,12 @@ class HashBackend:
                     tag = tag_cache[word]
                 except KeyError:
                     tag = tag_cache[word] = self._word_tag(word)
-                if self.wordpiece is not None:
-                    pieces = self.wordpiece._split_word(word)
-                    pieces = (
-                        [(p, s + rs, s + re_) for p, rs, re_ in pieces]
-                        if pieces
-                        else [(self.wordpiece.unk_token, s, e)]
-                    )
-                else:
-                    pieces = [(word, s, e)]
+                pieces = self.wordpiece._split_word(word)
+                pieces = (
+                    [(p, s + rs, s + re_) for p, rs, re_ in pieces]
+                    if pieces
+                    else [(self.wordpiece.unk_token, s, e)]
+                )
                 if tag is None:
                     rows.extend((p, ps, pe, "O") for p, ps, pe in pieces)
                     prev_entity = False

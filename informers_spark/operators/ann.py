@@ -22,7 +22,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from informers_spark.functions.similarity import cosine
-from informers_spark.operators.dedup import drop_oversized_buckets, spread_scan
+from informers_spark.operators.dedup import drop_oversized_buckets
+from informers_spark.rebalance import spread_scan
 
 
 def _expr_matrix(rows) -> Column:

@@ -8,7 +8,7 @@ uniform — safe at 100 TB with the bucket-size skew guard).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from informers_spark.functions.similarity import (
@@ -21,10 +21,7 @@ from informers_spark.functions.similarity import (
     simhash,
 )
 from informers_spark.functions.text import fingerprint
-from informers_spark.rebalance import (  # noqa: F401  (re-export)
-    _is_narrow_scan,
-    spread_scan,
-)
+from informers_spark.rebalance import spread_scan
 
 
 def drop_oversized_buckets(
@@ -165,21 +162,18 @@ def simhash_neardup(
     """SimHash near-duplicate pairs via banded pigeonhole blocking:
     split the fingerprint into `bands` bit-slices; two hashes within
     hamming distance < bands must agree on at least one slice, so the
-    candidate join is an equi-join on (band, slice) — never all-pairs.
-    Verified with the exact popcount(xor) distance ≤ max_hamming.
-    → (a, b, hamming). Same two-phase bucket guard as the other blocked
-    dedups — a groupBy count per (band, key) cell, then a broadcast join
-    against the over-limit keys — inlined per regime in
-    simhash_pairs_from_hashes.
+    candidate set is the pairs sharing a (band, slice) cell — never
+    all-pairs. Verified with the exact popcount(xor) distance ≤
+    max_hamming. → (a, b, hamming). Same bucket guard as the other
+    blocked dedups: cells over max_bucket ids are dropped (see
+    simhash_pairs_from_hashes for the plan).
 
     Recall contract: EXACT for max_hamming <= bands - 1 (pigeonhole);
     for larger thresholds candidates are only block-collision pairs
     (LSH-style partial recall) — raise `bands` to max_hamming + 1 for
     guaranteed recall at a wider radius. Default keeps the two
     consistent (3 = bands - 1)."""
-    base = spread_scan(df).select(
-        F.col(id_col).alias("id"), simhash(F.col(text_col), bits).alias("sh")
-    )
+    base = simhash_table(df, text_col, id_col, bits).withColumnRenamed("simhash", "sh")
     return simhash_pairs_from_hashes(
         base, max_hamming=max_hamming, bits=bits, bands=bands, max_bucket=max_bucket
     )
@@ -212,46 +206,67 @@ def _combinatorial_keep_masks(bits: int, d: int) -> list[int]:
     return keeps
 
 
-def _simhash_pairs_clustered(
-    base: DataFrame, d: int, bits: int, bands: int, width: int, max_bucket: int
+def simhash_pairs_from_hashes(
+    base: DataFrame,
+    max_hamming: int = 3,
+    bits: int = 31,
+    bands: int = 4,
+    max_bucket: int = 10_000,
 ) -> DataFrame:
-    """Exact banded-semantics pair enumeration that DECIDES on distinct
-    hashes and MOVES ids once (guide §8's decide-small/move-once shape,
-    valid whenever max_hamming <= bands-1, capped or not).
+    """SimHash pair enumeration over an (id, sh) table — simhash_neardup
+    minus the fingerprint computation, so tests can drive exact hash
+    values (bucket capping is unreachable at fixture scale through real
+    texts). → (a, b, hamming) with a < b.
 
-    Why: the banded self-join's candidate volume is ~N²/2^(bits/bands)
-    — measured 1.39e9 candidate rows at sf1.0 (50k docs, 8-bit band
-    keys) for an output of ~5e6 pairs. Three structural fixes:
+    Output contract (the DuckDB oracle's banding): DISTINCT pairs that
+    share a (band, key) cell left by the bucket cap — `bands` slices of
+    ceil(bits/bands) bits, cells over max_bucket ids dropped — with
+    popcount(xor) <= max_hamming. One plan, exact for every max_hamming,
+    capped or not: the combinatorial keys find EVERY distinct-hash pair
+    within d = max_hamming (nb > d blocks, so the <= d blocks where a
+    pair differs lie inside one dropped d-combination), and the
+    retained-band filter then keeps exactly those sharing a surviving
+    cell. For d <= bands-1 every such pair shares a band (pigeonhole);
+    above that the band collision is what defines the output.
+
+    The plan DECIDES on distinct hashes and MOVES ids once (decide
+    small, move once). A banded id self-join's candidate
+    volume is ~N²/2^(bits/bands) — measured 1.39e9 candidate rows at
+    sf1.0 (50k docs, 8-bit band keys) for ~5e6 output pairs. Instead:
 
     1. All pair decisions run over DISTINCT hashes (measured 13,156 vs
        50,000 ids at sf1.0; bounded by 2^bits forever), so identical-
        hash clusters cost one row, not C(m,2) candidate rows.
     2. Candidate keys are combinatorial-pigeonhole masks (8 blocks,
-       C(8,d) combos, each key keeping ~bits-4d bits) instead of
-       bits/bands-wide band slices: random collisions drop from
-       N²/2^8 to N²/2^23 (measured 1.53e6 candidate hash-pairs — 900x
-       fewer), while recall stays exact for hamming <= d by the same
-       pigeonhole argument.
-    3. The bucket-cap semantics (DISTINCT pairs over SURVIVING (band,
-       key) cells — the DuckDB-oracle contract) are reproduced by a
-       retained-band bitmask per hash: cell sizes aggregate per
-       DISTINCT hash weighted by cluster count, and a candidate pair
-       survives iff some band both MATCHES (slice equality — bit math
-       on the two hashes in hand) and SURVIVED (its bit in the mask;
-       matching band => same cell => either side's mask works).
+       C(8,d) combos, each key keeping ~bits-4d bits) instead of band
+       slices: random collisions drop from N²/2^8 to N²/2^23 (measured
+       1.53e6 candidate hash-pairs — 900x fewer).
+    3. The bucket cap is a retained-band bitmask per hash: cell sizes
+       aggregate per DISTINCT hash weighted by cluster count, and a
+       candidate pair survives iff some band both MATCHES (slice
+       equality on the two hashes in hand) and SURVIVED (its bit in the
+       mask; matching band => same cell => either side's mask works).
 
     id expansion is two hash-keyed equi-joins (cross pairs of two
     clusters) plus a same-hash self-join (within-cluster pairs,
     hamming 0) — output-sized work, exactly-once per pair, no
     distinct over id pairs."""
+    # materialize the (id, sh) fold ONCE: the cluster count, both id
+    # re-attach joins and the same-hash self-join all consume it —
+    # without this the fingerprint computation re-runs per branch
+    # (measured 7.4s -> 0.6s for the guarded blocks at sf0.1). Two tiny
+    # columns; at cluster scale this is a warehouse-checkpoint stage.
+    base = base.localCheckpoint()
+    width = (bits + bands - 1) // bands
+
+    def band_slice(c, i):
+        return F.shiftright(c, i * width).bitwiseAND(F.lit((1 << width) - 1))
+
     clusters = base.groupBy("sh").agg(F.count("*").alias("cnt"))
     band_keys = F.array(
         *[
             F.struct(
-                F.lit(i).cast("int").alias("band"),
-                F.shiftright(F.col("sh"), i * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("key"),
+                F.lit(i).cast("int").alias("band"), band_slice(F.col("sh"), i).alias("key")
             )
             for i in range(bands)
         ]
@@ -267,9 +282,8 @@ def _simhash_pairs_clustered(
     )
     # retained-band bitmask per hash, computed unconditionally: in the
     # common uncapped case `over` is empty and rb = all bands set, so
-    # the survival filters below are vacuously true — ONE plan for both
-    # regimes, and no driver-side cap probe job (the r6 first cut spent
-    # a limit(1).count() round-trip deciding which branch to build).
+    # the survival filters below are vacuously true — one plan whether
+    # or not a cell is capped, and no driver-side cap probe job.
     shs = (
         cells.join(F.broadcast(over).withColumn("_c", F.lit(1)), ["band", "key"], "left")
         .groupBy("sh")
@@ -284,7 +298,7 @@ def _simhash_pairs_clustered(
     # consumed by both candidate-join sides and the same-hash survival set
     shs = shs.localCheckpoint()
 
-    keeps = _combinatorial_keep_masks(bits, d)
+    keeps = _combinatorial_keep_masks(bits, max_hamming)
     keys = F.array(
         *[
             F.struct(
@@ -305,27 +319,22 @@ def _simhash_pairs_clustered(
             F.col("x.sh").alias("sha"), F.col("y.sh").alias("shb"), F.col("x.rb").alias("rba")
         )
         .withColumn("hamming", hamming_distance(F.col("sha"), F.col("shb"), bits))
-        .filter(F.col("hamming") <= d)
+        .filter(F.col("hamming") <= max_hamming)
     )
-    mask = F.lit((1 << width) - 1)
     surv = F.lit(False)
     for i in range(bands):
-        eq_i = (
-            F.shiftright(F.col("sha"), i * width).bitwiseAND(mask)
-            == F.shiftright(F.col("shb"), i * width).bitwiseAND(mask)
-        )
+        eq_i = band_slice(F.col("sha"), i) == band_slice(F.col("shb"), i)
         surv = surv | (eq_i & (F.col("rba").bitwiseAND(F.lit(1 << i)) != F.lit(0)))
     sh_pairs = sh_pairs.filter(surv).select("sha", "shb", "hamming").distinct()
 
-    ids = base
     diff = (
-        sh_pairs.join(ids.select(F.col("id").alias("xi"), F.col("sh").alias("sha")), "sha")
-        .join(ids.select(F.col("id").alias("yi"), F.col("sh").alias("shb")), "shb")
+        sh_pairs.join(base.select(F.col("id").alias("xi"), F.col("sh").alias("sha")), "sha")
+        .join(base.select(F.col("id").alias("yi"), F.col("sh").alias("shb")), "shb")
         .select(
             F.least("xi", "yi").alias("a"), F.greatest("xi", "yi").alias("b"), "hamming"
         )
     )
-    sx, sy = ids.alias("sx"), ids.alias("sy")
+    sx, sy = base.alias("sx"), base.alias("sy")
     same = (
         sx.join(sy, "sh")
         .filter(F.col("sx.id") < F.col("sy.id"))
@@ -335,120 +344,6 @@ def _simhash_pairs_clustered(
         F.col("sx.id").alias("a"), F.col("sy.id").alias("b"), F.lit(0).cast("int").alias("hamming")
     )
     return same.unionAll(diff)
-
-
-def simhash_pairs_from_hashes(
-    base: DataFrame,
-    max_hamming: int = 3,
-    bits: int = 31,
-    bands: int = 4,
-    max_bucket: int = 10_000,
-) -> DataFrame:
-    """Pair enumeration over an (id, sh) table — simhash_neardup minus the
-    fingerprint computation, factored out so tests can drive exact hash
-    values (the bucket-cap/first-band interaction below is unreachable at
-    fixture scale through real texts)."""
-    # materialize the (id, sh) fold ONCE: the two-phase guard's count
-    # branch, its anti-join side, and both self-join sides all consume it
-    # — without this the fingerprint computation re-runs per branch
-    # (measured 7.4s -> 0.6s for the guarded blocks at sf0.1). Two tiny
-    # columns; at cluster scale this is a warehouse-checkpoint stage.
-    base = base.localCheckpoint()
-    width = (bits + bands - 1) // bands
-    if max_hamming <= bands - 1:
-        # exact-recall regime: the banded candidate set (pairs sharing a
-        # SURVIVING band cell, hamming-verified) is reproduced exactly by
-        # the cluster-level plan — see _simhash_pairs_clustered. Only the
-        # partial-recall regime (max_hamming > bands-1, where the result
-        # is DEFINED as band-collision pairs) still needs the banded
-        # self-join below.
-        return _simhash_pairs_clustered(base, max_hamming, bits, bands, width, max_bucket)
-    keys = F.array(
-        *[
-            F.struct(
-                F.lit(i).cast("int").alias("band"),
-                F.shiftright(F.col("sh"), i * width)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("key"),
-            )
-            for i in range(bands)
-        ]
-    )
-    blocks = base.select("id", "sh", F.explode(keys).alias("bk")).select(
-        "id", "sh", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    # two-phase skew guard (see drop_oversized_buckets), with a bounded
-    # driver-side probe on the over-limit key set: limit(1).count() on a
-    # map-side-aggregated groupBy (the canon.py class of documented
-    # probes). In the COMMON case no cell is capped and the retained-band
-    # bitmask below is a constant — skipping its id-keyed window shuffle
-    # (measured ~2s of the 4.4s query at sf0.1).
-    over = (
-        blocks.groupBy("band", "key")
-        .agg(F.count("*").alias("_bn"))
-        .filter(F.col("_bn") > max_bucket)
-        .select("band", "key")
-    )
-    if over.limit(1).count() == 0:
-        # nothing capped: every band retained for every id
-        blocks = blocks.withColumn("rb", F.lit(-1).cast("long")).localCheckpoint()
-    else:
-        # retained-band bitmask per id: bit i set iff this id's band-i
-        # block SURVIVED the bucket cap. Needed by the first-matching-band
-        # filter below — without it, a pair whose earliest matching band
-        # was capped would be rejected in every surviving band too and
-        # silently lost (the guard's own skew scenario). One id-keyed
-        # window shuffle (high-cardinality uniform key); checkpointed
-        # since the blocks feed BOTH self-join sides.
-        blocks = (
-            blocks.join(F.broadcast(over), ["band", "key"], "left_anti")
-            .withColumn(
-                "rb", F.sum(F.expr("shiftleft(1L, band)")).over(Window.partitionBy("id"))
-            )
-            .localCheckpoint()
-        )
-    # Salted self-join: a dense cluster puts its whole C(n,2) pair
-    # enumeration in ONE (band, key) task; salting the left side by id
-    # and replicating the right across the salt space spreads the same
-    # exact pair set over n_salt tasks (pair (a,b) is produced exactly
-    # once, under a's salt). Corpora with heavy template reuse hit this
-    # hard — measured 23s -> ~3s for the candidate join at sf0.1.
-    n_salt = 16
-    a = blocks.withColumn("_s", F.pmod(F.xxhash64("id"), F.lit(n_salt)))
-    b = blocks.withColumn(
-        "_s", F.explode(F.array(*[F.lit(i).cast("long") for i in range(n_salt)]))
-    )
-    # first-matching-band dedup: a pair that collides in k surviving bands
-    # would be enumerated k times; instead of a distinct() (a full shuffle
-    # of the pair set), emit the pair ONLY in its smallest SURVIVING
-    # matching band. Both fingerprints are in hand post-join, so slice
-    # equality is bit arithmetic; survival of an earlier band i is bit i
-    # of the retained-band mask (when the slices match, both ids sit in
-    # the SAME (i, key) cell, so checking one side's mask suffices).
-    # Exactly-once per pair, no shuffle.
-    def slice_eq(col_a, col_b, i):
-        mask = F.lit((1 << width) - 1)
-        return (
-            F.shiftright(col_a, i * width).bitwiseAND(mask)
-            == F.shiftright(col_b, i * width).bitwiseAND(mask)
-        )
-
-    no_earlier = F.lit(True)
-    for i in range(bands - 1):
-        earlier_match = slice_eq(F.col("a.sh"), F.col("b.sh"), i) & (
-            F.col("a.rb").bitwiseAND(F.lit(1 << i)) != F.lit(0)
-        )
-        no_earlier = no_earlier & ((F.col("band") <= F.lit(i)) | ~earlier_match)
-    return (
-        a.alias("a").join(b.alias("b"), ["band", "key", "_s"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .filter(no_earlier)
-        .select(
-            F.col("a.id").alias("a"), F.col("b.id").alias("b"),
-            hamming_distance(F.col("a.sh"), F.col("b.sh"), bits).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 def fingerprint_table(
@@ -508,9 +403,10 @@ def dedup_corpus(
     operator: simhash_neardup pairs → connected components over the pair
     graph → keep exactly one representative (the min id) per duplicate
     cluster, drop the rest. → the deduplicated corpus (all original
-    columns). Every stage is the already-skew-guarded operator: banded
-    blocking, salted self-join, size-tiered components; the final drop
-    is a left_anti join on ids only (the corpus content never reshuffles)."""
+    columns). Every stage is the already-skew-guarded operator: capped
+    banded blocking decided on distinct hashes, size-tiered components;
+    the final drop is a left_anti join on ids only (the corpus content
+    never reshuffles)."""
     from informers_spark.operators.canon import connected_components
 
     pairs = simhash_neardup(

@@ -189,7 +189,7 @@ def test_link_candidates_guard_drops_hot_cells(spark):
 def _ref_simhash_pairs(hashes, max_hamming, bands=4, bits=31, max_bucket=10_000):
     """Driver-side reference: DISTINCT pairs over SURVIVING (band, key)
     cells, exact hamming verify — the DuckDB-oracle semantics the Spark
-    first-matching-band plan must reproduce under bucket capping."""
+    clustered plan must reproduce under bucket capping."""
     from collections import defaultdict
 
     width = (bits + bands - 1) // bands
@@ -214,9 +214,9 @@ def _ref_simhash_pairs(hashes, max_hamming, bands=4, bits=31, max_bucket=10_000)
 
 def test_simhash_pair_survives_when_first_matching_band_is_capped(spark):
     """A pair whose EARLIEST matching band sits in a bucket-capped cell
-    must still be emitted via a later surviving band (regression: the
-    first-matching-band filter used to test raw fingerprint slices and
-    rejected such pairs in every surviving band too)."""
+    must still be emitted via a later surviving band: the survival
+    filter has to accept ANY band that both matches and survived, not
+    just the first matching one."""
     from informers_spark.operators.dedup import simhash_pairs_from_hashes
 
     # bands=4, width=8: band-i slice = (sh >> 8i) & 0xFF
@@ -238,7 +238,10 @@ def test_simhash_pair_survives_when_first_matching_band_is_capped(spark):
 
 def test_simhash_pairs_match_distinct_reference_under_capping(spark):
     """Exactly-once pair emission == DISTINCT-over-surviving-bands for
-    pseudo-random hashes with an aggressive cap (many cells capped)."""
+    pseudo-random hashes at max_hamming > bands-1, where band collision
+    defines the output. No cell of these 400 hashes reaches the cap of
+    20 and every pair within hamming 6 shares a band, so the survival
+    filter is exercised by the two tests below, not here."""
     from informers_spark.operators.dedup import simhash_pairs_from_hashes
 
     hashes = {i: (i * 2654435761) % (1 << 31) | (i % 16) for i in range(400)}
@@ -250,12 +253,49 @@ def test_simhash_pairs_match_distinct_reference_under_capping(spark):
     assert got == _ref_simhash_pairs(hashes, max_hamming=6, max_bucket=20)
 
 
+def test_simhash_pair_dropped_when_every_shared_band_is_capped(spark):
+    """Within the pigeonhole radius a pair can still fall out: if every
+    band it shares sits in a capped cell, no surviving cell holds it."""
+    from informers_spark.operators.dedup import simhash_pairs_from_hashes
+
+    x = 0x11 | (0x22 << 8) | (0x33 << 16) | (0x44 << 24)
+    y = x ^ (1 << 16) ^ (1 << 24)  # shares only bands 0-1, both capped
+    z = x ^ (1 << 16) ^ (1 << 17)  # also shares band 3, which survives
+    hashes = {0: x, 1: y, 2: z}
+    # 150 fillers cap x's band-0 (0x11) and band-1 (0x22) cells at
+    # max_bucket=100; their band-2/3 slices stay in small cells
+    for i in range(150):
+        hashes[10 + i] = 0x11 | (0x22 << 8) | ((i * 131 % 251) << 16) | ((i % 97) << 24)
+    df = spark.createDataFrame(list(hashes.items()), "id long, sh long")
+    got = {
+        (r.a, r.b, r.hamming)
+        for r in simhash_pairs_from_hashes(df, max_hamming=2, max_bucket=100).collect()
+    }
+    assert (0, 2, 2) in got
+    assert not {(0, 1, 2), (1, 2, 2)} & got
+    assert got == _ref_simhash_pairs(hashes, max_hamming=2, max_bucket=100)
+
+
+def test_simhash_pairs_beyond_pigeonhole_radius_need_a_shared_band(spark):
+    """max_hamming >= bands: a pair within the radius that shares no
+    band slice is not a candidate; one that shares a slice is found."""
+    from informers_spark.operators.dedup import simhash_pairs_from_hashes
+
+    x = 0x11 | (0x22 << 8) | (0x33 << 16) | (0x44 << 24)
+    y = x ^ 1 ^ (1 << 8) ^ (1 << 16) ^ (1 << 24)  # one bit in every band
+    w = x ^ 0xF  # four bits, all in band 0
+    hashes = {0: x, 1: y, 2: w}
+    df = spark.createDataFrame(list(hashes.items()), "id long, sh long")
+    got = {(r.a, r.b, r.hamming) for r in simhash_pairs_from_hashes(df, max_hamming=4).collect()}
+    assert got == {(0, 2, 4)}
+    assert got == _ref_simhash_pairs(hashes, max_hamming=4)
+
+
 def test_simhash_pairs_exact_fastpath_matches_bruteforce(spark):
-    """The r6 combinatorial fast path (taken when nothing is capped and
-    max_hamming <= bands-1) must produce exactly the brute-force
-    hamming<=d pair set — including duplicate-hash clusters (pairs at
-    hamming 0) that collide in EVERY combo and are collapsed by the
-    output distinct."""
+    """Uncapped with max_hamming <= bands-1, the combinatorial-key plan
+    must produce exactly the brute-force hamming<=d pair set — including
+    duplicate-hash clusters (pairs at hamming 0), which are decided once
+    per distinct hash and expanded by the same-hash self-join."""
     from informers_spark.operators.dedup import simhash_pairs_from_hashes
 
     hashes = {i: (i * 2654435761) % (1 << 31) for i in range(150)}
@@ -277,7 +317,7 @@ def test_simhash_pairs_exact_fastpath_matches_bruteforce(spark):
         if x < y and bin(hx ^ hy).count("1") <= 2
     }
     assert got == want
-    # and the uncapped fast path agrees with the banded reference semantics
+    # and agrees with the banded reference semantics
     assert got == _ref_simhash_pairs(hashes, max_hamming=2, max_bucket=10_000)
 
 

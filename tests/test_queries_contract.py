@@ -19,6 +19,8 @@ FAST_QUERIES = [
     "q_knn_ivf",
     "q_lsh_buckets",
     "q_classify_docs",
+    "q_simhash_neardup",
+    "q_dedup_corpus",
 ]
 
 
