@@ -6,7 +6,7 @@ interface so the same pipeline code runs on:
 
 - OnnxBackend: onnxruntime + HF tokenizers (exact parity with the
   reference, which runs ONNX via FFI — reference: lib/informers/models.rb:653-663).
-  Requires the onnxruntime wheel + a staged model dir; import-guarded.
+  Requires the onnxruntime wheel + a staged model dir.
 - HashBackend: deterministic seeded-hash embeddings + rule-based tagger,
   for offline/sandbox runs and frozen-fixture tests.
 
@@ -17,6 +17,7 @@ Backends are constructed lazily per Python worker process
 
 from __future__ import annotations
 
+import os
 from typing import Protocol
 
 import numpy as np
@@ -65,27 +66,26 @@ class InferenceBackend(Protocol):
 def get_backend(name: str = "auto", **kwargs) -> InferenceBackend:
     """Executor-singleton backend factory.
 
-    'auto' prefers onnx when the wheel + model dir are available, else the
-    deterministic hash backend. Keyed cache so one process holds exactly
-    one instance per (name, config) — on a 1000-executor cluster this is
-    one model load per python worker, amortized over all Arrow batches.
+    'auto' resolves BEFORE construction: 'onnx' when a model dir is
+    configured (the model_dir option or $INFORMERS_SPARK_MODEL_DIR), else
+    the deterministic 'hash' backend. A configured ONNX backend that
+    fails to load raises — it never degrades to hash outputs silently.
+    Keyed cache so one process holds exactly one instance per (name,
+    config) — on a 1000-executor cluster this is one model load per
+    python worker, amortized over all Arrow batches.
     """
+    if name == "auto":
+        configured = kwargs.get("model_dir") or os.environ.get("INFORMERS_SPARK_MODEL_DIR")
+        name = "onnx" if configured else "hash"
     key = (name, tuple(sorted(kwargs.items())))
     if key in _SINGLETONS:
         return _SINGLETONS[key]
 
     backend: InferenceBackend
-    if name in ("auto", "onnx"):
-        try:
-            from informers_spark.backend.onnx_backend import OnnxBackend
+    if name == "onnx":
+        from informers_spark.backend.onnx_backend import OnnxBackend
 
-            backend = OnnxBackend(**kwargs)
-        except Exception:
-            if name == "onnx":
-                raise
-            from informers_spark.backend.hash_backend import HashBackend
-
-            backend = HashBackend(**kwargs)
+        backend = OnnxBackend(**kwargs)
     elif name == "hash":
         from informers_spark.backend.hash_backend import HashBackend
 

@@ -1,6 +1,7 @@
 """ONNX Runtime backend — exact-parity path (requires onnxruntime +
-tokenizers wheels and a staged model directory; absent in this sandbox,
-so the module import-guards and the hash backend takes over).
+tokenizers wheels and a staged model directory). get_backend("auto")
+picks it only when a model dir is configured; without one, "auto" is the
+hash backend.
 
 Mirrors the reference's execution model, re-expressed for executors:
 - session construction with dtype-suffixed model files

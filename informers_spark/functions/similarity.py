@@ -58,8 +58,9 @@ def shingle_fingerprints(col: Column, n: int = 3, portable: bool = True) -> Colu
 
 
 def _shingle_fps_portable(col: Column, n: int) -> Column:
-    """Bit-identical to transform(word_shingles(col, n), _fp_str), computed
-    without materializing shingle strings or re-folding shared characters.
+    """Bit-identical to transform(word_shingles(col, n), text.fingerprint),
+    computed without materializing shingle strings or re-folding shared
+    characters.
 
     The rolling hash is a left fold (acc*31 + ascii(c)) % M, so
     fp(a || b) = (fp(a) * 31^len(b) + fp(b)) mod M: each token's
@@ -111,14 +112,6 @@ def _shingle_fps_portable(col: Column, n: int) -> Column:
     return F.get(F.transform(F.array(tf), body), 0)
 
 
-def _fp_str(s: Column) -> Column:
-    chars = F.filter(F.split(s, ""), lambda c: c != "")
-    return F.aggregate(
-        chars, F.lit(0).cast("long"),
-        lambda acc, c: (acc * 31 + F.ascii(c)) % F.lit(FP_MOD),
-    )
-
-
 def minhash_signature(fps: Column, k: int = 16, seed: int = 7) -> Column:
     """MinHash signature (array<long> of k mins) over an array of shingle
     fingerprints. Empty input → array of FP_MOD sentinels."""
@@ -162,7 +155,7 @@ def simhash(col: Column, bits: int = 31) -> Column:
     made Catalyst re-evaluate the token-fingerprint transform once PER
     BIT — 31 hashing passes over every document (measured: the fold was
     ~4 s of the sf0.1 near-dup query on its own)."""
-    fps = F.transform(tokens(col), lambda t: _fp_str(t))
+    fps = F.transform(tokens(col), fingerprint)
     zeros = F.array(*[F.lit(0).cast("long") for _ in range(bits)])
 
     def bit_votes(x: Column) -> Column:

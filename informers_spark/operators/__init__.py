@@ -1,4 +1,4 @@
-from informers_spark.operators.extract import extract_structural_triples, extract_mention_triples  # noqa: F401
+from informers_spark.operators.extract import extract_structural_triples  # noqa: F401
 from informers_spark.operators.link import link_entities  # noqa: F401
 from informers_spark.operators.canon import connected_components  # noqa: F401
 from informers_spark.operators.graph import (  # noqa: F401

@@ -76,8 +76,7 @@ def mention_triples_from_mentions(
 ) -> DataFrame:
     """Typed-group filter + (subj, pred, obj, score, src_sha256)
     projection over an existing mentions table — the ONE definition of
-    which entity groups enter the graph (build_kg and
-    extract_mention_triples both call it; keep them from drifting)."""
+    which entity groups enter the graph."""
     return mentions.filter(F.col("entity_group").isin(*groups)).select(
         F.col("repo").alias("subj"),
         F.lit("mentions").alias("pred"),
@@ -85,21 +84,6 @@ def mention_triples_from_mentions(
         F.col("score"),
         F.col("content_sha256").alias("src_sha256"),
     )
-
-
-def extract_mention_triples(
-    files: DataFrame,
-    backend: str = "auto",
-    groups: tuple[str, ...] = ("PER", "ORG", "LOC"),
-) -> DataFrame:
-    """(repo, mentions, entity_word) from NER over content, keeping typed
-    entity groups only; score is the BIO-group mean score."""
-    mentions = ner(
-        files.select("repo", "content_sha256", F.col("content").alias("text")),
-        text_col="text",
-        backend=backend,
-    )
-    return mention_triples_from_mentions(mentions, groups)
 
 
 def mentions_table(files: DataFrame, backend: str = "auto") -> DataFrame:

@@ -22,22 +22,20 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from informers_spark.functions.similarity import cosine, minhash_signature
+from informers_spark.functions.text import fingerprint
 from informers_spark.operators.dedup import band_pairs, minhash_blocks
 from informers_spark.pipelines.embed import embed
 
 
 def _char_shingle_fps(col, n: int = 3):
-    """Portable fingerprints of character n-grams of lower(col) —
-    hashed with the SHARED rolling-hash helper (similarity._fp_str), so
-    one definition of the portable fingerprint exists repo-wide (the
-    previous inline fold also folded split()'s trailing empty string,
-    silently diverging from the shared values)."""
-    from informers_spark.functions.similarity import _fp_str
-
+    """Portable fingerprints of character n-grams of lower(col) — hashed
+    with the one rolling hash, text.fingerprint (the previous inline fold
+    also folded split()'s trailing empty string, silently diverging from
+    the shared values)."""
     s = F.lower(col)
     cnt = F.greatest(F.length(s) - (n - 1), F.lit(1))
     grams = F.transform(F.sequence(F.lit(1), cnt), lambda i: F.substring(s, i, n))
-    return F.array_distinct(F.transform(grams, _fp_str))
+    return F.array_distinct(F.transform(grams, fingerprint))
 
 
 def candidate_pairs(

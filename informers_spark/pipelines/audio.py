@@ -11,23 +11,20 @@ Feature extraction parity: Wav2Vec2FeatureExtractor's zero-mean
 unit-variance normalize (processors.rb:749-772) runs per clip before the
 forward, exactly when do_normalize is set.
 
-Spark shape: one mapInPandas per pipeline, batched forwards, slim typed
-outputs; no exchange before the UDF.
+Each pipeline is one batched forward per Arrow batch with slim typed
+outputs (the payload column is dropped).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from informers_spark.functions.kernels import get_top_items, softmax
-from informers_spark.rebalance import spread_scan
 from informers_spark.functions.vision import zero_mean_unit_var
-from informers_spark.pipelines.vision import _base_tuples
+from informers_spark.pipelines.batch import explode, map_batches, texts
+from informers_spark.pipelines.vision import RANKED_LABEL_FIELDS
 
 
 def _pcm(payload: bytes) -> np.ndarray:
@@ -51,42 +48,30 @@ def audio_classify(
     """Per-clip forward -> softmax -> top-k (label, score, rank) rows
     (reference pipelines.rb:895-928; top_k=nil means all labels, the
     get_top_items(nil) behavior)."""
-    opts = backend_opts or {}
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema = T.StructType(
-        keep
-        + [
-            T.StructField("label", T.StringType()),
-            T.StructField("score", T.FloatType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
-    )
-    keep_names = [f.name for f in keep]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+    def make(be):
+        def step(pdf):
             waves = [_pcm(p) for p in pdf[payload_col]]
             if do_normalize:
                 waves = [zero_mean_unit_var(w) for w in waves]
             logits, id2label = be.audio_forward(waves, labels)
             probs = softmax(logits, axis=-1)
-            rows = []
-            bases = _base_tuples(pdf, keep_names)
-            for i in range(len(pdf)):
-                base = bases[i]
-                items = get_top_items(probs[i], top_k or 0)
-                rows.extend(
-                    base + (id2label[idx], float(s), r + 1)
-                    for r, (idx, s) in enumerate(items)
-                )
-            yield pd.DataFrame(rows, columns=keep_names + ["label", "score", "rank"])
+            return explode(
+                [
+                    [
+                        (id2label[idx], s, r + 1)
+                        for r, (idx, s) in enumerate(get_top_items(p, top_k or 0))
+                    ]
+                    for p in probs
+                ],
+                3,
+            )
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(
+        df, RANKED_LABEL_FIELDS, make, backend, backend_opts, drop=[payload_col]
+    )
 
 
 def zero_shot_audio_classify(
@@ -100,36 +85,22 @@ def zero_shot_audio_classify(
     """CLAP-style: template-filled labels x audio -> logits_per_audio ->
     softmax -> one row per (clip, label) in candidate order (reference
     pipelines.rb:930-971 keeps label order, no sort)."""
-    opts = backend_opts or {}
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema = T.StructType(
-        keep
-        + [T.StructField("label", T.StringType()), T.StructField("score", T.FloatType())]
-    )
-    keep_names = [f.name for f in keep]
     # Ruby String#sub replaces only the FIRST "{}" (pipelines.rb:951)
-    texts = [hypothesis_template.replace("{}", x, 1) for x in candidate_labels]
+    hyps = [hypothesis_template.replace("{}", x, 1) for x in candidate_labels]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+    def make(be):
+        def step(pdf):
             waves = [_pcm(p) for p in pdf[payload_col]]
-            probs = softmax(be.clap_scores(waves, texts), axis=-1)
-            rows = []
-            bases = _base_tuples(pdf, keep_names)
-            for i in range(len(pdf)):
-                base = bases[i]
-                rows.extend(
-                    base + (candidate_labels[j], float(probs[i, j]))
-                    for j in range(len(candidate_labels))
-                )
-            yield pd.DataFrame(rows, columns=keep_names + ["label", "score"])
+            probs = softmax(be.clap_scores(waves, hyps), axis=-1)
+            return explode(
+                [list(zip(candidate_labels, p)) for p in probs], 2
+            )
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(
+        df, RANKED_LABEL_FIELDS[:2], make, backend, backend_opts, drop=[payload_col]
+    )
 
 
 def text_to_audio(
@@ -142,29 +113,21 @@ def text_to_audio(
     """Text -> waveform (TextToAudio waveform branch, reference
     pipelines.rb:801-819 returns {audio, sampling_rate}). Output: f32le
     PCM payload + sampling_rate + n_samples."""
-    opts = backend_opts or {}
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("audio", T.BinaryType()),
-            T.StructField("sampling_rate", T.IntegerType()),
-            T.StructField("n_samples", T.IntegerType()),
-        ]
-    )
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
+    def make(be):
+        def step(pdf):
+            waves, sr = be.text_to_waveform(texts(pdf, text_col), sampling_rate)
+            return None, [
+                [bytearray(w.tobytes()) for w in waves],
+                [sr] * len(waves),
+                [len(w) for w in waves],
+            ]
 
-        be = get_backend(backend, **opts)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            texts = pdf[text_col].fillna("").astype(str).tolist()
-            waves, sr = be.text_to_waveform(texts, sampling_rate)
-            out = pdf.copy()
-            out["audio"] = [bytearray(w.tobytes()) for w in waves]
-            out["sampling_rate"] = np.int32(sr)
-            out["n_samples"] = [len(w) for w in waves]
-            yield out
+        return step
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+    fields = [
+        T.StructField("audio", T.BinaryType()),
+        T.StructField("sampling_rate", T.IntegerType()),
+        T.StructField("n_samples", T.IntegerType()),
+    ]
+    return map_batches(df, fields, make, backend, backend_opts)

@@ -7,22 +7,20 @@ zero-shot-classification (lib/informers/pipelines.rb:420-497): NLI trick —
 score each (text, filled hypothesis template) pair, then either
   multi_label (or 1 label): per-pair softmax of [contradiction, entailment]
   else: softmax of entailment logits ACROSS the label set for each text.
-Spark design: broadcast crossJoin text × labels → pair-scoring UDF →
-the cross-label softmax runs JVM-side as window expressions
+Spark design: broadcast crossJoin text × labels → pair-scoring batch
+step → the cross-label softmax runs JVM-side as window expressions
 (exp(x - max) / sum), so only the model forward is in Python.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from informers_spark.functions.kernels import sigmoid, softmax
+from informers_spark.pipelines.batch import map_batches, texts
 from informers_spark.rebalance import spread_scan
 
 
@@ -39,47 +37,33 @@ def classify(
     (pipelines.rb:77-86). top_k > 1 (or 0 = all labels): explode into one
     row per (input row, rank), adding a rank column — the relational form
     of get_top_items(top_k) (math.rb:96-108, pipelines.rb:71-76)."""
-    opts = backend_opts or {}
     ranked = top_k != 1
-    extra = [T.StructField("label", T.StringType()), T.StructField("score", T.FloatType())]
+    fields = [T.StructField("label", T.StringType()), T.StructField("score", T.FloatType())]
     if ranked:
-        extra.append(T.StructField("rank", T.IntegerType()))
-    schema = T.StructType(list(df.schema.fields) + extra)
-    in_cols = [f.name for f in df.schema.fields]
+        fields.append(T.StructField("rank", T.IntegerType()))
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf["label"] = pd.Series([], dtype=str)
-                pdf["score"] = pd.Series([], dtype="float32")
-                if ranked:
-                    pdf["rank"] = pd.Series([], dtype="int32")
-                yield pdf
-                continue
-            texts = pdf[text_col].fillna("").astype(str).tolist()
-            logits, id2label = be.classify(texts)
+    def make(be):
+        def step(pdf):
+            logits, id2label = be.classify(texts(pdf, text_col))
             # sigmoid when problem_type == multi_label (pipelines.rb:57-62)
             probs = sigmoid(logits) if multi_label else softmax(logits, axis=-1)
             if not ranked:
                 top = probs.argmax(axis=-1)
-                pdf = pdf.copy()
-                pdf["label"] = [id2label[int(i)] for i in top]
-                pdf["score"] = probs[range(len(top)), top].astype("float32")
-                yield pdf
-                continue
+                return None, [
+                    [id2label[int(i)] for i in top], probs[range(len(top)), top]
+                ]
             k = probs.shape[1] if top_k <= 0 else min(top_k, probs.shape[1])
-            order = np.argsort(-probs, axis=-1, kind="stable")[:, :k]  # [b, k]
+            order = np.argsort(-probs, axis=-1, kind="stable")[:, :k].ravel()
             src_idx = np.repeat(np.arange(len(pdf)), k)
-            out = pdf.take(src_idx)[in_cols].reset_index(drop=True)
-            out["label"] = [id2label[int(i)] for i in order.ravel()]
-            out["score"] = probs[src_idx, order.ravel()].astype("float32")
-            out["rank"] = np.tile(np.arange(1, k + 1, dtype=np.int32), len(pdf))
-            yield out
+            return src_idx, [
+                [id2label[int(i)] for i in order],
+                probs[src_idx, order],
+                np.tile(np.arange(1, k + 1), len(pdf)),
+            ]
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(df, fields, make, backend, backend_opts)
 
 
 def zero_shot(
@@ -96,7 +80,6 @@ def zero_shot(
     Callers rank with a window / groupBy — keeping the result relational
     (exploded) instead of the reference's in-memory {labels[], scores[]}.
     """
-    opts = backend_opts or {}
     spark = df.sparkSession
     labels_df = spark.createDataFrame([(l,) for l in labels], ["candidate_label"])
     # synthetic row id: the label explosion, scoring UDF and cross-label
@@ -114,45 +97,34 @@ def zero_shot(
     # stage (label explosion, scoring UDF, softmax window) inherits it —
     # a single-row-group bench file would otherwise serialize the whole
     # |rows|×|labels| inference onto ONE core (measured sf1.0: 8.9 s ->
-    # ~1.3 s; the crossJoin below is a Join node, so the later
-    # spread_scan(pairs) is a documented no-op and cannot fix it)
+    # ~1.3 s; the crossJoin below is a Join node, so the spread_scan
+    # map_batches runs over `pairs` is a no-op and cannot fix it)
     df = spread_scan(df).withColumn("_zs_id", F.monotonically_increasing_id()).localCheckpoint()
     pairs = df.select("_zs_id", text_col).crossJoin(F.broadcast(labels_df))
 
-    schema = T.StructType(
-        list(pairs.schema.fields)
-        + [
-            T.StructField("entailment_logit", T.DoubleType()),
-            T.StructField("pair_score", T.DoubleType()),
-        ]
-    )
-
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf["entailment_logit"] = pd.Series([], dtype=float)
-                pdf["pair_score"] = pd.Series([], dtype=float)
-                yield pdf
-                continue
-            texts = pdf[text_col].fillna("").astype(str).tolist()
+    def make(be):
+        def step(pdf):
             hyps = [
                 hypothesis_template.replace("{}", l)
                 for l in pdf["candidate_label"].tolist()
             ]
-            logits, label2id = be.classify_pairs(texts, hyps)
+            logits, label2id = be.classify_pairs(texts(pdf, text_col), hyps)
             ent, con = label2id["entailment"], label2id["contradiction"]
-            pdf = pdf.copy()
-            pdf["entailment_logit"] = logits[:, ent].astype(float)
             # per-pair softmax over [contradiction, entailment]
             # (pipelines.rb:444-451) — used in multi_label mode
             two = softmax(logits[:, [con, ent]], axis=-1)
-            pdf["pair_score"] = two[:, 1].astype(float)
-            yield pdf
+            return None, [logits[:, ent], two[:, 1]]
 
-    scored = spread_scan(pairs).mapInPandas(infer, schema=schema)
+        return step
+
+    scored = map_batches(
+        pairs,
+        [
+            T.StructField("entailment_logit", T.DoubleType()),
+            T.StructField("pair_score", T.DoubleType()),
+        ],
+        make, backend, backend_opts,
+    )
 
     if multi_label or len(labels) == 1:
         slim = scored.select(

@@ -7,11 +7,6 @@ pooling:"none", normalize:false at :824-826):
     pipelines.rb:836-838) → pool ("none"|"mean"|"cls", :858-868) →
     L2 normalize (utils/tensor.rb:19-24)
 
-Spark design: one mapInPandas over Arrow batches — the Arrow batch IS the
-inference batch (amortizes the model call exactly like the reference's
-padded-batch forward). Everything else stays JVM-side. At 100 TB the scan
-partitions bound memory via spark.sql.execution.arrow.maxRecordsPerBatch.
-
 pooling "none" deviation, documented: the reference returns the PADDED
 batch tensor, so a text's trailing rows depend on which batch it landed
 in. Under Spark, batch composition is a partitioning artifact, so we
@@ -22,15 +17,12 @@ driver's value-hash gate requires.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from informers_spark.functions.kernels import mean_pooling, normalize
-from informers_spark.rebalance import spread_scan
+from informers_spark.pipelines.batch import map_batches, texts
 
 # named outputs that are already pooled [batch, dim] (arctic's
 # sentence_embedding, test/model_test.rb:155-158); used only as the
@@ -77,7 +69,6 @@ def embed(
     never defines it — semantics follow the transformers.js original it
     ports. Requires a pooled result (one vector per row).
     """
-    opts = backend_opts or {}
     if pooled_output is None:
         pooled_output = model_output in _POOLED_OUTPUT_NAMES
     token_level = pooling == "none" and not pooled_output
@@ -92,14 +83,8 @@ def embed(
     elem: T.DataType = T.FloatType() if quantize is None else T.IntegerType()
     if token_level:
         elem = T.ArrayType(T.FloatType())
-    schema = T.StructType(
-        df.schema.fields + [T.StructField(out_col, T.ArrayType(elem))]
-    )
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
+    def make(be):
         sel, pool, norm = model_output, pooling, do_normalize
         # legacy all-MiniLM-L6-v2 revision: model declares a
         # token_embeddings output; mean+normalize is exactly its
@@ -111,45 +96,39 @@ def embed(
             and norm
         ):
             sel, pool, norm = "sentence_embedding", "none", False
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf[out_col] = pd.Series([], dtype=object)
-                yield pdf
-                continue
-            texts = pdf[text_col].fillna("").astype(str).tolist()
-            out: list
+
+        def step(pdf):
+            batch = texts(pdf, text_col)
             if sel is None and pool == "mean" and hasattr(be, "mean_encode"):
                 # fused tokenize+pool fast path (no padded hidden tensor)
-                pooled = _finish(be.mean_encode(texts), norm, quantize)
-                out = list(pooled)
-            else:
-                kw = {"output_names": [sel]} if sel is not None else {}
-                hidden, mask = be.encode(texts, **kw)
-                if hidden.ndim == 2:
-                    # named output already pooled (arctic sentence_embedding)
-                    if token_level:
-                        raise ValueError(
-                            f"model_output {sel!r} is already pooled "
-                            "[batch, dim]; pass pooled_output=True"
-                        )
-                    out = list(_finish(hidden, norm, quantize))
-                elif pool == "mean":
-                    out = list(_finish(mean_pooling(hidden, mask), norm, quantize))
-                elif pool == "cls":
-                    # first token (pipelines.rb:864-865)
-                    out = list(_finish(hidden[:, 0, :], norm, quantize))
-                else:  # "none": per-row real-token vectors (see module doc)
-                    out = []
-                    for i in range(hidden.shape[0]):
-                        toks = hidden[i, mask[i].astype(bool)]
-                        if norm:
-                            toks = normalize(toks)
-                        out.append(list(toks))
-            pdf = pdf.copy()
-            pdf[out_col] = out
-            yield pdf
+                return None, [_finish(be.mean_encode(batch), norm, quantize)]
+            kw = {"output_names": [sel]} if sel is not None else {}
+            hidden, mask = be.encode(batch, **kw)
+            if hidden.ndim == 2:
+                # named output already pooled (arctic sentence_embedding)
+                if token_level:
+                    raise ValueError(
+                        f"model_output {sel!r} is already pooled "
+                        "[batch, dim]; pass pooled_output=True"
+                    )
+                return None, [_finish(hidden, norm, quantize)]
+            if pool == "mean":
+                return None, [_finish(mean_pooling(hidden, mask), norm, quantize)]
+            if pool == "cls":
+                # first token (pipelines.rb:864-865)
+                return None, [_finish(hidden[:, 0, :], norm, quantize)]
+            # "none": per-row real-token vectors (see module doc)
+            out = []
+            for i in range(hidden.shape[0]):
+                toks = hidden[i, mask[i].astype(bool)]
+                out.append(list(normalize(toks) if norm else toks))
+            return None, [out]
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(
+        df, [T.StructField(out_col, T.ArrayType(elem))], make, backend, backend_opts
+    )
 
 
 def _finish(pooled: np.ndarray, do_normalize: bool, quantize: str | None) -> np.ndarray:

@@ -7,7 +7,7 @@ utils/generation.rb:119-131): tokenize → loop{forward → logits[last] →
 logits processors → sample → append} until EOS or max_new_tokens →
 decode.
 
-Spark design: the decode loop runs INSIDE one mapInPandas UDF per Arrow
+Spark design: the decode loop runs inside one batch step per Arrow
 batch — every live row advances together, so each step is ONE batched
 backend forward (the distributed analog of the reference's batched beam
 loop). Finished rows drop out of the step batch. No per-row backend
@@ -21,20 +21,17 @@ semantics (ForcedBOS at len==1, MinLength) match the reference.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from informers_spark.rebalance import spread_scan
 from informers_spark.functions.generation import (
     apply_temperature,
     beam_sample,
     build_processors,
     greedy_sample,
 )
+from informers_spark.pipelines.batch import map_batches, texts
 
 
 def _beam_decode(
@@ -140,30 +137,23 @@ def generate_text(
     return_full_text=True prepends the prompt (text-generation semantics,
     pipelines.rb:364-418); False returns only the new tokens
     (text2text-generation semantics, pipelines.rb:314-354)."""
-    opts = backend_opts or {}
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.StringType())]
-    )
+    def make(be):
+        vocab = list(be.GEN_VOCAB)
+        eos_id = len(vocab) - 1
+        procs = build_processors(
+            eos_token_id=eos_id,
+            min_length=min_length,
+            no_repeat_ngram_size=no_repeat_ngram_size,
+            forced_bos_token_id=forced_bos_token_id,
+            repetition_penalty=repetition_penalty,
+            bad_words_ids=bad_words_ids,
+            min_new_tokens=min_new_tokens,
+            forced_decoder_ids=forced_decoder_ids,
+        )
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        for pdf in batches:
-            texts = pdf[text_col].fillna("").astype(str).tolist() if len(pdf) else []
-            contexts = [prefix + t for t in texts]
-            vocab = list(be.GEN_VOCAB)
-            eos_id = len(vocab) - 1
-            procs = build_processors(
-                eos_token_id=eos_id,
-                min_length=min_length,
-                no_repeat_ngram_size=no_repeat_ngram_size,
-                forced_bos_token_id=forced_bos_token_id,
-                repetition_penalty=repetition_penalty,
-                bad_words_ids=bad_words_ids,
-                min_new_tokens=min_new_tokens,
-                forced_decoder_ids=forced_decoder_ids,
-            )
+        def step(pdf):
+            prompts = texts(pdf, text_col)
+            contexts = [prefix + t for t in prompts]
             if num_beams > 1:
                 ids_out = _beam_decode(
                     be, contexts, vocab, eos_id, procs,
@@ -173,27 +163,21 @@ def generate_text(
                     " ".join(vocab[t] for t in ids[1:] if t != eos_id)
                     for ids in ids_out
                 ]
-                if return_full_text:
-                    decoded = [
-                        (t + " " + d).strip() if d else t
-                        for t, d in zip(texts, decoded)
-                    ]
-                out = pdf.copy()
-                out[out_col] = pd.Series(decoded, dtype=object)
-                yield out
-                continue
-            decoded = greedy_decode(
-                be, contexts, max_new_tokens=max_new_tokens, procs=procs
-            )
+            else:
+                decoded = greedy_decode(
+                    be, contexts, max_new_tokens=max_new_tokens, procs=procs
+                )
             if return_full_text:
                 decoded = [
-                    (t + " " + d).strip() if d else t for t, d in zip(texts, decoded)
+                    (t + " " + d).strip() if d else t for t, d in zip(prompts, decoded)
                 ]
-            out = pdf.copy()
-            out[out_col] = pd.Series(decoded, dtype=object)
-            yield out
+            return None, [decoded]
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(
+        df, [T.StructField(out_col, T.StringType())], make, backend, backend_opts
+    )
 
 
 def summarize(df: DataFrame, text_col: str = "text", **kwargs) -> DataFrame:

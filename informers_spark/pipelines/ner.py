@@ -5,23 +5,20 @@ Reference dataflow (lib/informers/pipelines.rb:88-158):
     (default ["O"]) → drop empty words → softmax score of argmax →
     BIO group_entities merge (pipelines.rb:192-225).
 
-The BIO merge is a sequential, order-dependent scan, so it stays INSIDE
-the UDF per document (never a distributed aggregate) — the grouped
-entities explode into one output row per mention. Output schema mirrors
-the grouped-entity record (pipelines.rb:166-172).
+The BIO merge is a sequential, order-dependent scan, so it stays inside
+the batch step per document (never a distributed aggregate) — the
+grouped entities explode into one output row per mention. Output schema
+mirrors the grouped-entity record (pipelines.rb:166-172).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from informers_spark.functions.kernels import group_entities, softmax
-from informers_spark.rebalance import spread_scan
+from informers_spark.pipelines.batch import explode, map_batches, texts
 
 MENTION_FIELDS = [
     T.StructField("entity_group", T.StringType()),
@@ -51,95 +48,57 @@ def ner(
     Output: all input columns + (entity_group, word, score, start, end);
     texts with no mentions produce no rows (explode semantics).
     """
-    opts = backend_opts or {}
     fields = list(MENTION_FIELDS)
     if aggregation_strategy == "none":
         fields = fields + [TOKEN_INDEX_FIELD]
-    schema = T.StructType(list(df.schema.fields) + fields)
-    in_cols = [f.name for f in df.schema.fields]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        mention_cols = ["entity_group", "word", "score", "start", "end"]
-        if aggregation_strategy == "none":
-            mention_cols = mention_cols + ["index"]
-        for pdf in batches:
-            # columnar assembly: source row index + one list per mention
-            # column, then a single .take() to replicate input rows —
-            # no per-row iloc (the pandas slow path)
-            src_idx: list[int] = []
-            m_out: dict[str, list] = {c: [] for c in mention_cols}
-            if len(pdf):
-                texts = pdf[text_col].fillna("").astype(str).tolist()
-                logits_list, offsets_list, id2label = be.token_classify(texts)
-                # vectorized pre-pass: the ignored-label drop
-                # (pipelines.rb:122-125) removes the vast majority of
-                # tokens ('O' on a typical corpus), so argmax + keep-mask
-                # run in numpy and the Python loop below touches ONLY the
-                # surviving entity tokens. softmax is row-independent, so
-                # computing it on the kept subset is bit-identical to
-                # slicing a full-batch softmax (fixture-pinned).
-                keep_label = np.array(
-                    [lab not in ignore_labels for lab in id2label], dtype=bool
-                )
-                for row_i in range(len(pdf)):
-                    logits = logits_list[row_i]
-                    offsets = offsets_list[row_i]
-                    if len(logits) == 0:
-                        continue
+    def make(be):
+        def step(pdf):
+            logits_list, offsets_list, id2label = be.token_classify(texts(pdf, text_col))
+            # vectorized pre-pass: the ignored-label drop
+            # (pipelines.rb:122-125) removes the vast majority of tokens
+            # ('O' on a typical corpus), so argmax + keep-mask run in
+            # numpy and the Python loop below touches ONLY the surviving
+            # entity tokens. softmax is row-independent, so computing it
+            # on the kept subset is bit-identical to slicing a full-batch
+            # softmax (fixture-pinned).
+            keep_label = np.array(
+                [lab not in ignore_labels for lab in id2label], dtype=bool
+            )
+            per_row = []
+            for logits, offsets in zip(logits_list, offsets_list):
+                ents = []
+                if len(logits):
                     arg = np.argmax(logits, axis=-1)
                     kept = np.nonzero(keep_label[arg])[0]
-                    if len(kept) == 0:
-                        ents = []
-                    else:
+                    if len(kept):
                         probs_kept = softmax(logits[kept], axis=-1)
                         scores = probs_kept[np.arange(len(kept)), arg[kept]]
-                        ents = []
                         for k, j in enumerate(kept):
                             word, s, e = offsets[j]
                             # empty/special-word drop (pipelines.rb:128-132)
-                            if not word.strip():
-                                continue
-                            ents.append(
-                                {
+                            if word.strip():
+                                ents.append({
                                     "entity": id2label[int(arg[j])],
                                     "score": float(scores[k]),
                                     "word": word,
                                     "start": int(s),
                                     "end": int(e),
                                     "index": int(j),
-                                }
-                            )
-                    if aggregation_strategy == "simple":
-                        groups = group_entities(ents)
-                    else:  # "none": token-level records (entity_group
-                        # column carries the reference record's `entity`
-                        # label, B-/I- prefix intact)
-                        groups = [
-                            {
-                                "entity_group": e["entity"],
-                                "score": e["score"],
-                                "word": e["word"],
-                                "start": e["start"],
-                                "end": e["end"],
-                                "index": e["index"],
-                            }
-                            for e in ents
-                        ]
-                    for g in groups:
-                        src_idx.append(row_i)
-                        for c in mention_cols:
-                            m_out[c].append(g[c])
-            out = pdf.take(src_idx)[in_cols].reset_index(drop=True)
-            out["entity_group"] = pd.Series(m_out["entity_group"], dtype=object)
-            out["word"] = pd.Series(m_out["word"], dtype=object)
-            out["score"] = np.asarray(m_out["score"], dtype=np.float32)
-            out["start"] = np.asarray(m_out["start"], dtype=np.int32)
-            out["end"] = np.asarray(m_out["end"], dtype=np.int32)
-            if "index" in mention_cols:
-                out["index"] = np.asarray(m_out["index"], dtype=np.int32)
-            yield out
+                                })
+                if aggregation_strategy == "simple":
+                    per_row.append([
+                        (g["entity_group"], g["word"], g["score"], g["start"], g["end"])
+                        for g in group_entities(ents)
+                    ])
+                else:  # "none": token-level records (entity_group carries
+                    # the reference record's `entity` label, B-/I- intact)
+                    per_row.append([
+                        (e["entity"], e["word"], e["score"], e["start"], e["end"], e["index"])
+                        for e in ents
+                    ])
+            return explode(per_row, len(fields))
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(df, fields, make, backend, backend_opts)

@@ -4,7 +4,7 @@ question_answering (reference: lib/informers/pipelines.rb:228-278):
 tokenize (question, context pair) → forward → softmax(start_logits),
 softmax(end_logits) → cartesian start×end with start<=end → score =
 p_start · p_end → top_k → decode span. The start×end product stays
-inside the UDF (≤ seq² per row), exactly like the reference.
+inside the batch step (≤ seq² per row), exactly like the reference.
 
 fill_mask (reference: lib/informers/pipelines.rb:280-312): locate the
 mask token (error if absent) → softmax over vocab at that position →
@@ -20,15 +20,12 @@ candidate scan runs rowwise, in numpy, like the reference.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from informers_spark.functions.kernels import softmax
-from informers_spark.rebalance import spread_scan
+from informers_spark.pipelines.batch import explode, map_batches, texts
 
 
 def question_answering(
@@ -42,30 +39,22 @@ def question_answering(
 ) -> DataFrame:
     """Append (answer, qa_score, answer_start, answer_end) per row
     (top_k>1 → multiple rows per input)."""
-    opts = backend_opts or {}
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("answer", T.StringType()),
-            T.StructField("qa_score", T.FloatType()),
-            T.StructField("answer_start", T.IntegerType()),
-            T.StructField("answer_end", T.IntegerType()),
-        ]
-    )
-    in_cols = [f.name for f in df.schema.fields]
+    fields = [
+        T.StructField("answer", T.StringType()),
+        T.StructField("qa_score", T.FloatType()),
+        T.StructField("answer_start", T.IntegerType()),
+        T.StructField("answer_end", T.IntegerType()),
+    ]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        for pdf in batches:
-            questions = pdf[question_col].fillna("").astype(str).tolist()
-            contexts = pdf[context_col].fillna("").astype(str).tolist()
-            src_idx, answers, scores, starts, ends = [], [], [], [], []
-            scored = be.qa_batch(questions, contexts) if len(pdf) else []
-            for row_i, (context, (start_logits, end_logits, toks)) in enumerate(
-                zip(contexts, scored)
+    def make(be):
+        def step(pdf):
+            contexts = texts(pdf, context_col)
+            per_row = []
+            for context, (start_logits, end_logits, toks) in zip(
+                contexts, be.qa_batch(texts(pdf, question_col), contexts)
             ):
+                answers = []
+                per_row.append(answers)
                 n = len(toks)
                 if n == 0:
                     continue
@@ -81,26 +70,17 @@ def question_answering(
                 cand = p_start[:, None] * band
                 valid = (np.arange(n)[:, None] + np.arange(w)[None, :]) < n
                 cand = np.where(valid, cand, -1.0)
-                flat_order = np.argsort(-cand, axis=None, kind="stable")[:top_k]
-                for fo in flat_order:
+                for fo in np.argsort(-cand, axis=None, kind="stable")[:top_k]:
                     s, d = divmod(int(fo), w)
                     if cand[s, d] < 0:
                         continue
-                    e = s + d
-                    cs, ce = toks[s][1], toks[e][2]
-                    src_idx.append(row_i)
-                    answers.append(context[cs:ce])
-                    scores.append(np.float32(cand[s, d]))
-                    starts.append(np.int32(cs))
-                    ends.append(np.int32(ce))
-            out = pdf.take(src_idx)[in_cols].reset_index(drop=True)
-            out["answer"] = pd.Series(answers, dtype=object)
-            out["qa_score"] = np.asarray(scores, dtype=np.float32)
-            out["answer_start"] = np.asarray(starts, dtype=np.int32)
-            out["answer_end"] = np.asarray(ends, dtype=np.int32)
-            yield out
+                    cs, ce = toks[s][1], toks[s + d][2]
+                    answers.append((context[cs:ce], cand[s, d], cs, ce))
+            return explode(per_row, len(fields))
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(df, fields, make, backend, backend_opts)
 
 
 def fill_mask(
@@ -114,40 +94,28 @@ def fill_mask(
     """Explode each masked text into top_k (token_str, fm_score, sequence)
     rows. Rows without the mask token raise, matching the reference
     (pipelines.rb:289-291)."""
-    opts = backend_opts or {}
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField("token_str", T.StringType()),
-            T.StructField("fm_score", T.FloatType()),
-            T.StructField("sequence", T.StringType()),
-        ]
-    )
-    in_cols = [f.name for f in df.schema.fields]
+    fields = [
+        T.StructField("token_str", T.StringType()),
+        T.StructField("fm_score", T.FloatType()),
+        T.StructField("sequence", T.StringType()),
+    ]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
+    def make(be):
+        def step(pdf):
+            batch = texts(pdf, text_col)
+            if any(mask_token not in t for t in batch):
+                raise ValueError("Mask token not found in text")
+            vocab, logits = be.mask_batch(batch, mask_token)  # [b, V]
+            probs = softmax(logits, axis=-1)
+            order = np.argsort(-probs, axis=-1, kind="stable")[:, :top_k]
+            return explode(
+                [
+                    [(vocab[j], probs[i, j], text.replace(mask_token, vocab[j])) for j in order[i]]
+                    for i, text in enumerate(batch)
+                ],
+                len(fields),
+            )
 
-        be = get_backend(backend, **opts)
-        for pdf in batches:
-            src_idx, toks_out, scores, seqs = [], [], [], []
-            if len(pdf):
-                texts = pdf[text_col].fillna("").astype(str).tolist()
-                if any(mask_token not in t for t in texts):
-                    raise ValueError("Mask token not found in text")
-                vocab, logits = be.mask_batch(texts, mask_token)  # [b, V]
-                probs = softmax(logits, axis=-1)
-                order = np.argsort(-probs, axis=-1, kind="stable")[:, :top_k]
-                for row_i, text in enumerate(texts):
-                    for j in order[row_i]:
-                        src_idx.append(row_i)
-                        toks_out.append(vocab[j])
-                        scores.append(np.float32(probs[row_i, j]))
-                        seqs.append(text.replace(mask_token, vocab[j]))
-            out = pdf.take(src_idx)[in_cols].reset_index(drop=True)
-            out["token_str"] = pd.Series(toks_out, dtype=object)
-            out["fm_score"] = np.asarray(scores, dtype=np.float32)
-            out["sequence"] = pd.Series(seqs, dtype=object)
-            yield out
+        return step
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+    return map_batches(df, fields, make, backend, backend_opts)

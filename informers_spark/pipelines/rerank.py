@@ -3,21 +3,18 @@
 Reference (lib/informers/pipelines.rb:1053-1081): tokenize query paired
 with each doc → forward → sigmoid(logits[:,0]) → sort desc → top_k.
 
-Spark design: pair-scoring UDF over (query, doc) rows, then top-k via a
+Spark design: pair-scoring batch step over (query, doc) rows, then top-k via a
 window partitioned by the query keys — distributed, no driver sort.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from informers_spark.functions.kernels import sigmoid
-from informers_spark.rebalance import spread_scan
+from informers_spark.pipelines.batch import map_batches, texts
 
 
 def rerank(
@@ -30,36 +27,22 @@ def rerank(
     backend_opts: dict | None = None,
 ) -> DataFrame:
     """Score (query, doc) rows; append score (+ rank, filtered to top_k)."""
-    opts = backend_opts or {}
-    schema = T.StructType(
-        list(df.schema.fields) + [T.StructField("score", T.FloatType())]
-    )
-
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf["score"] = pd.Series([], dtype="float32")
-                yield pdf
-                continue
-            qs = pdf[query_col].fillna("").astype(str).tolist()
-            ds = pdf[doc_col].fillna("").astype(str).tolist()
-            logits = be.rerank(qs, ds)
-            pdf = pdf.copy()
+    def make(be):
+        def step(pdf):
+            logits = be.rerank(texts(pdf, query_col), texts(pdf, doc_col))
             # sigmoid of first logit (pipelines.rb:1066)
-            pdf["score"] = sigmoid(logits).astype("float32")
-            yield pdf
+            return None, [sigmoid(logits)]
 
-    scored = spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    scored = map_batches(
+        df, [T.StructField("score", T.FloatType())], make, backend, backend_opts
+    )
     keys = group_cols if group_cols is not None else [query_col]
     # tie-break: score desc, doc text asc, then EVERY remaining input
     # column — duplicate texts (the corpus has exact dups by design)
     # would otherwise get run-dependent ranks
-    tie_cols = [doc_col] + [
-        f.name for f in df.schema.fields if f.name not in (doc_col, "score")
-    ]
+    tie_cols = [doc_col] + [c for c in df.columns if c not in (doc_col, "score")]
     w = Window.partitionBy(*keys).orderBy(
         F.desc("score"), *[F.col(c) for c in tie_cols]
     )

@@ -6,36 +6,31 @@ Reference pipelines (lib/informers/pipelines.rb): ImageClassification
 (:706-758), ImageSegmentation (:551-625), DepthEstimation (:1014-1040),
 ImageToImage (:990-1012), ImageToText (:499-518).
 
-Spark design: each pipeline is ONE mapInPandas over an Arrow batch of
-(id, payload) rows — decode -> preprocess chain (functions/vision.py,
-exact parity with processors.rb:219-330) -> batched backend forward ->
-reference post-processing -> relational rows. Variable-size images are
-preprocessed to a common (crop) size so the forward is one stacked
-tensor per batch. Detection/segmentation outputs EXPLODE to one row per
-box/segment — the relational form of the reference's nested dicts.
+Each pipeline's batch step runs decode -> preprocess chain
+(functions/vision.py, exact parity with processors.rb:219-330) ->
+batched backend forward -> reference post-processing. Variable-size
+images are preprocessed to a common (crop) size so the forward is one
+stacked tensor per batch. Detection/segmentation outputs EXPLODE to one
+row per box/segment — the relational form of the reference's nested
+dicts. The payload column is dropped from every output (an image-output
+op carries its result in a new binary column).
 
-At 100 TB: payloads stay in executor memory only for the life of one
-Arrow batch; outputs are slim typed columns (never re-emitting the
-payload unless the op's contract is an image, e.g. image-to-image).
-Partitioning of the input scan is preserved — no exchange before the
-UDF (asserted in tests/test_plans.py style). Executor-memory sizing:
-batch bytes ~= spark.sql.execution.arrow.maxRecordsPerBatch (1024 in
-session.py) x mean payload size — drop the cap to ~64-128 for megapixel
-images so a batch stays well under the Arrow 2 GiB record-batch bound
-and the Python worker's RSS budget.
+Executor-memory sizing: batch bytes ~= spark.sql.execution.arrow.
+maxRecordsPerBatch (1024 in session.py) x mean payload size — drop the
+cap to ~64-128 for megapixel images so a batch stays well under the
+Arrow 2 GiB record-batch bound and the Python worker's RSS budget.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import re
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from informers_spark.functions.kernels import get_top_items, interpolate, softmax
-from informers_spark.rebalance import spread_scan
+from informers_spark.functions.generation import build_processors
+from informers_spark.functions.kernels import get_top_items, interpolate, sigmoid, softmax
 from informers_spark.functions.vision import (
     compute_segments,
     get_bounding_box,
@@ -43,6 +38,8 @@ from informers_spark.functions.vision import (
     preprocess_image,
     remove_low_and_no_objects,
 )
+from informers_spark.pipelines.batch import explode, map_batches
+from informers_spark.pipelines.generate import greedy_decode
 
 # small images in the synthetic corpus — a 32px chain keeps tests fast;
 # real checkpoints ship their own processor config (224 etc.)
@@ -54,30 +51,34 @@ SMALL_CONFIG = {
 }
 
 
-def _decode_and_preprocess(payloads, decode_fn, config) -> tuple[np.ndarray, list]:
+RANKED_LABEL_FIELDS = [
+    T.StructField("label", T.StringType()),
+    T.StructField("score", T.FloatType()),
+    T.StructField("rank", T.IntegerType()),
+]
+
+_BOX_FIELDS = [
+    T.StructField("label", T.StringType()),
+    T.StructField("score", T.FloatType()),
+    T.StructField("xmin", T.FloatType()),
+    T.StructField("ymin", T.FloatType()),
+    T.StructField("xmax", T.FloatType()),
+    T.StructField("ymax", T.FloatType()),
+]
+
+
+def _pixels(payloads, config) -> tuple[np.ndarray, list]:
     """Decode each payload and run the preprocess chain; stack to one
     [B, C, H, W] tensor (Utils.stack, processors.rb:333-337). Returns
     (pixel_values, original_sizes [(h, w)])."""
+    from informers_spark.operators.multimodal import auto_decode
+
     pixel, sizes = [], []
     for payload in payloads:
-        out = preprocess_image(decode_fn(bytes(payload)), config)
+        out = preprocess_image(auto_decode(bytes(payload)), config)
         pixel.append(out["pixel_values"])
         sizes.append(out["original_size"])
     return np.stack(pixel), sizes
-
-
-def _default_decode():
-    from informers_spark.operators.multimodal import auto_decode
-
-    return auto_decode
-
-
-def _base_tuples(pdf: pd.DataFrame, keep_names: list[str]) -> list[tuple]:
-    """Pass-through column values as row tuples, assembled columnar
-    (one .tolist() per column) — never pdf.iloc in a row loop."""
-    if not keep_names:
-        return [()] * len(pdf)
-    return list(zip(*[pdf[c].tolist() for c in keep_names]))
 
 
 def image_classify(
@@ -92,43 +93,26 @@ def image_classify(
     """softmax -> get_top_items(top_k) -> (label, score[, rank]) rows
     (reference pipelines.rb:520-548). top_k==1 appends the argmax like
     the reference's flattened shape; top_k>1 explodes ranked rows."""
-    opts = backend_opts or {}
     cfg = config or SMALL_CONFIG
     ranked = top_k != 1
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    extra = [T.StructField("label", T.StringType()), T.StructField("score", T.FloatType())]
-    if ranked:
-        extra.append(T.StructField("rank", T.IntegerType()))
-    schema = T.StructType(keep + extra)
-    keep_names = [f.name for f in keep]
+    fields = RANKED_LABEL_FIELDS if ranked else RANKED_LABEL_FIELDS[:2]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        decode = _default_decode()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px, _ = _decode_and_preprocess(pdf[payload_col], decode, cfg)
+    def make(be):
+        def step(pdf):
+            px, _ = _pixels(pdf[payload_col], cfg)
             logits, id2label = be.image_forward(px, labels)
-            probs = softmax(logits, axis=-1)
-            rows = []
-            bases = _base_tuples(pdf, keep_names)
-            for i in range(len(pdf)):
-                base = bases[i]
-                items = get_top_items(probs[i], top_k)
-                if ranked:
-                    rows.extend(
-                        base + (id2label[idx], float(s), r + 1)
-                        for r, (idx, s) in enumerate(items)
-                    )
-                else:
-                    idx, s = items[0]
-                    rows.append(base + (id2label[idx], float(s)))
-            yield pd.DataFrame(rows, columns=keep_names + [f.name for f in extra])
+            per_row = [
+                [
+                    (id2label[idx], s, r + 1) if ranked else (id2label[idx], s)
+                    for r, (idx, s) in enumerate(get_top_items(p, top_k))
+                ]
+                for p in softmax(logits, axis=-1)
+            ]
+            return explode(per_row, len(fields))
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(df, fields, make, backend, backend_opts, drop=[payload_col])
 
 
 def image_feature_extract(
@@ -140,27 +124,19 @@ def image_feature_extract(
 ) -> DataFrame:
     """Raw hidden features per image (ImageFeatureExtraction,
     pipelines.rb:884-893: outputs[0] with no post-processing)."""
-    opts = backend_opts or {}
     cfg = config or SMALL_CONFIG
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema = T.StructType(keep + [T.StructField("features", T.ArrayType(T.FloatType()))])
-    keep_names = [f.name for f in keep]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
+    def make(be):
+        def step(pdf):
+            px, _ = _pixels(pdf[payload_col], cfg)
+            return None, [be.image_embed(px).astype(np.float32)]
 
-        be = get_backend(backend, **opts)
-        decode = _default_decode()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px, _ = _decode_and_preprocess(pdf[payload_col], decode, cfg)
-            emb = be.image_embed(px).astype(np.float32)
-            out = pdf[keep_names].copy()
-            out["features"] = list(emb)
-            yield out
+        return step
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+    return map_batches(
+        df, [T.StructField("features", T.ArrayType(T.FloatType()))], make,
+        backend, backend_opts, drop=[payload_col],
+    )
 
 
 def zero_shot_image_classify(
@@ -176,83 +152,48 @@ def zero_shot_image_classify(
     """CLIP-style: template-filled label texts x image -> logits_per_image
     -> softmax (sigmoid for siglip) -> one ROW per (image, label), ranked
     (reference pipelines.rb:627-668 returns the sorted label list)."""
-    opts = backend_opts or {}
     cfg = config or SMALL_CONFIG
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema = T.StructType(
-        keep
-        + [
-            T.StructField("label", T.StringType()),
-            T.StructField("score", T.FloatType()),
-            T.StructField("rank", T.IntegerType()),
-        ]
-    )
-    keep_names = [f.name for f in keep]
     # Ruby String#sub replaces only the FIRST "{}" (pipelines.rb:641)
-    texts = [hypothesis_template.replace("{}", x, 1) for x in candidate_labels]
+    hyps = [hypothesis_template.replace("{}", x, 1) for x in candidate_labels]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-        from informers_spark.functions.kernels import sigmoid
-
-        be = get_backend(backend, **opts)
-        decode = _default_decode()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px, _ = _decode_and_preprocess(pdf[payload_col], decode, cfg)
-            logits = be.clip_scores(px, texts, siglip=siglip)  # [B, L]
+    def make(be):
+        def step(pdf):
+            px, _ = _pixels(pdf[payload_col], cfg)
+            logits = be.clip_scores(px, hyps, siglip=siglip)  # [B, L]
             probs = sigmoid(logits) if siglip else softmax(logits, axis=-1)
-            rows = []
-            bases = _base_tuples(pdf, keep_names)
-            for i in range(len(pdf)):
-                base = bases[i]
-                order = np.argsort(-probs[i], kind="stable")
-                rows.extend(
-                    base + (candidate_labels[j], float(probs[i, j]), r + 1)
-                    for r, j in enumerate(order)
-                )
-            yield pd.DataFrame(rows, columns=keep_names + ["label", "score", "rank"])
+            per_row = [
+                [
+                    (candidate_labels[j], p[j], r + 1)
+                    for r, j in enumerate(np.argsort(-p, kind="stable"))
+                ]
+                for p in probs
+            ]
+            return explode(per_row, 3)
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
 
-
-_BOX_FIELDS = [
-    T.StructField("label", T.StringType()),
-    T.StructField("score", T.FloatType()),
-    T.StructField("xmin", T.FloatType()),
-    T.StructField("ymin", T.FloatType()),
-    T.StructField("xmax", T.FloatType()),
-    T.StructField("ymax", T.FloatType()),
-]
+    return map_batches(
+        df, RANKED_LABEL_FIELDS, make, backend, backend_opts, drop=[payload_col]
+    )
 
 
-def _detect_rows(pdf, keep_names, processed, label_of, percentage, top_k=None):
-    """Ranked box rows per image; top_k truncates PER IMAGE (the
-    reference truncates each image's ranked result, pipelines.rb:751-753)."""
-    rows = []
-    bases = _base_tuples(pdf, keep_names)
-    for i in range(len(pdf)):
-        base = bases[i]
-        det = processed[i]
+def _detect_rows(processed, label_of, percentage, top_k=None):
+    """(rows, cols) of ranked box rows per image; top_k truncates PER
+    IMAGE (the reference truncates each image's ranked result,
+    pipelines.rb:751-753)."""
+    per_row = []
+    for det in processed:
         # sort_by -score like the reference result (pipelines.rb:727-731)
-        order = np.argsort(-det["scores"], kind="stable")
-        if top_k is not None:
-            order = order[:top_k]
+        order = np.argsort(-det["scores"], kind="stable")[:top_k]
+        boxes = []
         for j in order:
             bb = get_bounding_box(det["boxes"][j], not percentage)
-            rows.append(
-                base
-                + (
-                    label_of(int(det["classes"][j])),
-                    float(det["scores"][j]),
-                    float(bb["xmin"]),
-                    float(bb["ymin"]),
-                    float(bb["xmax"]),
-                    float(bb["ymax"]),
-                )
-            )
-    return rows
+            boxes.append((
+                label_of(int(det["classes"][j])), det["scores"][j],
+                bb["xmin"], bb["ymin"], bb["xmax"], bb["ymax"],
+            ))
+        per_row.append(boxes)
+    return explode(per_row, len(_BOX_FIELDS))
 
 
 def object_detect(
@@ -268,33 +209,20 @@ def object_detect(
     """DETR post-processing to one row per detected box, score-ranked per
     image (reference pipelines.rb:671-704). percentage=False scales unit
     boxes to original pixel coords and truncates to ints (Ruby to_i)."""
-    opts = backend_opts or {}
     cfg = config or SMALL_CONFIG
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema = T.StructType(keep + _BOX_FIELDS)
-    keep_names = [f.name for f in keep]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        decode = _default_decode()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px, sizes = _decode_and_preprocess(pdf[payload_col], decode, cfg)
+    def make(be):
+        def step(pdf):
+            px, sizes = _pixels(pdf[payload_col], cfg)
             logits, boxes, id2label = be.detect_forward(px, labels)
             processed = post_process_object_detection(
                 logits, boxes, threshold, None if percentage else sizes
             )
-            rows = _detect_rows(
-                pdf, keep_names, processed, lambda k: id2label[k], percentage
-            )
-            yield pd.DataFrame(
-                rows, columns=keep_names + [f.name for f in _BOX_FIELDS]
-            )
+            return _detect_rows(processed, lambda k: id2label[k], percentage)
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(df, _BOX_FIELDS, make, backend, backend_opts, drop=[payload_col])
 
 
 def zero_shot_object_detect(
@@ -311,21 +239,11 @@ def zero_shot_object_detect(
     """OWL-ViT-style: sigmoid multi-label boxes above threshold
     (reference pipelines.rb:706-758, is_zero_shot path of
     post_process_object_detection)."""
-    opts = backend_opts or {}
     cfg = config or SMALL_CONFIG
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema = T.StructType(keep + _BOX_FIELDS)
-    keep_names = [f.name for f in keep]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        decode = _default_decode()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px, sizes = _decode_and_preprocess(pdf[payload_col], decode, cfg)
+    def make(be):
+        def step(pdf):
+            px, sizes = _pixels(pdf[payload_col], cfg)
             logits, boxes, _ = be.detect_forward(px, candidate_labels)
             # drop the background column: zero-shot scores every candidate
             # label independently (pipelines.rb:738-744)
@@ -336,15 +254,13 @@ def zero_shot_object_detect(
                 None if percentage else [[s[0], s[1]] for s in sizes],
                 is_zero_shot=True,
             )
-            rows = _detect_rows(
-                pdf, keep_names, processed,
-                lambda k: candidate_labels[k], percentage, top_k=top_k,
-            )
-            yield pd.DataFrame(
-                rows, columns=keep_names + [f.name for f in _BOX_FIELDS]
+            return _detect_rows(
+                processed, lambda k: candidate_labels[k], percentage, top_k=top_k
             )
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(df, _BOX_FIELDS, make, backend, backend_opts, drop=[payload_col])
 
 
 def image_segment(
@@ -363,55 +279,36 @@ def image_segment(
     segment via remove_low_and_no_objects + compute_segments,
     processors.rb:446-596; pixel_count is the relational stand-in for the
     mask payload the reference TODOs out, pipelines.rb:613)."""
-    opts = backend_opts or {}
     cfg = config or SMALL_CONFIG
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema = T.StructType(
-        keep
-        + [
-            T.StructField("label", T.StringType()),
-            T.StructField("score", T.FloatType()),
-            T.StructField("pixel_count", T.LongType()),
-        ]
-    )
-    keep_names = [f.name for f in keep]
+    fields = [
+        T.StructField("label", T.StringType()),
+        T.StructField("score", T.FloatType()),
+        T.StructField("pixel_count", T.LongType()),
+    ]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        decode = _default_decode()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px, sizes = _decode_and_preprocess(pdf[payload_col], decode, cfg)
+    def make(be):
+        def step(pdf):
+            px, sizes = _pixels(pdf[payload_col], cfg)
             cls, masks, id2label = be.segment_forward(px, labels)
-            rows = []
-            bases = _base_tuples(pdf, keep_names)
-            for i in range(len(pdf)):
-                base = bases[i]
+            per_row = []
+            for i, size in enumerate(sizes):
                 probs, scores, lids = remove_low_and_no_objects(
                     cls[i], masks[i], threshold, len(id2label)
                 )
                 seg, segments = compute_segments(
                     probs, scores, lids,
                     mask_threshold, overlap_mask_area_threshold,
-                    target_size=sizes[i],
+                    target_size=size,
                 )
-                for s in segments:
-                    rows.append(
-                        base
-                        + (
-                            id2label[s["label_id"]],
-                            float(s["score"]),
-                            int((seg == s["id"]).sum()),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=keep_names + ["label", "score", "pixel_count"]
-            )
+                per_row.append([
+                    (id2label[s["label_id"]], s["score"], (seg == s["id"]).sum())
+                    for s in segments
+                ])
+            return explode(per_row, len(fields))
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(df, fields, make, backend, backend_opts, drop=[payload_col])
 
 
 def depth_estimate(
@@ -426,35 +323,21 @@ def depth_estimate(
     + summary stats of the formatted depth image (the full raster stays
     an executor-side intermediate — at scale you'd sink it to a binary
     column instead, same plumbing as image_to_image)."""
-    opts = backend_opts or {}
     cfg = config or SMALL_CONFIG
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema = T.StructType(
-        keep
-        + [
-            T.StructField("depth_h", T.IntegerType()),
-            T.StructField("depth_w", T.IntegerType()),
-            T.StructField("depth_mean", T.FloatType()),
-            T.StructField("depth_max", T.IntegerType()),
-        ]
-    )
-    keep_names = [f.name for f in keep]
+    fields = [
+        T.StructField("depth_h", T.IntegerType()),
+        T.StructField("depth_w", T.IntegerType()),
+        T.StructField("depth_mean", T.FloatType()),
+        T.StructField("depth_max", T.IntegerType()),
+    ]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-
-        be = get_backend(backend, **opts)
-        decode = _default_decode()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px, sizes = _decode_and_preprocess(pdf[payload_col], decode, cfg)
+    def make(be):
+        def step(pdf):
+            px, sizes = _pixels(pdf[payload_col], cfg)
             depth = be.depth_forward(px)  # [B, h, w]
-            rows = []
-            bases = _base_tuples(pdf, keep_names)
-            for i in range(len(pdf)):
-                h, w = sizes[i]
-                pred = interpolate(depth[i][None], h, w)[0]
+            stats = []
+            for (h, w), d in zip(sizes, depth):
+                pred = interpolate(d[None], h, w)[0]
                 mx = float(pred.max())
                 # guard the reference's unguarded 255/max (pipelines.rb:
                 # 1028): an all-zero depth map formats to zeros, not NaN
@@ -466,16 +349,12 @@ def depth_estimate(
                     if mx > 0
                     else np.zeros_like(pred, dtype=np.int64)
                 )
-                base = bases[i]
-                rows.append(
-                    base + (h, w, float(formatted.mean()), int(formatted.max()))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=keep_names + ["depth_h", "depth_w", "depth_mean", "depth_max"],
-            )
+                stats.append((h, w, float(formatted.mean()), formatted.max()))
+            return None, list(zip(*stats))
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(df, fields, make, backend, backend_opts, drop=[payload_col])
 
 
 def image_to_image(
@@ -488,46 +367,30 @@ def image_to_image(
     """Forward -> clamp(0,1)*255 round -> image bytes (reference
     pipelines.rb:990-1012). Output payload is the raw HWC uint8 buffer +
     dims (RawImage.from_array equivalent, utils/image.rb:100-114)."""
-    opts = backend_opts or {}
     # super-resolution models don't mean/std-normalize; stay in [0,1]
     cfg = dict(config) if config else {**SMALL_CONFIG, "do_normalize": False}
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema = T.StructType(
-        keep
-        + [
-            T.StructField("out_payload", T.BinaryType()),
-            T.StructField("out_h", T.IntegerType()),
-            T.StructField("out_w", T.IntegerType()),
-        ]
-    )
-    keep_names = [f.name for f in keep]
+    fields = [
+        T.StructField("out_payload", T.BinaryType()),
+        T.StructField("out_h", T.IntegerType()),
+        T.StructField("out_w", T.IntegerType()),
+    ]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
+    def make(be):
+        def step(pdf):
+            px, _ = _pixels(pdf[payload_col], cfg)
+            # Ruby half-away-from-zero rounding (pipelines.rb:1003), not
+            # np.round's half-to-even; inputs are clamped ≥ 0
+            img = np.floor(np.clip(be.image_to_image_forward(px), 0, 1) * 255 + 0.5)
+            hwc = img.astype(np.uint8).transpose(0, 2, 3, 1)  # [B, C, H, W] -> HWC
+            return None, [
+                [bytearray(im.tobytes()) for im in hwc],
+                [hwc.shape[1]] * len(hwc),
+                [hwc.shape[2]] * len(hwc),
+            ]
 
-        be = get_backend(backend, **opts)
-        decode = _default_decode()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px, _ = _decode_and_preprocess(pdf[payload_col], decode, cfg)
-            out_px = be.image_to_image_forward(px)  # [B, C, 2H, 2W]
-            rows = []
-            bases = _base_tuples(pdf, keep_names)
-            for i in range(len(pdf)):
-                # Ruby half-away-from-zero rounding (pipelines.rb:1003),
-                # not np.round's half-to-even; inputs are clamped ≥ 0
-                img = np.floor(np.clip(out_px[i], 0, 1) * 255 + 0.5).astype(np.uint8)
-                hwc = img.transpose(1, 2, 0)
-                base = bases[i]
-                rows.append(
-                    base + (bytearray(hwc.tobytes()), hwc.shape[0], hwc.shape[1])
-                )
-            yield pd.DataFrame(
-                rows, columns=keep_names + ["out_payload", "out_h", "out_w"]
-            )
+        return step
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+    return map_batches(df, fields, make, backend, backend_opts, drop=[payload_col])
 
 
 def document_qa(
@@ -551,42 +414,28 @@ def document_qa(
     the regex parse is exercised for real; the full decoded string —
     prompt + generation + closing tag — is what batch_decode of
     (decoder_input_ids ++ generated ++ eos) yields upstream."""
-    import re
-
-    opts = backend_opts or {}
     cfg = config or SMALL_CONFIG
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema = T.StructType(keep + [T.StructField("answer", T.StringType())])
-    keep_names = [f.name for f in keep]
     task_prompt = f"<s_docvqa><s_question>{question}</s_question><s_answer>"
     answer_re = re.compile(r"<s_answer>(.*?)</s_answer>")
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-        from informers_spark.pipelines.generate import greedy_decode
-
-        be = get_backend(backend, **opts)
-        decode = _default_decode()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px, _ = _decode_and_preprocess(pdf[payload_col], decode, cfg)
+    def make(be):
+        def step(pdf):
+            px, _ = _pixels(pdf[payload_col], cfg)
             # decoder context = image tokens + the question (the pixel
             # cross-attention + decoder_input_ids of the Donut forward)
-            contexts = [
-                c + " " + question for c in be.caption_contexts(px)
-            ]
-            gens = greedy_decode(be, contexts, max_new_tokens=max_new_tokens)
+            contexts = [c + " " + question for c in be.caption_contexts(px)]
             answers = []
-            for g in gens:
-                decoded = task_prompt + g.strip() + "</s_answer>"
-                m = answer_re.search(decoded)
+            for g in greedy_decode(be, contexts, max_new_tokens=max_new_tokens):
+                m = answer_re.search(task_prompt + g.strip() + "</s_answer>")
                 answers.append(m.group(1).strip() if m else None)
-            out = pdf[keep_names].copy()
-            out["answer"] = answers
-            yield out
+            return None, [answers]
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        return step
+
+    return map_batches(
+        df, [T.StructField("answer", T.StringType())], make,
+        backend, backend_opts, drop=[payload_col],
+    )
 
 
 def image_to_text(
@@ -604,34 +453,25 @@ def image_to_text(
     the shared greedy decode loop (pipelines/generate.py) extends it —
     one batched forward per step, reference loop semantics, with the
     standard logits processors wired like generate_kwargs upstream."""
-    opts = backend_opts or {}
     cfg = config or SMALL_CONFIG
-    keep = [f for f in df.schema.fields if f.name != payload_col]
-    schema = T.StructType(keep + [T.StructField("generated_text", T.StringType())])
-    keep_names = [f.name for f in keep]
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from informers_spark.backend.base import get_backend
-        from informers_spark.functions.generation import build_processors
-        from informers_spark.pipelines.generate import greedy_decode
-
-        be = get_backend(backend, **opts)
-        decode = _default_decode()
+    def make(be):
         procs = build_processors(
             eos_token_id=len(be.GEN_VOCAB) - 1,
             min_length=min_length,
             no_repeat_ngram_size=no_repeat_ngram_size,
         )
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            px, _ = _decode_and_preprocess(pdf[payload_col], decode, cfg)
-            contexts = be.caption_contexts(px)
-            texts = greedy_decode(
-                be, contexts, max_new_tokens=max_new_tokens, procs=procs
-            )
-            out = pdf[keep_names].copy()
-            out["generated_text"] = [t.strip() for t in texts]
-            yield out
 
-    return spread_scan(df).mapInPandas(infer, schema=schema)
+        def step(pdf):
+            px, _ = _pixels(pdf[payload_col], cfg)
+            captions = greedy_decode(
+                be, be.caption_contexts(px), max_new_tokens=max_new_tokens, procs=procs
+            )
+            return None, [[t.strip() for t in captions]]
+
+        return step
+
+    return map_batches(
+        df, [T.StructField("generated_text", T.StringType())], make,
+        backend, backend_opts, drop=[payload_col],
+    )

@@ -40,17 +40,12 @@ from informers_spark.sources.warehouse import Warehouse
 TRIPLE_COLS = ["subj", "pred", "obj", "score", "src_sha256"]
 
 
-def salt_partition(
-    df: DataFrame,
-    partitions: int | None,
-    *keys: str,
-    salt_buckets: int | None = None,
-) -> DataFrame:
+def salt_partition(df: DataFrame, *keys: str) -> DataFrame:
     """Repartition by (keys..., salt) — explicit skew-neutralizer: a hot
-    key's rows spread over up to `salt_buckets` tasks instead of one.
-    salt_buckets defaults to 2× the cluster's default parallelism so the
-    fan-out tracks cluster size (a hard-coded 64 would cap a hot repo at
-    64 tasks on a 1000-executor cluster). The salt MUST be
+    key's rows spread over up to 2× the cluster's default parallelism
+    tasks instead of one, so the fan-out tracks cluster size (a
+    hard-coded 64 would cap a hot repo at 64 tasks on a 1000-executor
+    cluster). The salt MUST be
     (a) row-distinct, not a function of the keys alone (hashing the keys
     again yields exactly the distribution of repartition(keys) — a no-op),
     and (b) DETERMINISTIC: a nondeterministic shuffle key (rand,
@@ -61,18 +56,13 @@ def salt_partition(
     co-locate (bounded, rare), everything else spreads. The partition
     COUNT is left to AQE (user-fixed counts disable adaptive coalescing,
     which blows up output file counts at high core counts and
-    under-splits at scale); pass `partitions` only to override."""
-    if salt_buckets is None:
-        salt_buckets = df.sparkSession.sparkContext.defaultParallelism * 2
+    under-splits at scale)."""
+    salt_buckets = df.sparkSession.sparkContext.defaultParallelism * 2
     salted = df.withColumn(
         "_salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(int(salt_buckets))),
+        F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_buckets)),
     )
-    if partitions:
-        out = salted.repartition(partitions, *keys, "_salt")
-    else:
-        out = salted.repartition(*keys, "_salt")
-    return out.drop("_salt")
+    return salted.repartition(*keys, "_salt").drop("_salt")
 
 
 def build_kg(
@@ -82,8 +72,6 @@ def build_kg(
     backend: str = "auto",
     link_threshold: float = 0.75,
     resume: bool = True,
-    partitions: int | None = None,
-    salt_buckets: int | None = None,
 ) -> dict:
     """Run (or resume) the full KG job. Returns stage metrics."""
     wh = Warehouse(spark, warehouse_root)
@@ -112,7 +100,7 @@ def build_kg(
     # bound committer, flip rebalance=True so tasks hold one-lang slices
     files_t = stage(
         "files",
-        lambda: salt_partition(files, partitions, "repo", "path", salt_buckets=salt_buckets),
+        lambda: salt_partition(files, "repo", "path"),
         partition_by=["lang"],
         rebalance=False,
     )

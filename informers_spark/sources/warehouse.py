@@ -49,14 +49,12 @@ class Warehouse:
         name: str,
         partition_by: list[str] | None = None,
         mode: str = "overwrite",
-        out_partitions: int | None = None,
         rebalance: bool = True,
     ) -> dict:
         """Output file sizing: by default an AQE REBALANCE hint sizes the
         final partitions to advisoryPartitionSizeInBytes regardless of
         cluster width — commit metadata cost scales with file count, and
-        one-file-per-task-slot inverts scaling at high core counts.
-        out_partitions forces an exact count instead."""
+        one-file-per-task-slot inverts scaling at high core counts."""
         from pyspark.sql import Observation
 
         t0 = time.time()
@@ -68,9 +66,7 @@ class Warehouse:
             os.remove(self._path(f"{name}._manifest.json"))
         except FileNotFoundError:
             pass
-        if out_partitions:
-            df = df.repartition(out_partitions)
-        elif rebalance:
+        if rebalance:
             # rebalance by the partition columns so each output partition
             # holds one partition-value slice (otherwise every task writes
             # a file per partition value: tasks x values files)

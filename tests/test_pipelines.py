@@ -182,3 +182,17 @@ def test_ner_aggregation_none_emits_token_index(spark):
     assert none_rows[0]["index"] == 0 and none_rows[0].entity_group.startswith("B-")
     simple_rows = ner(df, backend="hash").collect()
     assert "index" not in simple_rows[0].asDict()
+
+
+def test_auto_backend_resolves_without_silent_fallback(monkeypatch):
+    # "auto" means onnx exactly when a model dir is configured; a
+    # configured dir that cannot load raises instead of quietly serving
+    # hash-backend outputs under an onnx run
+    from informers_spark.backend.base import get_backend
+    from informers_spark.backend.hash_backend import HashBackend
+
+    monkeypatch.setenv("INFORMERS_SPARK_MODEL_DIR", "/nonexistent/informers-model")
+    with pytest.raises((ImportError, RuntimeError)):
+        get_backend("auto")
+    monkeypatch.delenv("INFORMERS_SPARK_MODEL_DIR")
+    assert isinstance(get_backend("auto"), HashBackend)

@@ -79,28 +79,6 @@ def test_q5_broadcasts_dims(spark):
     assert plan.count("BroadcastHashJoin") >= 2
 
 
-def test_inference_udf_spreads_underpartitioned_scan(spark):
-    # embed over a single-row-group scan: the ONLY exchange between scan
-    # and UDF is the conditional spread_scan round-robin rebalance (the
-    # sf parquet files are one row group → a bare scan would serialize
-    # the whole inference chain onto one core); an input that is already
-    # parallel gets NO additional exchange (spread_scan no-ops on
-    # derived plans)
-    from informers_spark.pipelines.embed import embed
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    plan = _plan(embed(docs, backend="hash"))
-    seg = _scan_to_udf(plan)
-    assert "Scan parquet" in seg
-    args = _exchange_args(plan, seg)
-    assert len(args) == 1 and "RoundRobinPartitioning" in args[0]
-
-    par = spark.sparkContext.defaultParallelism
-    seg2 = _scan_to_udf(_plan(embed(docs.repartition(par), backend="hash")))
-    # exactly the caller's own repartition — no second exchange stacked on
-    assert seg2.count("Exchange") == 1
-
-
 def test_knn_broadcasts_queries(spark):
     from informers_spark.queries import q_knn_bruteforce
 
@@ -124,18 +102,6 @@ def test_knn_lsh_broadcasts_query_blocks(spark):
     plan = _plan(q_knn_lsh(spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan  # query side is broadcast
-
-
-def test_generate_udf_spreads_underpartitioned_scan(spark):
-    from informers_spark.pipelines.generate import generate_text
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    plan = _plan(generate_text(docs, backend="hash"))
-    seg = _scan_to_udf(plan)
-    assert "Scan parquet" in seg
-    # one round-robin rebalance (spread_scan) and nothing else
-    args = _exchange_args(plan, seg)
-    assert len(args) == 1 and "RoundRobinPartitioning" in args[0]
 
 
 def test_vision_query_prunes_scan_and_avoids_exchange(spark):
@@ -175,23 +141,19 @@ def test_knn_ivf_assignment_is_map_only_and_broadcasts_queries(spark):
 
 
 def test_salt_buckets_knob_reaches_repartition_expression(spark):
-    # the KG hot-repo salt fan-out must track the requested bucket count
-    # (default: 2x cluster parallelism), not a hard-coded constant — at
-    # 1000 executors a fixed 64 caps a hot repo at 64 tasks
+    # the KG hot-repo salt fan-out tracks the cluster (2x default
+    # parallelism), not a hard-coded constant — at 1000 executors a fixed
+    # 64 caps a hot repo at 64 tasks
     from informers_spark.plans.kg import salt_partition
 
     df = spark.range(0, 100).select(
         F.col("id").cast("string").alias("repo"), F.col("id").alias("path")
     )
-    for buckets in (7, 256):
-        plan = _plan(salt_partition(df, None, "repo", salt_buckets=buckets))
-        assert f"pmod(xxhash64(repo" in plan and f", {buckets})" in plan, plan
-    # default: 2x defaultParallelism
     default = spark.sparkContext.defaultParallelism * 2
-    plan = _plan(salt_partition(df, None, "repo"))
-    assert f", {default})" in plan, plan
+    plan = _plan(salt_partition(df, "repo"))
+    assert "pmod(xxhash64(repo" in plan and f", {default})" in plan, plan
     # salt is dropped before output: same rows either way
-    assert salt_partition(df, None, "repo", salt_buckets=7).columns == ["repo", "path"]
+    assert salt_partition(df, "repo").columns == ["repo", "path"]
 
 
 def _minhash_blocker(spark):
@@ -278,15 +240,45 @@ def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     spark.sql("DROP TABLE IF EXISTS bk_embeddings")
 
 
-def test_embed_pooling_none_runs_on_spread_scan(spark):
-    # the token-level feature-extraction path (pooling "none") is one
-    # mapInPandas over the (conditionally rebalanced) scan — exactly the
-    # spread_scan round-robin exchange, no hash shuffle
+def _embed_udf(docs):
     from informers_spark.pipelines.embed import embed
 
+    return embed(docs, backend="hash")
+
+
+def _embed_tokens_udf(docs):
+    # the token-level feature-extraction path (pooling "none")
+    from informers_spark.pipelines.embed import embed
+
+    return embed(docs, pooling="none", do_normalize=False, backend="hash")
+
+
+def _generate_udf(docs):
+    from informers_spark.pipelines.generate import generate_text
+
+    return generate_text(docs, backend="hash")
+
+
+@pytest.mark.parametrize(
+    "pipeline",
+    [_embed_udf, _embed_tokens_udf, _generate_udf],
+    ids=["embed", "embed_pooling_none", "generate"],
+)
+def test_inference_udf_spreads_underpartitioned_scan(spark, pipeline):
+    # every pipeline runs through the one Arrow-batch shell: over a
+    # single-row-group scan the ONLY exchange between scan and UDF is the
+    # conditional spread_scan round-robin rebalance (the sf parquet files
+    # are one row group → a bare scan would serialize the whole inference
+    # chain onto one core); an input that is already parallel gets NO
+    # additional exchange (spread_scan no-ops on derived plans)
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    plan = _plan(embed(docs, pooling="none", do_normalize=False, backend="hash"))
+    plan = _plan(pipeline(docs))
     seg = _scan_to_udf(plan)
     assert "Scan parquet" in seg
     args = _exchange_args(plan, seg)
     assert len(args) == 1 and "RoundRobinPartitioning" in args[0]
+
+    par = spark.sparkContext.defaultParallelism
+    seg2 = _scan_to_udf(_plan(pipeline(docs.repartition(par))))
+    # exactly the caller's own repartition — no second exchange stacked on
+    assert seg2.count("Exchange") == 1

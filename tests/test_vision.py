@@ -5,6 +5,7 @@ behavior tests on the deterministic backend."""
 import numpy as np
 import pytest
 
+from informers_spark import api
 from informers_spark.functions import vision as V
 from informers_spark.functions.kernels import softmax
 
@@ -322,16 +323,72 @@ def test_api_dispatches_all_vision_audio_tasks():
         api.pipeline("automatic-speech-recognition")
 
 
-def test_vision_pipelines_handle_empty_input(spark):
-    # empty scan partition -> UDFs must yield nothing without schema
-    # inference crashes (the resumable-warehouse empty-input contract)
-    from informers_spark.pipelines.audio import audio_classify
-    from informers_spark.pipelines.vision import image_classify, object_detect
+_LABELS = ["label", "score"]
+_RANKED = ["label", "score", "rank"]
+_BOXES = ["label", "score", "xmin", "ymin", "xmax", "ymax"]
+_GENERATED = ["generated_text"]
 
-    empty = _media(spark, 4).filter("doc_id < 0")
-    assert image_classify(empty, top_k=3, backend="hash").count() == 0
-    assert object_detect(empty, backend="hash").count() == 0
-    assert audio_classify(empty, backend="hash").count() == 0
+# task -> (required call options, columns the task appends); media tasks
+# drop the payload column, text tasks keep every input column
+_EMPTY_INPUT_CASES = {
+    "text-classification": ({}, _LABELS),
+    "token-classification": ({}, ["entity_group", "word", "score", "start", "end"]),
+    "question-answering": ({}, ["answer", "qa_score", "answer_start", "answer_end"]),
+    "fill-mask": ({}, ["token_str", "fm_score", "sequence"]),
+    "zero-shot-classification": ({"labels": ["cat", "dog"]}, ["candidate_label", "score"]),
+    "feature-extraction": ({}, ["embedding"]),
+    "embedding": ({}, ["embedding"]),
+    "reranking": ({}, ["score", "rank"]),
+    "text2text-generation": ({}, _GENERATED),
+    "summarization": ({}, _GENERATED),
+    "translation": ({}, _GENERATED),
+    "text-generation": ({}, _GENERATED),
+    "image-classification": ({}, _LABELS),
+    "image-feature-extraction": ({}, ["features"]),
+    "zero-shot-image-classification": ({"candidate_labels": ["cat", "dog"]}, _RANKED),
+    "object-detection": ({}, _BOXES),
+    "zero-shot-object-detection": ({"candidate_labels": ["cat", "dog"]}, _BOXES),
+    "image-segmentation": ({}, ["label", "score", "pixel_count"]),
+    "depth-estimation": ({}, ["depth_h", "depth_w", "depth_mean", "depth_max"]),
+    "image-to-image": ({}, ["out_payload", "out_h", "out_w"]),
+    "image-to-text": ({}, _GENERATED),
+    "document-question-answering": ({"question": "total?"}, ["answer"]),
+    "audio-classification": ({}, _RANKED),
+    "zero-shot-audio-classification": ({"candidate_labels": ["dog", "rain"]}, _LABELS),
+    "text-to-audio": ({}, ["audio", "sampling_rate", "n_samples"]),
+}
+
+
+# tasks that read the payload column and drop it from their output
+_MEDIA_TASKS = {
+    "image-classification", "image-feature-extraction",
+    "zero-shot-image-classification", "object-detection",
+    "zero-shot-object-detection", "image-segmentation", "depth-estimation",
+    "image-to-image", "image-to-text", "document-question-answering",
+    "audio-classification", "zero-shot-audio-classification",
+}
+
+
+@pytest.mark.parametrize("task", sorted(api.SUPPORTED_TASKS))
+def test_vision_pipelines_handle_empty_input(spark, task):
+    # empty scan partition -> every pipeline yields nothing, with its
+    # declared schema and no schema-inference crash (the
+    # resumable-warehouse empty-input contract)
+    from pyspark.sql import functions as F
+
+    kwargs, added = _EMPTY_INPUT_CASES[task]
+    empty = (
+        _media(spark, 4)
+        .withColumn("text", F.lit("a [MASK] b"))
+        .withColumn("query", F.lit("q"))
+        .withColumn("question", F.lit("who?"))
+        .withColumn("context", F.lit("ctx"))
+        .filter("doc_id < 0")
+    )
+    out = api.pipeline(task, backend="hash")(empty, **kwargs)
+    kept = [c for c in empty.columns if not (task in _MEDIA_TASKS and c == "payload")]
+    assert out.columns == kept + added
+    assert out.collect() == []
 
 
 def test_validate_media_filters_corrupt_payloads(spark):
