@@ -2,17 +2,20 @@
 propagation on a DataFrame edge list (north-rule contract).
 
 Each iteration: labels ⋈ edges → per-node min neighbor label → keep the
-smaller of (own, best neighbor). localCheckpoint() every iteration cuts
-the lineage (a star-shaped hot component otherwise explodes the plan —
-SURVEY.md §7.4), and the loop stops at fixpoint (0 changed labels) or
-max_iter. Convergence is O(graph diameter) iterations; for same_as graphs
-(small dense clusters) that is ~2-4.
+smaller of (own, best neighbor) → pointer-jump. The rounds run on
+graph.iterate, the one iterative-graph loop: it localCheckpoint()s every
+round, which cuts the lineage (a star-shaped hot component otherwise
+explodes the plan — SURVEY.md §7.4), and stops at fixpoint (no label
+`changed`) or max_iter. Convergence is O(graph diameter) iterations;
+for same_as graphs (small dense clusters) that is ~2-4.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from informers_spark.operators.graph import iterate
 
 
 def _union_find_components(edges_rows, node_type, spark) -> "DataFrame":
@@ -103,17 +106,8 @@ def connected_components(
         # full-shuffle distinct re-execute once per pointer-jumping round
         .localCheckpoint()
     )
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
-        .localCheckpoint()
-    )
 
-    converged = False
-    iterations = 0
-    for _ in range(max_iter):
-        iterations += 1
+    def step(labels):
         # 1) hook: take the min label over neighbors
         prop = (
             sym.join(labels, sym.u == labels.node)
@@ -135,22 +129,18 @@ def connected_components(
         parent = labels.select(
             F.col("node").alias("component"), F.col("component").alias("jump")
         )
-        new_labels = (
-            hooked.join(parent, "component", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("jump"), F.col("component"))
-                ).alias("component"),
-                "old",
-            )
-            .localCheckpoint()
+        jumped = F.least(F.col("component"), F.coalesce(F.col("jump"), F.col("component")))
+        return hooked.join(parent, "component", "left").select(
+            "node", jumped.alias("component"), (jumped != F.col("old")).alias("changed")
         )
-        changed = new_labels.filter(F.col("component") != F.col("old")).limit(1).count()
-        labels = new_labels.drop("old")
-        if changed == 0:
-            converged = True
-            break
+
+    labels = (
+        sym.select(F.col("u").alias("node"))
+        .distinct()
+        .withColumn("component", F.col("node"))
+        .localCheckpoint()
+    )
+    labels, iterations, converged = iterate(labels, step, max_iter, changed="changed")
     if metrics is not None:
         metrics["iterations"] = iterations
         metrics["converged"] = converged
@@ -161,4 +151,4 @@ def connected_components(
             "wrong; raise max_iter (pointer-jumping needs ~log2(diameter) "
             "iterations) or pass require_convergence=False to accept partial labels"
         )
-    return labels
+    return labels.select("node", "component")

@@ -16,9 +16,10 @@ Scale shape (the part that must survive 100 TB):
   driver-side edge materialization. Hot destination nodes (every KG has
   celebrity entities) are absorbed by partial aggregation; hot source
   nodes by AQE skew-join splitting.
-- Iterative loops `localCheckpoint()` each round, exactly like
-  connected_components, so the lineage stays O(1) instead of O(iters)
-  and a star-shaped hot component cannot explode the plan.
+- Every iterative loop here and in canon runs on the one driver,
+  `iterate`: it `localCheckpoint()`s each round, so the lineage stays
+  O(1) instead of O(iters) and a star-shaped hot component cannot
+  explode the plan; its limit(1) probe is the only fixpoint test.
 - The only driver-side values are single-row scalars (node count, the
   dangling-mass probe) — the same class of bounded action as the CC
   convergence count; never an O(nodes) collect.
@@ -34,6 +35,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def iterate(state: DataFrame, step, rounds: int, changed: str | None = None):
+    """The one iterative-graph loop: `state = step(state).localCheckpoint()`
+    up to `rounds` times → (state, rounds_run, at_fixpoint). When
+    `changed` names a boolean column of the new state, it stops after the
+    first round in which no row has it set — a limit(1) probe, never a
+    full count."""
+    for i in range(rounds):
+        state = step(state).localCheckpoint()
+        if changed is not None and not state.filter(F.col(changed)).limit(1).collect():
+            return state, i + 1, True
+    return state, rounds, False
 
 
 def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -123,11 +137,10 @@ def _rank_walk(
     +0.0 to the out-weight). Seeds join it as zero-weight rows flagged
     `seed`, so the universe is endpoints ∪ seeds with no second shuffle.
     Out-weights are joined onto edges ONCE before the loop. Per
-    iteration: one shuffle joining ranks onto the (src, dst, w, od) edge
-    table by src, one map-side-combined groupBy(dst), one broadcast of
-    the 1-row dangling aggregate (the dangling flag rides the rank
-    table, so it is a filter, not an anti-join), then localCheckpoint
-    to pin the iterate and cut lineage."""
+    `iterate` round: one shuffle joining ranks onto the (src, dst, w, od)
+    edge table by src, one map-side-combined groupBy(dst) and one
+    broadcast of the 1-row dangling aggregate (the dangling flag rides
+    the rank table, so it is a filter, not an anti-join)."""
     w_col = F.col(weight).cast("double") if weight is not None else F.lit(1.0)
     both = F.array(
         F.struct(F.col(src).alias("node"), w_col.alias("w")),
@@ -174,8 +187,7 @@ def _rank_walk(
         .localCheckpoint()  # scanned every iteration
     )
 
-    ranks = state.withColumn("rank", r0).localCheckpoint()
-    for _ in range(iterations):
+    def step(ranks):
         contrib = (
             edges_w.join(ranks, F.col("e_src") == F.col("node"))
             .groupBy(F.col("e_dst").alias("node"))
@@ -187,7 +199,7 @@ def _rank_walk(
         dangling = ranks.filter(~F.col("has_out")).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass")
         )
-        ranks = (
+        return (
             state.join(contrib, "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -197,8 +209,9 @@ def _rank_walk(
                     + F.lit(damping) * (F.coalesce("contrib", F.lit(0.0)) + share)
                 ).alias("rank"),
             )
-            .localCheckpoint()
         )
+
+    ranks, _, _ = iterate(state.withColumn("rank", r0).localCheckpoint(), step, iterations)
     if metrics is not None:
         metrics.update(iterations=iterations, **sizes)
     return ranks.select("node", "rank")
@@ -361,34 +374,37 @@ def label_propagation(
     bipartite structures — a bounded iteration count is the standard
     treatment for that too).
 
-    Per iteration: one equi-join (labels onto the doubled edge list),
-    one map-side-combined groupBy((node, label)) count, one per-node
-    window to pick (max count, min label), then localCheckpoint. The
-    window partitions by node with ≤ degree rows per node — bounded by
-    the hottest node's degree, same skew profile as the degree
-    computation itself."""
+    Per `iterate` round: one equi-join (labels onto the doubled edge
+    list), one map-side-combined groupBy((node, label)) count and one
+    per-node window to pick (max count, min label). The window
+    partitions by node with ≤ degree rows per node — bounded by the
+    hottest node's degree, same skew profile as the degree computation
+    itself."""
     und = (
         edges.select(F.col(src).alias("nbr"), F.col(dst).alias("node"))
         .unionAll(edges.select(F.col(dst).alias("nbr"), F.col(src).alias("node")))
         .filter(F.col("nbr") != F.col("node"))
         .localCheckpoint()  # scanned every iteration
     )
-    labels = (
-        und.select("node").distinct().withColumn("label", F.col("node")).localCheckpoint()
-    )
     w = Window.partitionBy("node").orderBy(F.desc("cnt"), F.asc("label"))
-    for _ in range(iterations):
+
+    def step(labels):
         counts = (
             und.join(labels.withColumnRenamed("node", "nbr"), "nbr")
             .groupBy("node", "label")
             .agg(F.count("*").alias("cnt"))
         )
-        labels = (
+        return (
             counts.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("node", "label")
-            .localCheckpoint()
         )
+
+    labels, _, _ = iterate(
+        und.select("node").distinct().withColumn("label", F.col("node")).localCheckpoint(),
+        step,
+        iterations,
+    )
     if metrics is not None:
         metrics["iterations"] = iterations
     return labels
@@ -453,11 +469,12 @@ def shortest_paths(
     Frontier form: round t relaxes only the nodes whose distance
     improved in round t-1 — same dist_t as relaxing every node, since a
     node that did not improve has already offered its distance to every
-    neighbour. Per round: frontier ⋈ edges by src, a map-side-combined
-    groupBy(dst) MIN, a left join on the current distances keeping
-    strict improvements (the next frontier), then an anti-join + union
-    folding them in. A bounded limit(1) probe exits once a round
-    improves nothing; `metrics["rounds"]` counts the rounds that did."""
+    neighbour. The `iterate` state is one (node, dist, front) table. Per
+    round: front rows ⋈ edges by src, a map-side-combined groupBy(dst)
+    MIN, and a full-outer merge onto the state that keeps the smaller
+    distance and sets `front` on strict improvements. The loop exits
+    after a round that improves nothing; `metrics["rounds"]` counts the
+    rounds that did."""
     if k < 0:
         raise ValueError(f"need k >= 0, got {k}")
     w_col = F.col(weight).cast("double") if weight is not None else F.lit(1.0)
@@ -465,38 +482,34 @@ def shortest_paths(
     if weight is not None and ew.filter(F.col("w") < 0).limit(1).collect():
         raise ValueError("shortest_paths requires non-negative edge weights")
     ew = ew.localCheckpoint()  # scanned every iteration
-    dists = (
+
+    def step(dists):
+        relaxed = (
+            ew.join(dists.filter("front"), F.col("e_src") == F.col("node"))
+            .groupBy(F.col("e_dst").alias("node"))
+            .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
+        )
+        # strict improvements become the next round's frontier
+        front = F.col("nd").isNotNull() & (F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
+        return (
+            dists.drop("front")
+            .join(relaxed, "node", "full_outer")
+            .select(
+                "node",
+                F.when(front, F.col("nd")).otherwise(F.col("dist")).alias("dist"),
+                front.alias("front"),
+            )
+        )
+
+    seeds0 = (
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         .distinct()
-        .withColumn("dist", F.lit(0.0))
-        .localCheckpoint()
+        .select("node", F.lit(0.0).alias("dist"), F.lit(True).alias("front"))
     )
-    frontier = dists
-    rounds = 0
-    for _ in range(k):
-        relaxed = (
-            ew.join(frontier, F.col("e_src") == F.col("node"))
-            .groupBy(F.col("e_dst").alias("node"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("dist"))
-        )
-        frontier = (
-            relaxed.alias("n")
-            .join(dists.alias("o"), "node", "left")
-            .filter(F.col("o.dist").isNull() | (F.col("n.dist") < F.col("o.dist")))
-            .select("node", "n.dist")
-            .localCheckpoint()
-        )
-        if not frontier.limit(1).collect():  # bounded probe, never a full count
-            break
-        rounds += 1
-        dists = (
-            dists.join(frontier.select("node"), "node", "left_anti")
-            .unionAll(frontier)
-            .localCheckpoint()
-        )
+    dists, rounds_run, at_fixpoint = iterate(seeds0.localCheckpoint(), step, k, changed="front")
     if metrics is not None:
-        metrics["rounds"] = rounds
-    return dists
+        metrics["rounds"] = rounds_run - at_fixpoint
+    return dists.select("node", "dist")
 
 
 def shortest_paths_oracle_sql(

@@ -23,6 +23,7 @@ skew-join for the joins.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -65,6 +66,23 @@ def salt_partition(df: DataFrame, *keys: str) -> DataFrame:
     return salted.repartition(*keys, "_salt").drop("_salt")
 
 
+def _overlap(*legs):
+    """Run the zero-argument callables `legs` from one driver thread each
+    and return their results in order. Spark actions are only sequential
+    because the driver calls them sequentially; from separate threads,
+    the second job's tasks back-fill executors as the first one's tail
+    drains. Every leg runs to its end; one failure re-raises that error,
+    several raise an ExceptionGroup of them."""
+    with ThreadPoolExecutor(len(legs)) as pool:
+        futures = [pool.submit(leg) for leg in legs]
+    errors = [f.exception() for f in futures if f.exception() is not None]
+    if len(errors) == 1:
+        raise errors[0]
+    if errors:
+        raise ExceptionGroup("overlapped stages failed", errors)
+    return [f.result() for f in futures]
+
+
 def build_kg(
     spark: SparkSession,
     files: DataFrame,
@@ -77,13 +95,16 @@ def build_kg(
     wh = Warehouse(spark, warehouse_root)
     metrics: dict[str, dict] = {}
 
-    def stage(name: str, make, partition_by=None, rebalance=True):
+    def stage(name: str, make, partition_by=None, rebalance=True, extra=None):
+        """`extra`: a dict `make` fills, merged into the manifest."""
         t0 = time.time()
         if resume and wh.is_complete(name):
             metrics[name] = {**(wh.manifest(name) or {}), "resumed": True}
             return wh.read(name)
         df = make()
         m = wh.write(df, name, partition_by=partition_by, rebalance=rebalance)
+        if extra:
+            m = wh.annotate(name, extra)
         m["stage_wall_sec"] = round(time.time() - t0, 3)
         metrics[name] = m
         return wh.read(name)
@@ -106,37 +127,10 @@ def build_kg(
     )
 
     # 2+3. mentions (NER) and embeddings — both map-only inference over
-    # files_t with no dependency on each other, so they run from two
-    # driver threads (guide §2.6: actions are only sequential because
-    # the driver calls them sequentially): the second job's tasks
-    # back-fill executors as the first one's tail drains. No shuffle
-    # before OR after either stage: the UDF output inherits the scan's
-    # split sizing, so a pre-write REBALANCE would only add a full
-    # shuffle of the data. Same thread pattern as the nodes/edges
-    # materialization below.
-    import threading
-
-    errors: list[BaseException] = []
-    stage_out: dict[str, DataFrame] = {}
-
-    def run_stage(name, make, partition_by=None, rebalance=True):
-        try:
-            stage_out[name] = stage(
-                name, make, partition_by=partition_by, rebalance=rebalance
-            )
-        except BaseException as e:  # surface thread failures to the caller
-            errors.append(e)
-
-    def _join_threads(threads, what):
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if len(errors) == 1:
-            raise errors[0]
-        if errors:
-            raise ExceptionGroup(f"parallel {what} stages failed", errors)
-
+    # files_t with no dependency on each other, so they overlap. No
+    # shuffle before OR after either stage: the UDF output inherits the
+    # scan's split sizing, so a pre-write REBALANCE would only add a full
+    # shuffle of the data.
     def make_embeddings():
         return embed(
             files_t.select(
@@ -147,23 +141,12 @@ def build_kg(
             backend=backend,
         ).drop("text")
 
-    _join_threads(
-        [
-            threading.Thread(
-                target=run_stage,
-                args=("mentions", lambda: mentions_table(files_t, backend=backend)),
-                kwargs={"rebalance": False},
-            ),
-            threading.Thread(
-                target=run_stage,
-                args=("embeddings", make_embeddings),
-                kwargs={"rebalance": False},
-            ),
-        ],
-        "mentions/embeddings",
+    mentions, _ = _overlap(
+        lambda: stage(
+            "mentions", lambda: mentions_table(files_t, backend=backend), rebalance=False
+        ),
+        lambda: stage("embeddings", make_embeddings, rebalance=False),
     )
-    mentions = stage_out["mentions"]
-    embeddings = stage_out["embeddings"]  # noqa: F841  (read for resume parity)
 
     # 4. raw triples: structural ∪ mentions
     def make_raw():
@@ -196,8 +179,8 @@ def build_kg(
 
     # 4 ∥ (5 → 6): triples_raw needs only mentions; the linking →
     # canonicalization chain needs only mentions too and is the longer
-    # leg — overlapping them hides the shorter write entirely (same
-    # guide §2.6 back-fill rationale as above).
+    # leg — overlapping them hides the shorter write entirely (the
+    # `_overlap` back-fill rationale).
     # triples_raw rebalance=False: the stage ENDS in a shuffle
     # aggregate, so AQE's coalescing already sizes the output
     # partitions to the advisory target — the REBALANCE hint only
@@ -208,33 +191,20 @@ def build_kg(
     # rebalance there too.
     cc_metrics: dict = {}
 
-    def run_link_chain():
-        try:
-            same_as = stage("same_as", make_same_as, rebalance=False)
-            # 6. canonicalization (convergence surfaces in stage
-            # metrics; a non-converged run raises inside the operator
-            # rather than emitting silently-wrong same_as labels)
-            stage_out["components"] = stage(
-                "components", lambda: connected_components(same_as, metrics=cc_metrics)
-            )
-        except BaseException as e:
-            errors.append(e)
+    def link_chain():
+        same_as = stage("same_as", make_same_as, rebalance=False)
+        # 6. canonicalization (convergence and the size-tier path land in
+        # the stage manifest; a non-converged run raises inside the
+        # operator rather than emitting silently-wrong same_as labels)
+        return stage(
+            "components",
+            lambda: connected_components(same_as, metrics=cc_metrics),
+            extra=cc_metrics,
+        )
 
-    _join_threads(
-        [
-            threading.Thread(
-                target=run_stage,
-                args=("triples_raw", make_raw),
-                kwargs={"rebalance": False},
-            ),
-            threading.Thread(target=run_link_chain),
-        ],
-        "triples_raw/linking",
+    triples_raw, components = _overlap(
+        lambda: stage("triples_raw", make_raw, rebalance=False), link_chain
     )
-    triples_raw = stage_out["triples_raw"]
-    components = stage_out["components"]
-    if cc_metrics:
-        metrics["components"].update(cc_metrics)
 
     # 7. materialize — one logical phase, three tables. The triples write
     # commits first (nodes/edges derive from its stored output, keeping
@@ -276,16 +246,10 @@ def build_kg(
             F.col("subj").alias("src"), F.col("obj").alias("dst"), "pred", "score"
         )
 
-    _join_threads(
-        [
-            # nodes ends in a shuffle (distinct) — AQE sizing applies,
-            # skip the redundant rebalance exchange (same reasoning as
-            # triples_raw)
-            threading.Thread(
-                target=run_stage, args=("nodes", make_nodes), kwargs={"rebalance": False}
-            ),
-            threading.Thread(target=run_stage, args=("edges", make_edges, ["pred"])),
-        ],
-        "nodes/edges",
+    # nodes ends in a shuffle (distinct) — AQE sizing applies, skip the
+    # redundant rebalance exchange (same reasoning as triples_raw)
+    _overlap(
+        lambda: stage("nodes", make_nodes, rebalance=False),
+        lambda: stage("edges", make_edges, ["pred"]),
     )
     return metrics

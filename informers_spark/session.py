@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """min(8g, host memory / 4), at least 1g; host memory is physical
+    memory capped by a cgroup v2 limit."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as fh:
+            mem = min(mem, int(fh.read()))
+    except (OSError, ValueError):  # no cgroup v2, or no limit ("max")
+        pass
+    return f"{max(1, min(8, mem // 4 // 2**30))}g"
+
+
 def get_spark(
     app_name: str = "informers_spark",
     cores: int | None = None,
@@ -23,6 +35,7 @@ def get_spark(
     cores: parallelism level (local[N]); default $SPARK_GRAFT_CPUS or 32.
     shuffle_partitions: defaults to max(cores, 32) — on a real cluster this
     would be ~2-3x total executor cores; AQE coalesces the excess.
+    Driver heap: $SPARK_DRIVER_MEM, else min(8g, host memory / 4).
     """
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -39,7 +52,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         # per-task output commit (v2): avoids the driver-side sequential
         # rename storm at job commit — with many writer tasks the v1
         # committer serializes on metadata ops (measured 3x write slowdown

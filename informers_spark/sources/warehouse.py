@@ -119,9 +119,7 @@ class Warehouse:
             "rows_per_sec": round(n / wall, 1) if wall > 0 else None,
             "written_at": time.time(),
         }
-        with open(self._path(f"{name}._manifest.json"), "w") as fh:
-            json.dump(manifest, fh, indent=2)
-        return manifest
+        return self._put_manifest(manifest)
 
     def write_bucketed(
         self,
@@ -165,9 +163,7 @@ class Warehouse:
             "wall_sec": round(time.time() - t0, 3),
             "written_at": time.time(),
         }
-        with open(self._path(f"{name}._manifest.json"), "w") as fh:
-            json.dump(manifest, fh, indent=2)
-        return manifest
+        return self._put_manifest(manifest)
 
     def read_table(self, name: str) -> DataFrame:
         """Catalog read for bucketed tables (bucket metadata does not
@@ -192,6 +188,19 @@ class Warehouse:
             with open(p) as fh:
                 return json.load(fh)
         return None
+
+    def annotate(self, name: str, keys: dict) -> dict:
+        """Merge additive `keys` (e.g. the path an operator took) into a
+        written table's manifest, so a resumed run reads them back."""
+        return self._put_manifest({**self.manifest(name), **keys})
+
+    def _put_manifest(self, manifest: dict) -> dict:
+        """Write `<table>._manifest.json` atomically (tmp + rename)."""
+        p = self._path(f"{manifest['table']}._manifest.json")
+        with open(p + ".tmp", "w") as fh:
+            json.dump(manifest, fh, indent=2)
+        os.replace(p + ".tmp", p)
+        return manifest
 
     def is_complete(self, name: str) -> bool:
         """A stage can be skipped on resume iff its manifest exists (the

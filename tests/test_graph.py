@@ -247,7 +247,16 @@ def _sssp_rows(e):
     return [(r.node, r.dist) for r in shortest_paths(w, seeds, k=4, weight="w").collect()]
 
 
-@pytest.mark.parametrize("run", [_lpa_rows, _khop_rows, _sssp_rows], ids=["lpa", "k_hop", "sssp"])
+def _cc_rows(e):
+    from informers_spark.operators.canon import connected_components
+
+    # small_cutoff=0: the distributed pointer-jumping loop, not union-find
+    return [(r.node, r.component) for r in connected_components(e, small_cutoff=0).collect()]
+
+
+@pytest.mark.parametrize(
+    "run", [_lpa_rows, _khop_rows, _sssp_rows, _cc_rows], ids=["lpa", "k_hop", "sssp", "cc"]
+)
 def test_label_propagation_deterministic_across_partitionings(spark, run):
     # MIN and integer votes are exact, so rows must not depend on how
     # the edges are partitioned

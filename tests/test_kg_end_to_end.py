@@ -70,7 +70,7 @@ def test_sha256_invariant_through_stages(spark, kg):
 
 
 def test_resume_is_identical_and_skips_stages(spark, kg):
-    root, _ = kg
+    root, metrics = kg
     before = (
         spark.read.parquet(f"{root}/triples")
         .select("subj", "pred", "obj")
@@ -79,6 +79,10 @@ def test_resume_is_identical_and_skips_stages(spark, kg):
     )
     metrics2 = build_kg(spark, generate_files(spark, n=N), root, backend="hash")
     assert all(v.get("resumed") for v in metrics2.values())
+    # canon's path/iterations/converged live in the components manifest,
+    # so a resumed run reports the same ones as the fresh run
+    for key in ["path", "iterations", "converged"]:
+        assert metrics2["components"][key] == metrics["components"][key]
     after = (
         spark.read.parquet(f"{root}/triples")
         .select("subj", "pred", "obj")
@@ -132,6 +136,32 @@ def test_resume_recomputes_stage_dir_deleted_without_manifest(spark, kg):
     assert not metrics["nodes"].get("resumed")
     assert metrics["triples"].get("resumed")
     assert spark.read.parquet(f"{root}/nodes").count() > 0
+
+
+def test_failed_overlapped_stage_raises_and_resume_recomputes(spark, tmp_path, monkeypatch):
+    # embeddings raises while mentions runs beside it: build_kg must
+    # re-raise that error, and a resumed run must keep the finished
+    # mentions and recompute everything from embeddings onward
+    import informers_spark.plans.kg as kg_plan
+
+    class Boom(RuntimeError):
+        pass
+
+    def broken_embed(*args, **kwargs):
+        raise Boom("embed failed")
+
+    root = str(tmp_path / "kg_fault")
+    files = generate_files(spark, n=8)
+    with monkeypatch.context() as m:
+        m.setattr(kg_plan, "embed", broken_embed)
+        with pytest.raises(Boom, match="embed failed"):
+            build_kg(spark, files, root, backend="hash")
+    metrics = build_kg(spark, files, root, backend="hash")
+    assert metrics["files"].get("resumed") and metrics["mentions"].get("resumed")
+    later = ["embeddings", "triples_raw", "same_as", "components", "triples", "nodes", "edges"]
+    for stage in later:
+        assert not metrics[stage].get("resumed"), f"{stage} should have recomputed"
+    assert metrics["embeddings"]["rows"] == 8
 
 
 def test_empty_input_runs_all_stages(spark, tmp_path):

@@ -18,12 +18,6 @@ def test_cc_two_components(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
 
 
-def test_cc_long_chain_converges():
-    # a 60-node chain has diameter 59 > max_iter: pointer-jumping must
-    # still converge in O(log n) iterations
-    pass
-
-
 def test_cc_long_chain(spark):
     # small_cutoff=0 forces the DISTRIBUTED path: a 60-node chain has
     # diameter 59 > max_iter, so this proves pointer-jumping converges in
