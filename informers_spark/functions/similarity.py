@@ -37,6 +37,20 @@ def word_shingles(col: Column, n: int = 3) -> Column:
     )
 
 
+def _let(expr: Column, body) -> Column:
+    """body(v), with `expr` evaluated once per row and bound to v.
+
+    LET-BINDING, not style: higher-order-function lambda bodies are
+    interpreted with no common-subexpression elimination, so a body (or
+    any expression built from a Column argument) that references an
+    EXPRESSION n times evaluates it n times per row — a per-char fold
+    referenced per permutation, per bit or per shingle position re-runs
+    the whole fold each time. transform(array(expr), body) evaluates
+    expr exactly once and hands body a lambda VARIABLE, whose references
+    are O(1) lookups. Same values as substituting expr into body."""
+    return F.get(F.transform(F.array(expr), body), 0)
+
+
 def shingle_fingerprints(col: Column, n: int = 3, portable: bool = True) -> Column:
     """Distinct fingerprints of the n-gram shingles.
 
@@ -83,13 +97,9 @@ def _shingle_fps_portable(col: Column, n: int) -> Column:
         ),
     )
 
-    # LET-BINDING, not style: HOF lambda bodies are interpreted with no
-    # common-subexpression elimination, so a lambda body that referenced
-    # the `tf` EXPRESSION directly would re-run the whole per-token fold
-    # array per reference (measured 89 s — worse than the per-shingle
-    # form it replaces). transform(array(tf), body) evaluates tf exactly
-    # once per row and hands the body a lambda VARIABLE, whose
-    # references are O(1) lookups.
+    # let-bound (see _let): the body references the per-token fold array
+    # once per shingle position, which re-ran the whole fold per reference
+    # when it was the expression itself (measured 89 s)
     def body(tfv: Column) -> Column:
         size = F.size(tfv)
         cnt = F.greatest(size - (n - 1), F.lit(1))
@@ -109,25 +119,25 @@ def _shingle_fps_portable(col: Column, n: int) -> Column:
         # empty text: word_shingles yields one empty-string shingle, fp("") = 0
         return F.when(size == 0, F.array(F.lit(0).cast("long"))).otherwise(fps)
 
-    return F.get(F.transform(F.array(tf), body), 0)
+    return _let(tf, body)
 
 
 def minhash_signature(fps: Column, k: int = 16, seed: int = 7) -> Column:
     """MinHash signature (array<long> of k mins) over an array of shingle
-    fingerprints. Empty input → array of FP_MOD sentinels."""
+    fingerprints. Empty input → array of FP_MOD sentinels.
+
+    `fps` is let-bound (_let): the k permutations all read one value, so
+    an fps expression — the linker's per-char shingle fold — runs once
+    per row, not k times."""
     a, b = minhash_coeffs(k, seed)
 
     def perm(ai: int, bi: int):
         return lambda x: (F.lit(ai) * x + F.lit(bi)) % F.lit(FP_MOD)
 
-    mins = [
-        F.coalesce(
-            F.array_min(F.transform(fps, perm(a[i], b[i]))),
-            F.lit(FP_MOD),
-        )
+    return _let(fps, lambda v: F.array(*[
+        F.coalesce(F.array_min(F.transform(v, perm(a[i], b[i]))), F.lit(FP_MOD))
         for i in range(k)
-    ]
-    return F.array(*mins)
+    ]))
 
 
 def minhash_bands(sig: Column, bands: int, rows_per_band: int) -> Column:
@@ -149,13 +159,13 @@ def simhash(col: Column, bits: int = 31) -> Column:
     """SimHash over whitespace tokens: bit b set iff the sum over tokens of
     (+1 if bit b of fp(token) else -1) is positive. 31 bits (portable).
 
-    Single-pass formulation: one aggregate accumulates ALL per-bit
+    Single pass over the tokens: one aggregate accumulates ALL per-bit
     set-counts as an array<long> (votes_b = 2*count_b - n, so bit b is
-    set iff 2*count_b > n). The previous 31-separate-aggregates form
-    made Catalyst re-evaluate the token-fingerprint transform once PER
-    BIT — 31 hashing passes over every document (measured: the fold was
+    set iff 2*count_b > n). Both the token-fingerprint array and the
+    counts are let-bound (_let), so the fingerprints are hashed once and
+    the fold runs once per row, not once per reference — 31 separate
+    per-bit aggregates re-hashed every document 31 times (the fold was
     ~4 s of the sf0.1 near-dup query on its own)."""
-    fps = F.transform(tokens(col), fingerprint)
     zeros = F.array(*[F.lit(0).cast("long") for _ in range(bits)])
 
     def bit_votes(x: Column) -> Column:
@@ -163,14 +173,23 @@ def simhash(col: Column, bits: int = 31) -> Column:
             *[F.shiftright(x, b).bitwiseAND(F.lit(1)).cast("long") for b in range(bits)]
         )
 
-    counts = F.aggregate(fps, zeros, lambda acc, x: F.zip_with(acc, bit_votes(x), lambda a, v: a + v))
-    n = F.size(fps).cast("long")
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        out = out + F.when(
-            F.element_at(counts, b + 1) * 2 > n, F.lit(2**b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return out
+    def from_fps(fps: Column) -> Column:
+        n = F.size(fps).cast("long")
+
+        def from_counts(counts: Column) -> Column:
+            out = F.lit(0).cast("long")
+            for b in range(bits):
+                out = out + F.when(
+                    F.element_at(counts, b + 1) * 2 > n, F.lit(2**b).cast("long")
+                ).otherwise(F.lit(0).cast("long"))
+            return out
+
+        counts = F.aggregate(
+            fps, zeros, lambda acc, x: F.zip_with(acc, bit_votes(x), lambda a, v: a + v)
+        )
+        return _let(counts, from_counts)
+
+    return _let(F.transform(tokens(col), fingerprint), from_fps)
 
 
 def hamming_distance(a: Column, b: Column, bits: int = 31) -> Column:

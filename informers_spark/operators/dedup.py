@@ -12,9 +12,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from informers_spark.functions.similarity import (
-    cosine,
+    dot,
     hamming_distance,
     jaccard,
+    l2_norm,
     minhash_bands,
     minhash_signature,
     shingle_fingerprints,
@@ -382,11 +383,15 @@ def embedding_neardup(
     # (without it they re-run per branch — measured 4x). Three small columns.
     blocks = _banded_blocks(spread_scan(df), id_col, vec_col, "id", bands, planes_per_band)
     id_pairs = band_pairs(blocks.localCheckpoint(), max_bucket)
-    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    # each vector's norm is computed once here, not per pair it joins
+    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"),
+                     l2_norm(F.col(vec_col)).alias("n"))
     return (
-        id_pairs.join(vecs.select(F.col("id").alias("a"), F.col("v").alias("va")), "a")
-        .join(vecs.select(F.col("id").alias("b"), F.col("v").alias("vb")), "b")
-        .withColumn("cos_sim", cosine(F.col("va"), F.col("vb")))
+        id_pairs.join(vecs.select(F.col("id").alias("a"), F.col("v").alias("va"),
+                                  F.col("n").alias("na")), "a")
+        .join(vecs.select(F.col("id").alias("b"), F.col("v").alias("vb"),
+                          F.col("n").alias("nb")), "b")
+        .withColumn("cos_sim", dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")))
         .filter(F.col("cos_sim") >= threshold)
         .select("a", "b", F.round("cos_sim", 6).alias("cos_sim"))
     )

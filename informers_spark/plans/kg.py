@@ -168,14 +168,18 @@ def build_kg(
     # 5. entity linking over distinct mention surfaces — SAME typed-group
     # filter as the mention triples in stage 4: linking (and embedding)
     # a surface that can never appear in the graph wastes inference and
-    # emits orphan same_as components
+    # emits orphan same_as components. The blocking path and the probe
+    # count land in the same_as manifest.
+    link_metrics: dict = {}
+
     def make_same_as():
         surfaces = (
             mentions.filter(F.col("entity_group").isin("PER", "ORG", "LOC"))
             .select(F.col("word").alias("surface"))
             .distinct()
         )
-        return link_entities(surfaces, threshold=link_threshold, backend=backend)
+        return link_entities(surfaces, threshold=link_threshold, backend=backend,
+                             metrics=link_metrics)
 
     # 4 ∥ (5 → 6): triples_raw needs only mentions; the linking →
     # canonicalization chain needs only mentions too and is the longer
@@ -192,7 +196,7 @@ def build_kg(
     cc_metrics: dict = {}
 
     def link_chain():
-        same_as = stage("same_as", make_same_as, rebalance=False)
+        same_as = stage("same_as", make_same_as, rebalance=False, extra=link_metrics)
         # 6. canonicalization (convergence and the size-tier path land in
         # the stage manifest; a non-converged run raises inside the
         # operator rather than emitting silently-wrong same_as labels)

@@ -83,6 +83,11 @@ def test_resume_is_identical_and_skips_stages(spark, kg):
     # so a resumed run reports the same ones as the fresh run
     for key in ["path", "iterations", "converged"]:
         assert metrics2["components"][key] == metrics["components"][key]
+    # so do the linker's blocking path and probe count in same_as (a
+    # handful of surfaces at this N: the broadcast all-pairs path)
+    assert metrics["same_as"]["path"] == "broadcast"
+    for key in ["path", "probed_surfaces"]:
+        assert metrics2["same_as"][key] == metrics["same_as"][key]
     after = (
         spark.read.parquet(f"{root}/triples")
         .select("subj", "pred", "obj")

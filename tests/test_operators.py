@@ -76,6 +76,27 @@ def test_minhash_finds_near_duplicates(spark):
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
+    # minhash_signature let-binds its argument: over the linker's shingle
+    # fold EXPRESSION it must give exactly the signatures it gives over
+    # the same fingerprints materialized as a column, edge strings included
+    from informers_spark.functions.similarity import minhash_signature
+    from informers_spark.operators.link import _char_shingle_fps
+
+    texts = ["", None, "a", "ab", "Émile Zola", "straße", "🦀 crab", "Ελληνικά"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "id int, s string")
+    by_expr = {
+        r.id: r.sig
+        for r in df.select("id", minhash_signature(_char_shingle_fps(F.col("s"))).alias("sig"))
+        .collect()
+    }
+    fps = df.select("id", _char_shingle_fps(F.col("s")).alias("fps")).localCheckpoint()
+    by_col = {
+        r.id: r.sig
+        for r in fps.select("id", minhash_signature(F.col("fps")).alias("sig")).collect()
+    }
+    assert by_expr == by_col
+    assert len(by_expr) == len(texts) and all(len(v) == 16 for v in by_expr.values())
+
 
 def test_simhash_near_texts_close(spark):
     df = spark.createDataFrame(
@@ -176,8 +197,11 @@ def test_link_candidates_guard_drops_hot_cells(spark):
     runs = ["a" * n for n in range(3, 1103)]
     planted = ("acme corp", "acme corp.")
     surfaces = spark.createDataFrame([(s,) for s in runs + list(planted)], ["surface"])
-    pairs = {(r.sa, r.sb) for r in candidate_pairs(surfaces, "surface").collect()}
+    metrics: dict = {}
+    pairs = {(r.sa, r.sb) for r in candidate_pairs(surfaces, "surface", metrics=metrics).collect()}
     assert pairs == {planted}
+    # the size probe stops at small_cutoff + 1 surfaces
+    assert metrics == {"path": "lsh", "probed_surfaces": 1025}
 
 
 def _ref_simhash_pairs(hashes, max_hamming, bands=4, bits=31, max_bucket=10_000):

@@ -196,6 +196,20 @@ def test_skew_guard_is_broadcast_anti_join(spark, blocker):
     assert "CartesianProduct" not in plan
 
 
+def test_minhash_signature_folds_shingles_once(spark):
+    # higher-order-function lambdas get no common-subexpression
+    # elimination: minhash_signature let-binds its argument, so the
+    # linker's char-shingle fold appears once in the analyzed expression,
+    # not once per permutation (16 substring calls when it was inlined)
+    from informers_spark.functions.similarity import minhash_signature
+    from informers_spark.operators.link import _char_shingle_fps
+
+    df = spark.createDataFrame([("acme corp",)], ["surface"])
+    q = df.select(minhash_signature(_char_shingle_fps(F.col("surface"))).alias("sig"))
+    analyzed = q._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("substring(") == 1, analyzed
+
+
 def test_bucketed_tables_join_without_exchange(spark, tmp_path):
     # co-located join: two tables bucketed on the same key with the same
     # bucket count must sort-merge join with NO Exchange on either side
