@@ -70,14 +70,15 @@ def extract_structural_triples(files: DataFrame) -> DataFrame:
     )
 
 
-def mention_triples_from_mentions(
-    mentions: DataFrame,
-    groups: tuple[str, ...] = ("PER", "ORG", "LOC"),
-) -> DataFrame:
+# the ONE definition of which entity groups enter the graph: the mention
+# triples and the entity linker's surfaces both filter on it
+ENTITY_GROUPS = ("PER", "ORG", "LOC")
+
+
+def mention_triples_from_mentions(mentions: DataFrame) -> DataFrame:
     """Typed-group filter + (subj, pred, obj, score, src_sha256)
-    projection over an existing mentions table — the ONE definition of
-    which entity groups enter the graph."""
-    return mentions.filter(F.col("entity_group").isin(*groups)).select(
+    projection over an existing mentions table."""
+    return mentions.filter(F.col("entity_group").isin(*ENTITY_GROUPS)).select(
         F.col("repo").alias("subj"),
         F.lit("mentions").alias("pred"),
         F.col("word").alias("obj"),

@@ -667,10 +667,10 @@ def materialize_graph_stats(
 ) -> dict:
     """Land the analytics as warehouse TABLES, not just query results:
     `node_ranks` (node, rank) and `node_communities` (node, label) are
-    written through the same Warehouse as every build_kg stage, so they
-    get lineage manifests, per-stage throughput metrics, and
+    written by `Warehouse.stage`, the same runner as every build_kg
+    stage, so they get lineage manifests, per-stage throughput metrics, and
     skip-on-resume for free — re-running the job after a crash recomputes
-    only the missing table. Returns {table: manifest} like build_kg."""
+    only the missing table. Returns {table: metrics} like build_kg."""
     from informers_spark.sources.warehouse import Warehouse
 
     wh = Warehouse(spark, warehouse_dir)
@@ -703,10 +703,6 @@ def materialize_graph_stats(
             .select("node", F.coalesce("label", "node").alias("label"))
         ),
     }
-    metrics = {}
-    for name, make in stages.items():
-        if resume and wh.is_complete(name):
-            metrics[name] = {**wh.manifest(name), "resumed": True}
-        else:
-            metrics[name] = wh.write(make(), name)
-    return metrics
+    return {
+        name: wh.stage(name, make, resume)[1] for name, make in stages.items()
+    }

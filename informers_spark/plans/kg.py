@@ -22,7 +22,6 @@ skew-join for the joins.
 
 from __future__ import annotations
 
-import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +29,7 @@ from pyspark.sql import functions as F
 
 from informers_spark.operators.canon import connected_components
 from informers_spark.operators.extract import (
+    ENTITY_GROUPS,
     extract_structural_triples,
     mention_triples_from_mentions,
     mentions_table,
@@ -95,20 +95,6 @@ def build_kg(
     wh = Warehouse(spark, warehouse_root)
     metrics: dict[str, dict] = {}
 
-    def stage(name: str, make, partition_by=None, rebalance=True, extra=None):
-        """`extra`: a dict `make` fills, merged into the manifest."""
-        t0 = time.time()
-        if resume and wh.is_complete(name):
-            metrics[name] = {**(wh.manifest(name) or {}), "resumed": True}
-            return wh.read(name)
-        df = make()
-        m = wh.write(df, name, partition_by=partition_by, rebalance=rebalance)
-        if extra:
-            m = wh.annotate(name, extra)
-        m["stage_wall_sec"] = round(time.time() - t0, 3)
-        metrics[name] = m
-        return wh.read(name)
-
     # 1. files — carry content_sha256 from here through every stage
     if "content_sha256" not in files.columns:
         files = files.withColumn("content_sha256", F.sha2(F.col("content"), 256))
@@ -119,9 +105,10 @@ def build_kg(
     # sandbox's measured commit costs the extra shuffle lost more than
     # the file-count saved; on a 1000-executor cluster with a metadata-
     # bound committer, flip rebalance=True so tasks hold one-lang slices
-    files_t = stage(
+    files_t, metrics["files"] = wh.stage(
         "files",
         lambda: salt_partition(files, "repo", "path"),
+        resume,
         partition_by=["lang"],
         rebalance=False,
     )
@@ -141,11 +128,12 @@ def build_kg(
             backend=backend,
         ).drop("text")
 
-    mentions, _ = _overlap(
-        lambda: stage(
-            "mentions", lambda: mentions_table(files_t, backend=backend), rebalance=False
+    (mentions, metrics["mentions"]), (_, metrics["embeddings"]) = _overlap(
+        lambda: wh.stage(
+            "mentions", lambda: mentions_table(files_t, backend=backend), resume,
+            rebalance=False,
         ),
-        lambda: stage("embeddings", make_embeddings, rebalance=False),
+        lambda: wh.stage("embeddings", make_embeddings, resume, rebalance=False),
     )
 
     # 4. raw triples: structural ∪ mentions
@@ -165,18 +153,17 @@ def build_kg(
             )
         )
 
-    # 5. entity linking over distinct mention surfaces — SAME typed-group
-    # filter as the mention triples in stage 4: linking (and embedding)
-    # a surface that can never appear in the graph wastes inference and
-    # emits orphan same_as components. The blocking path and the probe
-    # count land in the same_as manifest.
+    # 5. entity linking over the mention surfaces (link_entities
+    # de-duplicates them) — SAME typed-group filter, ENTITY_GROUPS, as the
+    # mention triples in stage 4: linking (and embedding) a surface that
+    # can never appear in the graph wastes inference and emits orphan
+    # same_as components. The blocking path and the probe count land in
+    # the same_as manifest.
     link_metrics: dict = {}
 
     def make_same_as():
-        surfaces = (
-            mentions.filter(F.col("entity_group").isin("PER", "ORG", "LOC"))
-            .select(F.col("word").alias("surface"))
-            .distinct()
+        surfaces = mentions.filter(F.col("entity_group").isin(*ENTITY_GROUPS)).select(
+            F.col("word").alias("surface")
         )
         return link_entities(surfaces, threshold=link_threshold, backend=backend,
                              metrics=link_metrics)
@@ -196,18 +183,21 @@ def build_kg(
     cc_metrics: dict = {}
 
     def link_chain():
-        same_as = stage("same_as", make_same_as, rebalance=False, extra=link_metrics)
+        same_as, metrics["same_as"] = wh.stage(
+            "same_as", make_same_as, resume, rebalance=False, extra=link_metrics
+        )
         # 6. canonicalization (convergence and the size-tier path land in
         # the stage manifest; a non-converged run raises inside the
         # operator rather than emitting silently-wrong same_as labels)
-        return stage(
+        return wh.stage(
             "components",
             lambda: connected_components(same_as, metrics=cc_metrics),
+            resume,
             extra=cc_metrics,
         )
 
-    triples_raw, components = _overlap(
-        lambda: stage("triples_raw", make_raw, rebalance=False), link_chain
+    (triples_raw, metrics["triples_raw"]), (components, metrics["components"]) = _overlap(
+        lambda: wh.stage("triples_raw", make_raw, resume, rebalance=False), link_chain
     )
 
     # 7. materialize — one logical phase, three tables. The triples write
@@ -231,7 +221,7 @@ def build_kg(
         )
         return triples_raw.select(*TRIPLE_COLS).unionAll(canon_triples)
 
-    triples = stage("triples", make_triples, partition_by=["pred"])
+    triples, metrics["triples"] = wh.stage("triples", make_triples, resume, partition_by=["pred"])
 
     def make_nodes():
         return (
@@ -252,8 +242,8 @@ def build_kg(
 
     # nodes ends in a shuffle (distinct) — AQE sizing applies, skip the
     # redundant rebalance exchange (same reasoning as triples_raw)
-    _overlap(
-        lambda: stage("nodes", make_nodes, rebalance=False),
-        lambda: stage("edges", make_edges, ["pred"]),
+    (_, metrics["nodes"]), (_, metrics["edges"]) = _overlap(
+        lambda: wh.stage("nodes", make_nodes, resume, rebalance=False),
+        lambda: wh.stage("edges", make_edges, resume, partition_by=["pred"]),
     )
     return metrics

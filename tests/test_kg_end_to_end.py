@@ -7,7 +7,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from informers_spark.plans.kg import build_kg
+from informers_spark.plans.kg import TRIPLE_COLS, build_kg
 from informers_spark.sources.corpus import (
     EXPECTED_SAME_AS,
     expected_triples,
@@ -108,6 +108,17 @@ def test_stage_manifests_record_lineage(kg):
         m = json.load(open(path))
         assert m["rows"] >= 0 and "schema" in m and "wall_sec" in m
     assert metrics["files"]["sha256_range"] is not None
+    # the operators' path keys are in the ONE manifest write of a fresh
+    # build (no second write that a kill could skip)
+    for stage, keys in [
+        ("same_as", ["path", "probed_surfaces"]),
+        ("components", ["path", "iterations", "converged"]),
+    ]:
+        m = json.load(open(os.path.join(root, f"{stage}._manifest.json")))
+        for key in keys:
+            assert m[key] == metrics[stage][key], (stage, key)
+    # the stage timing is returned but not persisted
+    assert "stage_wall_sec" in metrics["same_as"] and "stage_wall_sec" not in m
 
 
 def test_partial_resume_recomputes_only_missing_stage(spark, kg):
@@ -141,6 +152,59 @@ def test_resume_recomputes_stage_dir_deleted_without_manifest(spark, kg):
     assert not metrics["nodes"].get("resumed")
     assert metrics["triples"].get("resumed")
     assert spark.read.parquet(f"{root}/nodes").count() > 0
+
+
+def test_resume_recomputes_half_written_stage(spark, kg, tmp_path):
+    # a write killed mid-way leaves the stage directory holding part
+    # files but no manifest (the manifest is written last): the rerun
+    # must recompute that stage, not trust the partial data
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root, _ = kg
+    copy = str(tmp_path / "kg_half_written")
+    shutil.copytree(root, copy)
+    os.remove(os.path.join(copy, "triples._manifest.json"))
+    stray = os.path.join(copy, "triples", "pred=mentions", "part-99999-stray.parquet")
+    pq.write_table(
+        pa.table({"subj": ["stray"], "obj": ["stray"], "score": pa.array([1.0], pa.float32()),
+                  "src_sha256": pa.array([None], pa.string())}),
+        stray,
+    )
+    metrics = build_kg(spark, generate_files(spark, n=N), copy, backend="hash")
+    assert not metrics["triples"].get("resumed")
+    assert metrics["triples_raw"].get("resumed") and metrics["components"].get("resumed")
+    assert not os.path.exists(stray)
+
+    def triples(r):
+        return spark.read.parquet(f"{r}/triples").select(*TRIPLE_COLS).sort(*TRIPLE_COLS).collect()
+
+    assert triples(copy) == triples(root)
+
+
+def test_output_does_not_depend_on_shuffle_partitions(spark, kg, tmp_path):
+    # the KG at a second spark.sql.shuffle.partitions value must equal the
+    # fixture's build row for row, scores included. The core count cannot
+    # change inside one local[N] JVM, so core-count independence is
+    # untested here.
+    root, _ = kg
+    other = str(tmp_path / "kg_5_partitions")
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    assert prev != "5"
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        build_kg(spark, generate_files(spark, n=N), other, backend="hash")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    for table in ["triples", "nodes", "edges", "same_as"]:
+        cols = spark.read.parquet(f"{root}/{table}").columns
+
+        def rows(r):
+            return spark.read.parquet(f"{r}/{table}").select(*cols).sort(*cols).collect()
+
+        assert rows(other) == rows(root), table
 
 
 def test_failed_overlapped_stage_raises_and_resume_recomputes(spark, tmp_path, monkeypatch):
@@ -235,9 +299,13 @@ def test_materialize_graph_stats_resumable(spark, kg):
     assert comms.count() == n_nodes
     assert wh.manifest("node_ranks")["rows_per_sec"] is not None
 
-    # second run: both stages skip
+    # second run: both stages skip and report what the fresh run wrote
     m2 = materialize_graph_stats(spark, root, pagerank_iterations=2, lpa_iterations=2)
-    assert m2["node_ranks"].get("resumed") and m2["node_communities"].get("resumed")
+    for name in m1:
+        assert "stage_wall_sec" in m1[name]
+        assert m2[name].get("resumed")
+        persisted = {k: v for k, v in m1[name].items() if k != "stage_wall_sec"}
+        assert {k: v for k, v in m2[name].items() if k != "resumed"} == persisted
 
 
 def test_materialize_graph_stats_covers_self_loop_only_nodes(spark, tmp_path):
@@ -253,7 +321,7 @@ def test_materialize_graph_stats_covers_self_loop_only_nodes(spark, tmp_path):
         [("a", "b", "p", 1.0), ("b", "c", "p", 1.0), ("z", "z", "p", 1.0)],
         ["src", "dst", "pred", "score"],
     )
-    wh.write(edges, "edges")
+    wh.stage("edges", lambda: edges, resume=False)
     materialize_graph_stats(spark, root, pagerank_iterations=2, lpa_iterations=2)
     ranks = {r.node for r in wh.read("node_ranks").collect()}
     comms = {r.node: r.label for r in wh.read("node_communities").collect()}

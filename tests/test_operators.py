@@ -19,9 +19,10 @@ def test_cc_two_components(spark):
 
 
 def test_cc_long_chain(spark):
-    # small_cutoff=0 forces the DISTRIBUTED path: a 60-node chain has
-    # diameter 59 > max_iter, so this proves pointer-jumping converges in
-    # O(log n) iterations
+    # small_cutoff=0 forces the DISTRIBUTED path: a 61-node chain has
+    # diameter 60 > max_iter, so this shows pointer-jumping converges on
+    # a chain in fewer rounds than its diameter (no general round bound
+    # is proven; a random graph can need more than max_iter)
     n = 60
     edges = spark.createDataFrame([(i, i + 1) for i in range(n)], ["src", "dst"])
     rows = connected_components(edges, max_iter=12, small_cutoff=0).collect()

@@ -210,50 +210,6 @@ def test_minhash_signature_folds_shingles_once(spark):
     assert analyzed.count("substring(") == 1, analyzed
 
 
-def test_bucketed_tables_join_without_exchange(spark, tmp_path):
-    # co-located join: two tables bucketed on the same key with the same
-    # bucket count must sort-merge join with NO Exchange on either side
-    # (the 100-TB layout that removes the shuffle from every join on the
-    # bucket key); results must equal the plain shuffled join
-    import pyspark.sql.functions as F
-
-    from informers_spark.sources.warehouse import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path))
-    left = spark.range(0, 2000).select(
-        F.concat(F.lit("sha"), F.col("id")).alias("content_sha256"),
-        (F.col("id") % 7).alias("x"),
-    )
-    right = spark.range(0, 2000, 2).select(
-        F.concat(F.lit("sha"), F.col("id")).alias("content_sha256"),
-        (F.col("id") % 5).alias("y"),
-    )
-    for name, df in [("bk_mentions", left), ("bk_embeddings", right)]:
-        m = wh.write_bucketed(
-            df, name, ["content_sha256"], n_buckets=8, sort_cols=["content_sha256"]
-        )
-        assert m["n_buckets"] == 8
-    a, b = wh.read_table("bk_mentions"), wh.read_table("bk_embeddings")
-    joined = a.join(b, "content_sha256")
-    # at demo sizes the planner (rightly) broadcasts, which bypasses
-    # bucketing; disable broadcast to expose the big-table plan shape
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        # NO shuffle on either side: bucket layout replaces the exchange
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "Bucketed: true" in plan, plan
-        got = {(r.content_sha256, r.x, r.y) for r in joined.collect()}
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    want = {(r.content_sha256, r.x, r.y) for r in left.join(right, "content_sha256").collect()}
-    assert got == want and len(got) == 1000
-    spark.sql("DROP TABLE IF EXISTS bk_mentions")
-    spark.sql("DROP TABLE IF EXISTS bk_embeddings")
-
-
 def _embed_udf(docs):
     from informers_spark.pipelines.embed import embed
 
