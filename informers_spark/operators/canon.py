@@ -1,7 +1,10 @@
 """Canonicalization: connected components via iterative min-label
 propagation on a DataFrame edge list (north-rule contract).
 
-Each iteration: labels ⋈ edges → per-node min neighbor label → keep the
+Size-tiered like pagerank and label propagation: at or below
+graph.SMALL_EDGES edges (their shared probe, graph._small_edges) the
+components come from a driver union-find in one Spark job. Above it,
+each iteration: labels ⋈ edges → per-node min neighbor label → keep the
 smaller of (own, best neighbor) → pointer-jump. The rounds run on
 graph.iterate, the one iterative-graph loop: it localCheckpoint()s every
 round, which cuts the lineage (a star-shaped hot component otherwise
@@ -16,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from informers_spark.operators.graph import iterate
+from informers_spark.operators.graph import SMALL_EDGES, _small_edges, iterate
 
 
 def _union_find_components(edges_rows, node_type, spark) -> "DataFrame":
@@ -65,7 +68,7 @@ def connected_components(
     max_iter: int = 20,
     require_convergence: bool = True,
     metrics: dict | None = None,
-    small_cutoff: int = 65536,
+    small_cutoff: int = SMALL_EDGES,
 ) -> DataFrame:
     """→ (node, component) where component = min node id/label in the
     component (string min = lexicographic).
@@ -78,25 +81,21 @@ def connected_components(
     'iterations' for stage telemetry.
 
     Size-tiered execution: when the edge list is at most `small_cutoff`
-    rows (probed with a limit(cutoff+1).collect(), never a full count),
+    rows (graph._small_edges, the probe shared with pagerank and label
+    propagation: a limit(cutoff+1).collect(), never a full count),
     labels come from a driver union-find — one Spark job instead of ~4
     shuffles per pointer-jumping iteration, which at sandbox/sf scales is
     pure fixed cost. Above the cutoff (any real KG run) the distributed
     loop runs unchanged; both paths emit the identical (node,
     component=min member) contract and are equality-tested against each
     other. small_cutoff=0 forces the distributed path."""
-    if small_cutoff:
-        probe = edges.select(src, dst).limit(small_cutoff + 1).collect()
-        if len(probe) <= small_cutoff:
-            if metrics is not None:
-                metrics["iterations"] = 0
-                metrics["converged"] = True
-                metrics["path"] = "driver_union_find"
-            return _union_find_components(
-                [(r[0], r[1]) for r in probe],
-                edges.schema[src].dataType,
-                edges.sparkSession,
-            )
+    rows = _small_edges(edges, [src, dst], small_cutoff)
+    if rows is not None:
+        if metrics is not None:
+            metrics["iterations"] = 0
+            metrics["converged"] = True
+            metrics["path"] = "driver_union_find"
+        return _union_find_components(rows, edges.schema[src].dataType, edges.sparkSession)
     if metrics is not None:
         metrics["path"] = "distributed_pointer_jumping"
     sym = (

@@ -16,13 +16,22 @@ Scale shape (the part that must survive 100 TB):
   driver-side edge materialization. Hot destination nodes (every KG has
   celebrity entities) are absorbed by partial aggregation; hot source
   nodes by AQE skew-join splitting.
-- Every iterative loop here and in canon runs on the one driver,
-  `iterate`: it `localCheckpoint()`s each round, so the lineage stays
-  O(1) instead of O(iters) and a star-shaped hot component cannot
-  explode the plan; its limit(1) probe is the only fixpoint test.
-- The only driver-side values are single-row scalars (node count, the
-  dangling-mass probe) — the same class of bounded action as the CC
-  convergence count; never an O(nodes) collect.
+- Size tiers: connected components (canon), `pagerank`,
+  `personalized_pagerank` and `label_propagation` first run one shared
+  probe, `_small_edges` — a limit(cutoff + 1).collect(), never a full
+  count. At or below `SMALL_EDGES` edges they run the same recurrence
+  on the driver over the collected rows (one Spark job, where each
+  distributed round costs several checkpoint jobs of pure fixed cost at
+  that size) and build the result from pandas; `metrics["path"]` records
+  which tier ran. `small_cutoff=0` forces the distributed loop.
+- Above the cutoff, every iterative loop here and in canon runs on the
+  one driver, `iterate`: it `localCheckpoint()`s each round, so the
+  lineage stays O(1) instead of O(iters) and a star-shaped hot component
+  cannot explode the plan; its limit(1) probe is the only fixpoint test.
+  There the only driver-side values are single-row scalars (node count,
+  the dangling-mass probe) — the same class of bounded action as the CC
+  convergence count; never an O(nodes) collect. The driver tier's
+  collect is bounded by the cutoff.
 - Triangle counting uses the degree-oriented orientation (each
   undirected edge points from the (degree, node)-smaller endpoint to the
   larger), which bounds the wedge fan-out per node by its *oriented*
@@ -33,8 +42,38 @@ Scale shape (the part that must survive 100 TB):
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# Edge count at or below which the size-tiered operators run on the
+# driver: one collect job then costs less than a single round of the
+# distributed loop.
+SMALL_EDGES = 65536
+
+
+def _small_edges(edges: DataFrame, cols: list, small_cutoff: int):
+    """The one size probe of the size-tiered graph operators: the rows of
+    `edges.select(*cols)` when there are at most `small_cutoff` of them,
+    else None. A limit(small_cutoff + 1).collect(), never a full count;
+    small_cutoff <= 0 runs no job and returns None (the distributed path)."""
+    if small_cutoff <= 0:
+        return None
+    rows = edges.select(*cols).limit(small_cutoff + 1).collect()
+    return rows if len(rows) <= small_cutoff else None
+
+
+def _driver_frame(spark, columns: dict, types: list) -> DataFrame:
+    """A driver tier's result as a DataFrame (`columns` name → values,
+    `types` their Spark types): built from pandas, so it plans as a
+    LocalRelation with exact size statistics, where a list of rows plans
+    as an RDD scan of unknown size."""
+    import pandas as pd
+
+    schema = T.StructType([T.StructField(c, t) for c, t in zip(columns, types)])
+    return spark.createDataFrame(pd.DataFrame(columns), schema)
 
 
 def iterate(state: DataFrame, step, rounds: int, changed: str | None = None):
@@ -75,6 +114,7 @@ def pagerank(
     damping: float = 0.85,
     weight: str | None = None,
     metrics: dict | None = None,
+    small_cutoff: int = SMALL_EDGES,
 ) -> DataFrame:
     """Fixed-iteration power-method PageRank → (node, rank).
 
@@ -89,7 +129,7 @@ def pagerank(
     result a pure deterministic function of
     (edges, weights, iterations, damping) — which is what lets the
     correctness gate unroll the exact same recurrence in SQL."""
-    return _rank_walk(edges, None, src, dst, iterations, damping, weight, metrics)
+    return _rank_walk(edges, None, src, dst, iterations, damping, weight, metrics, small_cutoff)
 
 
 def personalized_pagerank(
@@ -101,6 +141,7 @@ def personalized_pagerank(
     damping: float = 0.85,
     weight: str | None = None,
     metrics: dict | None = None,
+    small_cutoff: int = SMALL_EDGES,
 ) -> DataFrame:
     """Personalized PageRank → (node, rank): the random walk teleports
     back to the SEED set instead of everywhere, so rank measures
@@ -115,7 +156,7 @@ def personalized_pagerank(
     universe is edge endpoints ∪ seeds, so an isolated seed keeps its
     teleport share instead of leaking it. Same power iteration as
     `pagerank` (`_rank_walk`); only the teleport vector differs."""
-    return _rank_walk(edges, seeds, src, dst, iterations, damping, weight, metrics)
+    return _rank_walk(edges, seeds, src, dst, iterations, damping, weight, metrics, small_cutoff)
 
 
 def _rank_walk(
@@ -127,12 +168,18 @@ def _rank_walk(
     damping: float,
     weight: str | None,
     metrics: dict | None,
+    small_cutoff: int,
 ) -> DataFrame:
     """The one power iteration behind `pagerank` (`seeds` None: teleport
     (1-d)/N, dangling share mass/N) and `personalized_pagerank`
     (teleport (1-d)·s(v), dangling share mass·s(v)).
 
-    Setup is ONE dual-explode aggregation: node universe, out-weights
+    Size-tiered: when the edges (and the seeds) are at most `small_cutoff`
+    rows each, `_driver_rank_walk` runs the recurrence in numpy over the
+    collected rows. A NULL endpoint, weight or seed takes the distributed
+    path, whose joins drop it in ways the driver tier does not mirror.
+
+    Distributed setup is ONE dual-explode aggregation: node universe, out-weights
     and dangling flags in a single shuffle (dst occurrences add an exact
     +0.0 to the out-weight). Seeds join it as zero-weight rows flagged
     `seed`, so the universe is endpoints ∪ seeds with no second shuffle.
@@ -142,6 +189,23 @@ def _rank_walk(
     broadcast of the 1-row dangling aggregate (the dangling flag rides
     the rank table, so it is a filter, not an anti-join)."""
     w_col = F.col(weight).cast("double") if weight is not None else F.lit(1.0)
+    rows = _small_edges(edges, [F.col(src), F.col(dst), w_col], small_cutoff)
+    seed_vals = None
+    if rows is not None and seeds is not None:
+        seed_rows = _small_edges(seeds, seeds.columns[:1], small_cutoff)
+        seed_vals = None if seed_rows is None else [r[0] for r in seed_rows]
+        rows = None if seed_vals is None else rows
+    # (a Row's `in` tests its field names, hence the explicit `is None`)
+    if rows is not None and not any(
+        v is None for vals in [*rows, seed_vals or ()] for v in vals
+    ):
+        ranks, sizes = _driver_rank_walk(rows, seed_vals, iterations, damping)
+        if metrics is not None:
+            metrics.update(iterations=iterations, path="driver_power_iteration", **sizes)
+        return _driver_frame(
+            edges.sparkSession, ranks, [edges.schema[src].dataType, T.DoubleType()]
+        )
+
     both = F.array(
         F.struct(F.col(src).alias("node"), w_col.alias("w")),
         F.struct(F.col(dst).alias("node"), F.lit(0.0).alias("w")),
@@ -213,8 +277,51 @@ def _rank_walk(
 
     ranks, _, _ = iterate(state.withColumn("rank", r0).localCheckpoint(), step, iterations)
     if metrics is not None:
-        metrics.update(iterations=iterations, **sizes)
+        metrics.update(iterations=iterations, path="distributed_power_iteration", **sizes)
     return ranks.select("node", "rank")
+
+
+def _driver_rank_walk(rows, seeds: list | None, iterations: int, damping: float):
+    """`_rank_walk`'s recurrence as a numpy power iteration over collected
+    (src, dst, w) rows → ({"node", "rank"} columns, sizes). `seeds` None
+    is plain PageRank; otherwise the teleport vector s(v). The node
+    universe is endpoints ∪ seeds; W(u) is u's summed weight, and an edge
+    whose source has W(u) <= 0 carries no rank, as the distributed
+    out-weight join drops it."""
+    import numpy as np
+    import pandas as pd
+
+    m = len(rows)
+    ends = [r[0] for r in rows] + [r[1] for r in rows] + (seeds or [])
+    codes, nodes = pd.factorize(np.array(ends, dtype=object))
+    n = len(nodes)
+    si, di = codes[:m], codes[m : 2 * m]
+    w = np.array([r[2] for r in rows], dtype=np.float64)
+    od = np.bincount(si, weights=w, minlength=n)
+    has_out = od > 0
+    live = has_out[si]
+    si, di, w, w_od = si[live], di[live], w[live], od[si[live]]
+    if seeds is None:
+        if n == 0:
+            return {"node": nodes, "rank": np.zeros(0)}, {"n_nodes": 0}
+        sizes = {"n_nodes": n}
+        rank = np.full(n, 1.0 / n)
+        teleport, sv = (1.0 - damping) / n, None
+    else:
+        seed_idx = np.unique(codes[2 * m :])
+        if len(seed_idx) == 0:
+            raise ValueError("personalized_pagerank needs a non-empty seed set")
+        sizes = {"n_seeds": len(seed_idx)}
+        sv = np.zeros(n)
+        sv[seed_idx] = 1.0 / len(seed_idx)
+        rank = sv.copy()
+        teleport = (1.0 - damping) * sv
+    for _ in range(iterations):
+        contrib = np.bincount(di, weights=rank[si] * w / w_od, minlength=n)
+        mass = rank[~has_out].sum()
+        share = mass / float(n) if sv is None else mass * sv
+        rank = teleport + damping * (contrib + share)
+    return {"node": nodes, "rank": rank}, sizes
 
 
 def personalized_pagerank_oracle_sql(
@@ -358,6 +465,7 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     metrics: dict | None = None,
+    small_cutoff: int = SMALL_EDGES,
 ) -> DataFrame:
     """Synchronous label-propagation community detection → (node, label).
 
@@ -379,7 +487,18 @@ def label_propagation(
     per-node window to pick (max count, min label). The window
     partitions by node with ≤ degree rows per node — bounded by the
     hottest node's degree, same skew profile as the degree computation
-    itself."""
+    itself.
+
+    Size-tiered: at most `small_cutoff` edges run `_driver_label_vote`
+    over the collected rows instead (`metrics["path"]` says which)."""
+    rows = _small_edges(edges, [src, dst], small_cutoff)
+    if rows is not None:
+        if metrics is not None:
+            metrics.update(iterations=iterations, path="driver_label_vote")
+        node_type = edges.schema[src].dataType
+        return _driver_frame(
+            edges.sparkSession, _driver_label_vote(rows, iterations), [node_type, node_type]
+        )
     und = (
         edges.select(F.col(src).alias("nbr"), F.col(dst).alias("node"))
         .unionAll(edges.select(F.col(dst).alias("nbr"), F.col(src).alias("node")))
@@ -406,8 +525,27 @@ def label_propagation(
         iterations,
     )
     if metrics is not None:
-        metrics["iterations"] = iterations
+        metrics.update(iterations=iterations, path="distributed_label_vote")
     return labels
+
+
+def _driver_label_vote(rows, iterations: int) -> dict:
+    """`label_propagation`'s rounds over collected (src, dst) rows →
+    {"node", "label"} columns. Self-loops and NULL endpoints are dropped,
+    as the distributed `nbr != node` filter drops them; each parallel edge
+    is one vote; the pick is (max count, min label)."""
+    nbrs: dict = {}
+    for u, v in rows:
+        if u is not None and v is not None and u != v:
+            nbrs.setdefault(v, []).append(u)
+            nbrs.setdefault(u, []).append(v)
+    labels = {node: node for node in nbrs}
+    for _ in range(iterations):
+        labels = {
+            node: min(Counter(labels[u] for u in ns).items(), key=lambda lc: (-lc[1], lc[0]))[0]
+            for node, ns in nbrs.items()
+        }
+    return {"node": list(labels), "label": list(labels.values())}
 
 
 def label_propagation_oracle_sql(edges_sql: str, iterations: int = 3) -> str:
@@ -670,7 +808,9 @@ def materialize_graph_stats(
     written by `Warehouse.stage`, the same runner as every build_kg
     stage, so they get lineage manifests, per-stage throughput metrics, and
     skip-on-resume for free — re-running the job after a crash recomputes
-    only the missing table. Returns {table: metrics} like build_kg."""
+    only the missing table. Each manifest also carries its operator's
+    metrics (iterations, size, and the tier that ran as `path`), so a
+    resumed run reports them too. Returns {table: metrics} like build_kg."""
     from informers_spark.sources.warehouse import Warehouse
 
     wh = Warehouse(spark, warehouse_dir)
@@ -682,9 +822,13 @@ def materialize_graph_stats(
         ranked_edges = edges.select("src", "dst")
         rank_kwargs = {}
 
+    op_metrics: dict = {"node_ranks": {}, "node_communities": {}}
     stages = {
         "node_ranks": lambda: pagerank(
-            ranked_edges, iterations=pagerank_iterations, **rank_kwargs
+            ranked_edges,
+            iterations=pagerank_iterations,
+            metrics=op_metrics["node_ranks"],
+            **rank_kwargs,
         ),
         # label_propagation ignores self-loops (filter nbr != node), so a
         # node appearing ONLY in self-loops would be absent from its
@@ -696,7 +840,11 @@ def materialize_graph_stats(
             .unionAll(edges.select(F.col("dst").alias("node")))
             .distinct()
             .join(
-                label_propagation(edges.select("src", "dst"), iterations=lpa_iterations),
+                label_propagation(
+                    edges.select("src", "dst"),
+                    iterations=lpa_iterations,
+                    metrics=op_metrics["node_communities"],
+                ),
                 "node",
                 "left",
             )
@@ -704,5 +852,6 @@ def materialize_graph_stats(
         ),
     }
     return {
-        name: wh.stage(name, make, resume)[1] for name, make in stages.items()
+        name: wh.stage(name, make, resume, extra=op_metrics[name])[1]
+        for name, make in stages.items()
     }

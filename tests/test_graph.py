@@ -11,15 +11,29 @@ import pytest
 from pyspark.sql import functions as F
 
 from informers_spark.operators.graph import (
+    SMALL_EDGES,
     degrees,
     k_hop,
+    label_propagation,
     pagerank,
+    personalized_pagerank,
     triangle_count,
 )
+
+# (tier, small_cutoff) of the size-tiered operators: the default cutoff
+# runs these small graphs on the driver, 0 forces the distributed loop.
+# Each reference test checks both tiers against the same reference.
+TIERS = [("driver", SMALL_EDGES), ("distributed", 0)]
 
 
 def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "src string, dst string")
+
+
+def _assert_ranks(got, want, tier):
+    assert set(got) == set(want), tier
+    for node in want:
+        assert got[node] == pytest.approx(want[node], abs=1e-12), (tier, node)
 
 
 def test_degrees_counts_both_directions(spark):
@@ -55,11 +69,12 @@ def _pagerank_reference(pairs, iterations, damping, weights=None):
 def test_pagerank_matches_dense_power_iteration(spark):
     # c is dangling; a is the hub
     pairs = [("a", "b"), ("a", "c"), ("b", "a"), ("b", "c"), ("d", "a")]
-    got = {r["node"]: r["rank"] for r in pagerank(_edges(spark, pairs), iterations=4).collect()}
     want = _pagerank_reference(pairs, iterations=4, damping=0.85)
-    assert set(got) == set(want)
-    for node in want:
-        assert got[node] == pytest.approx(want[node], abs=1e-12)
+    for tier, cutoff in TIERS:
+        m = {}
+        ranks = pagerank(_edges(spark, pairs), iterations=4, metrics=m, small_cutoff=cutoff)
+        _assert_ranks({r["node"]: r["rank"] for r in ranks.collect()}, want, tier)
+        assert m["path"] == f"{tier}_power_iteration"
 
 
 def test_pagerank_weighted_matches_dense_power_iteration(spark):
@@ -69,16 +84,15 @@ def test_pagerank_weighted_matches_dense_power_iteration(spark):
         [(s, d, w) for (s, d), w in zip(pairs, weights)],
         "src string, dst string, w double",
     )
-    got = {r["node"]: r["rank"] for r in pagerank(e, iterations=4, weight="w").collect()}
     want = _pagerank_reference(pairs, iterations=4, damping=0.85, weights=weights)
-    assert set(got) == set(want)
-    for node in want:
-        assert got[node] == pytest.approx(want[node], abs=1e-12)
-    # uniform weights must reproduce the classic unweighted ranks exactly
     ones = e.withColumn("w", F.lit(1.0))
-    a = sorted((r.node, r.rank) for r in pagerank(ones, iterations=4, weight="w").collect())
-    b = sorted((r.node, r.rank) for r in pagerank(e.drop("w"), iterations=4).collect())
-    assert a == b
+    for tier, cutoff in TIERS:
+        ranks = pagerank(e, iterations=4, weight="w", small_cutoff=cutoff)
+        _assert_ranks({r["node"]: r["rank"] for r in ranks.collect()}, want, tier)
+        # uniform weights must reproduce the classic unweighted ranks exactly
+        a = pagerank(ones, iterations=4, weight="w", small_cutoff=cutoff).collect()
+        b = pagerank(e.drop("w"), iterations=4, small_cutoff=cutoff).collect()
+        assert sorted((r.node, r.rank) for r in a) == sorted((r.node, r.rank) for r in b), tier
 
 
 def test_pagerank_mass_conserved_and_deterministic(spark):
@@ -88,7 +102,11 @@ def test_pagerank_mass_conserved_and_deterministic(spark):
     m = {}
     r1 = pagerank(e, iterations=6, metrics=m).collect()
     assert sum(r["rank"] for r in r1) == pytest.approx(1.0, abs=1e-9)
-    assert m == {"iterations": 6, "n_nodes": len({n for p in pairs for n in p})}
+    assert m == {
+        "iterations": 6,
+        "n_nodes": len({n for p in pairs for n in p}),
+        "path": "driver_power_iteration",
+    }
     r2 = pagerank(e, iterations=6).collect()
     assert sorted((r["node"], r["rank"]) for r in r1) == sorted(
         (r["node"], r["rank"]) for r in r2
@@ -203,35 +221,37 @@ def _lpa_reference(pairs, iterations):
 
 
 def test_label_propagation_two_communities(spark):
-    from informers_spark.operators.graph import label_propagation
-
     # two triangles joined by one bridge: LPA should settle into two
     # communities matching the independent reference implementation
     pairs = [("a", "b"), ("b", "c"), ("a", "c"),
              ("x", "y"), ("y", "z"), ("x", "z"), ("c", "x")]
     e = _edges(spark, pairs)
-    m = {}
-    got = {r.node: r.label for r in label_propagation(e, iterations=3, metrics=m).collect()}
-    assert got == _lpa_reference(pairs, 3)
-    assert m == {"iterations": 3}
-    # the two triangle cores agree internally
-    assert got["a"] == got["b"] == got["c"] or len({got["a"], got["b"], got["c"]}) <= 2
+    for tier, cutoff in TIERS:
+        m = {}
+        labels = label_propagation(e, iterations=3, metrics=m, small_cutoff=cutoff)
+        got = {r.node: r.label for r in labels.collect()}
+        assert got == _lpa_reference(pairs, 3), tier
+        assert m == {"iterations": 3, "path": f"{tier}_label_vote"}
+        # the two triangle cores agree internally
+        assert got["a"] == got["b"] == got["c"] or len({got["a"], got["b"], got["c"]}) <= 2
 
 
 def test_label_propagation_star_absorbs_min_label(spark):
-    from informers_spark.operators.graph import label_propagation
-
     # star: after iter1 every rim node takes the hub's label ("h"),
     # hub takes min rim label; matches reference exactly
     pairs = [("h", f"r{i}") for i in range(5)]
-    got = {r.node: r.label for r in label_propagation(_edges(spark, pairs), iterations=2).collect()}
-    assert got == _lpa_reference(pairs, 2)
+    for tier, cutoff in TIERS:
+        labels = label_propagation(_edges(spark, pairs), iterations=2, small_cutoff=cutoff)
+        assert {r.node: r.label for r in labels.collect()} == _lpa_reference(pairs, 2), tier
 
 
 def _lpa_rows(e):
-    from informers_spark.operators.graph import label_propagation
-
     return [(r.node, r.label) for r in label_propagation(e, iterations=3).collect()]
+
+
+def _lpa_distributed_rows(e):
+    labels = label_propagation(e, iterations=3, small_cutoff=0)
+    return [(r.node, r.label) for r in labels.collect()]
 
 
 def _khop_rows(e):
@@ -255,7 +275,9 @@ def _cc_rows(e):
 
 
 @pytest.mark.parametrize(
-    "run", [_lpa_rows, _khop_rows, _sssp_rows, _cc_rows], ids=["lpa", "k_hop", "sssp", "cc"]
+    "run",
+    [_lpa_rows, _lpa_distributed_rows, _khop_rows, _sssp_rows, _cc_rows],
+    ids=["lpa", "lpa_distributed", "k_hop", "sssp", "cc"],
 )
 def test_label_propagation_deterministic_across_partitionings(spark, run):
     # MIN and integer votes are exact, so rows must not depend on how
@@ -293,8 +315,6 @@ def _ppr_reference(pairs, seeds, iterations, damping, weights=None):
 
 @pytest.mark.parametrize("weights", [None, [3.0, 1.0, 2.0, 1.0]], ids=["unweighted", "weighted"])
 def test_personalized_pagerank_matches_dense_reference(spark, weights):
-    from informers_spark.operators.graph import personalized_pagerank
-
     # a->b->c chain plus shortcut a->c reachable from the seed (a's
     # out-weight split is what the weighted case tests), x->y
     # disconnected, plus an isolated seed node "s2" not present in the edges
@@ -304,30 +324,76 @@ def test_personalized_pagerank_matches_dense_reference(spark, weights):
         "src string, dst string, w double",
     )
     seeds = spark.createDataFrame([("a",), ("s2",)], "node string")
-    m = {}
     kw = {"weight": "w"} if weights else {}
-    got = {
-        r.node: r.rank
-        for r in personalized_pagerank(e, seeds, iterations=4, metrics=m, **kw).collect()
-    }
     want = _ppr_reference(pairs, ["a", "s2"], iterations=4, damping=0.85, weights=weights)
-    assert set(got) == set(want)
-    for node in want:
-        assert got[node] == pytest.approx(want[node], abs=1e-12)
-    assert m == {"iterations": 4, "n_seeds": 2}
-    # mass conserved; nodes unreachable from the seeds are EXACTLY zero
-    assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
-    assert got["x"] == 0.0 and got["y"] == 0.0
-    assert got["s2"] > 0  # isolated seed keeps its teleport share
+    for tier, cutoff in TIERS:
+        m = {}
+        ranks = personalized_pagerank(
+            e, seeds, iterations=4, metrics=m, small_cutoff=cutoff, **kw
+        )
+        got = {r.node: r.rank for r in ranks.collect()}
+        _assert_ranks(got, want, tier)
+        assert m == {"iterations": 4, "n_seeds": 2, "path": f"{tier}_power_iteration"}
+        # mass conserved; nodes unreachable from the seeds are EXACTLY zero
+        assert sum(got.values()) == pytest.approx(1.0, abs=1e-9)
+        assert got["x"] == 0.0 and got["y"] == 0.0
+        assert got["s2"] > 0  # isolated seed keeps its teleport share
 
 
 def test_personalized_pagerank_empty_seeds_raises(spark):
-    from informers_spark.operators.graph import personalized_pagerank
-
     e = _edges(spark, [("a", "b")])
     empty = spark.createDataFrame([], "node string")
     with pytest.raises(ValueError):
         personalized_pagerank(e, empty, iterations=2)
+
+
+def test_size_tier_boundary(spark):
+    # exactly small_cutoff edges take the driver tier, one more edge the
+    # distributed loop; personalized pagerank also probes its seeds
+    from informers_spark.operators.canon import connected_components
+
+    cutoff = 4
+    seeds = spark.createDataFrame([("a",)], "node string")
+
+    def paths(pairs, seeds=seeds):
+        e = _edges(spark, pairs)
+        pr, ppr, lp, cc = {}, {}, {}, {}
+        pagerank(e, iterations=2, metrics=pr, small_cutoff=cutoff)
+        personalized_pagerank(e, seeds, iterations=2, metrics=ppr, small_cutoff=cutoff)
+        label_propagation(e, iterations=2, metrics=lp, small_cutoff=cutoff)
+        connected_components(e, metrics=cc, small_cutoff=cutoff)
+        return pr["path"], ppr["path"], lp["path"], cc["path"]
+
+    pairs = [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")]
+    assert paths(pairs) == (
+        "driver_power_iteration", "driver_power_iteration",
+        "driver_label_vote", "driver_union_find",
+    )
+    assert paths(pairs + [("d", "e")]) == (
+        "distributed_power_iteration", "distributed_power_iteration",
+        "distributed_label_vote", "distributed_pointer_jumping",
+    )
+    many = spark.createDataFrame([(n,) for n in "abcde"], "node string")
+    m = {}
+    personalized_pagerank(_edges(spark, pairs), many, iterations=2, metrics=m, small_cutoff=cutoff)
+    assert m["path"] == "distributed_power_iteration"
+
+
+def test_null_endpoint_tiers_agree(spark):
+    # label propagation's `nbr != node` filter drops a NULL endpoint, and so
+    # does its driver tier; pagerank's joins drop NULL keys in ways its
+    # driver recurrence does not mirror, so that input takes the
+    # distributed loop. Either way the rows equal small_cutoff=0's.
+    e = _edges(spark, [("a", "b"), ("b", None), (None, "c"), ("c", "a"), ("b", "c")])
+    m_lp, m_pr = {}, {}
+    lp = {r.node: r.label for r in label_propagation(e, iterations=3, metrics=m_lp).collect()}
+    lp0 = {r.node: r.label for r in label_propagation(e, iterations=3, small_cutoff=0).collect()}
+    assert m_lp["path"] == "driver_label_vote"
+    assert lp == lp0 and None not in lp
+    pr = {r.node: r.rank for r in pagerank(e, iterations=3, metrics=m_pr).collect()}
+    pr0 = {r.node: r.rank for r in pagerank(e, iterations=3, small_cutoff=0).collect()}
+    assert m_pr["path"] == "distributed_power_iteration"
+    assert pr == pytest.approx(pr0, abs=1e-12)
 
 
 def _sssp_reference(pairs, weights, seeds, k):

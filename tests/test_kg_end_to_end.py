@@ -298,8 +298,13 @@ def test_materialize_graph_stats_resumable(spark, kg):
     assert ranks.count() == n_nodes
     assert comms.count() == n_nodes
     assert wh.manifest("node_ranks")["rows_per_sec"] is not None
+    # the size tier each operator took is persisted with its table
+    assert wh.manifest("node_ranks")["path"] == "driver_power_iteration"
+    assert wh.manifest("node_communities")["path"] == "driver_label_vote"
+    assert m1["node_ranks"]["iterations"] == m1["node_communities"]["iterations"] == 2
 
     # second run: both stages skip and report what the fresh run wrote
+    # (the persisted paths included)
     m2 = materialize_graph_stats(spark, root, pagerank_iterations=2, lpa_iterations=2)
     for name in m1:
         assert "stage_wall_sec" in m1[name]
