@@ -375,8 +375,8 @@ class HashBackend:
         cosine of each vocab vector against the mean of (context tokens +
         tokens generated so far), as one [b, dim] @ [dim, V] matmul, plus
         an EOS logit that grows with the generated length (sequences
-        terminate deterministically). Stands in for decoder_forward
-        (reference: lib/informers/models.rb:665-689) offline.
+        terminate deterministically). Stands in for the reference's
+        decoder step (lib/informers/models.rb:665-689) offline.
 
         The decode loop calls this once PER STEP with the same contexts:
         the normalized vocab matrix is cached on the instance and each

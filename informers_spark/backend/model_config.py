@@ -1,33 +1,12 @@
-"""Model config.json parsing — the config-driven dispatch the reference
-does in AutoConfig / the Auto* registries (reference:
-lib/informers/configs.rb:19-42, lib/informers/models.rb:1223-1495).
+"""Model config.json parsing — model_type and labels, as the reference's
+AutoConfig reads them (lib/informers/configs.rb:19-42), plus the
+model_type → pad preset map the vision preprocessing picks by.
 
 Separate from onnx_backend so it imports (and unit-tests) without the
 onnxruntime wheel.
 """
 
 from __future__ import annotations
-
-# model_type → architecture family, distilled from the reference's
-# MODEL_CLASS_MAPPINGS (models.rb:1223-1495). v1 loads encoder-only
-# sessions; the map documents which model types that covers and lets
-# from_pretrained fail loudly on decoder/seq2seq checkpoints instead of
-# feeding them a wrong session layout.
-ENCODER_ONLY_MODEL_TYPES = {
-    "bert", "albert", "camembert", "convbert", "deberta", "deberta-v2",
-    "distilbert", "electra", "roberta", "xlm", "xlm-roberta", "mpnet",
-    "mobilebert", "nomic_bert", "roformer", "squeezebert", "mpt",
-}
-SEQ2SEQ_MODEL_TYPES = {"t5", "mt5", "bart", "mbart", "marian", "m2m_100", "nllb"}
-DECODER_ONLY_MODEL_TYPES = {"gpt2", "gptj", "gpt_neo", "gpt_neox", "llama", "mistral", "qwen2"}
-# Two-session SAM shape: vision_encoder + prompt_encoder_mask_decoder
-# (reference MaskGeneration loading slot, models.rb:154-158). Upstream's
-# MODEL_FOR_MASK_GENERATION_MAPPING_NAMES is EMPTY (models.rb:1324-1325)
-# so the type is registry-unreachable there; "sam" is the transformers.js
-# model_type the slot exists for, and config-driven dispatch makes it
-# reachable here.
-MASK_GENERATION_MODEL_TYPES = {"sam"}
-
 
 # model_type → named pad preset (the per-model pad_image overrides the
 # reference implements as FeatureExtractor subclasses: Swin2SR

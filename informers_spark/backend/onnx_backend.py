@@ -11,6 +11,9 @@ Mirrors the reference's execution model, re-expressed for executors:
 - one InferenceSession per python worker process (executor-singleton),
   the distributed analog of the reference's file cache
   (reference: lib/informers/utils/hub.rb:70-104)
+- exactly one session, onnx/model{suffix}.onnx: this port has neither the
+  reference's KV-cache text generation (models.rb:429-463, :665-689) nor
+  its MaskGeneration (SAM) session pair (models.rb:154-158)
 
 On a real cluster the model dir ships via spark-submit --py-files (zip)
 or a shared mount; $INFORMERS_SPARK_MODEL_DIR points at it.
@@ -26,21 +29,11 @@ import numpy as np
 import onnxruntime as ort  # noqa: F401  (import-guarded by caller)
 from tokenizers import Tokenizer  # noqa: F401
 
-from informers_spark.backend.model_config import (
-    DECODER_ONLY_MODEL_TYPES,
-    MASK_GENERATION_MODEL_TYPES,
-    parse_model_config,
-)
+from informers_spark.backend.model_config import parse_model_config
+from informers_spark.sources.hub import get_model_file
 
 
 class OnnxBackend:
-    @staticmethod
-    def _peek_model_type(cfg_path: str | None) -> str | None:
-        if cfg_path is None or not os.path.exists(cfg_path):
-            return None
-        with open(cfg_path) as f:
-            return json.load(f).get("model_type")
-
     def __init__(
         self,
         model_dir: str | None = None,
@@ -54,71 +47,30 @@ class OnnxBackend:
         # dtype → file suffix, matching reference: lib/informers/utils/dtypes.rb:3-12
         suffix = {"fp32": "", "fp16": "_fp16", "int8": "_int8", "q8": "_quantized",
                   "uint8": "_uint8", "q4": "_q4", "q4f16": "_q4f16", "bnb4": "_bnb4"}[dtype]
-        if not os.path.isdir(model_dir):
-            if os.path.isabs(model_dir) or model_dir.startswith("."):
-                # a filesystem path that doesn't exist is a staging
-                # failure — fail fast, never fall through to network
-                # resolution (a typo'd mount would otherwise hang every
-                # Python worker in urlopen before erroring)
-                raise RuntimeError(f"model dir does not exist: {model_dir!r}")
-            # repo id, not a staged dir: cache-first hub resolution per
-            # file (reference from_pretrained -> get_model_file,
-            # hub.rb:118-220). Driver-side; executors get a staged dir.
-            from informers_spark.sources.hub import get_model_file
+        staged = os.path.isdir(model_dir)
+        if not staged and (os.path.isabs(model_dir) or model_dir.startswith(".")):
+            # a filesystem path that doesn't exist is a staging failure —
+            # fail fast, never fall through to network resolution (a
+            # typo'd mount would otherwise hang every Python worker in
+            # urlopen before erroring)
+            raise RuntimeError(f"model dir does not exist: {model_dir!r}")
 
-            # config FIRST: the session layout is config-driven (the
-            # MaskGeneration/SAM shape ships vision_encoder +
-            # prompt_encoder_mask_decoder instead of model.onnx,
-            # models.rb:154-158)
-            cfg_path = get_model_file(model_dir, "config.json", fatal=False)
-            mt = self._peek_model_type(cfg_path)
-            if mt in MASK_GENERATION_MODEL_TYPES:
-                model_path = get_model_file(model_dir, f"onnx/vision_encoder{suffix}.onnx")
-                prompt_path = get_model_file(
-                    model_dir, f"onnx/prompt_encoder_mask_decoder{suffix}.onnx"
-                )
-                tok_path = None
-            else:
-                model_path = get_model_file(model_dir, f"onnx/model{suffix}.onnx")
-                tok_path = get_model_file(model_dir, "tokenizer.json")
-                prompt_path = None
-                # seq2seq/decoder checkpoints ship a merged decoder next to
-                # the encoder (optimum layout); fetch it too so the KV-cache
-                # path works for hub-resolved ids, not only pre-staged dirs
-                # (the dec_path probe below looks in the cached file's dir)
-                get_model_file(
-                    model_dir, f"onnx/decoder_model_merged{suffix}.onnx", fatal=False
-                )
-        else:
-            cfg_path = os.path.join(model_dir, "config.json")
-            if not os.path.exists(cfg_path):
-                cfg_path = None
-            mt = self._peek_model_type(cfg_path)
-            if mt in MASK_GENERATION_MODEL_TYPES:
-                model_path = os.path.join(model_dir, "onnx", f"vision_encoder{suffix}.onnx")
-                prompt_path = os.path.join(
-                    model_dir, "onnx", f"prompt_encoder_mask_decoder{suffix}.onnx"
-                )
-                tok_path = None
-            else:
-                model_path = os.path.join(model_dir, "onnx", f"model{suffix}.onnx")
-                tok_path = os.path.join(model_dir, "tokenizer.json")
-                prompt_path = None
+        def resolve(name: str, fatal: bool = True) -> str | None:
+            # one lookup for a staged dir and a repo id: cache-first hub
+            # resolution (reference from_pretrained -> get_model_file,
+            # hub.rb:118-220), local-only for a staged dir, so executors
+            # never reach the network
+            return get_model_file(model_dir, name, fatal=fatal, local_files_only=staged)
+
+        cfg_path = resolve("config.json", fatal=False)
+        model_path = resolve(f"onnx/model{suffix}.onnx")
+        tok_path = resolve("tokenizer.json")
         self.session = ort.InferenceSession(
             model_path, providers=["CPUExecutionProvider"]
         )
-        # second session of the MaskGeneration pair (models.rb:154-158);
-        # None for every other model type
-        self.prompt_mask_session = None
-        if prompt_path is not None:
-            self.prompt_mask_session = ort.InferenceSession(
-                prompt_path, providers=["CPUExecutionProvider"]
-            )
-        self.tokenizer = None
-        if tok_path is not None:
-            self.tokenizer = Tokenizer.from_file(tok_path)
-            self.tokenizer.enable_padding()
-            self.tokenizer.enable_truncation(max_length=max_tokens)
+        self.tokenizer = Tokenizer.from_file(tok_path)
+        self.tokenizer.enable_padding()
+        self.tokenizer.enable_truncation(max_length=max_tokens)
         self.max_tokens = max_tokens
         try:
             self.dim = int(self.session.get_outputs()[0].shape[-1])
@@ -139,7 +91,7 @@ class OnnxBackend:
         # config-driven labels (reference: configs.rb:19-42); without this
         # classify/ner would emit stringified int labels
         self.model_type, self.id2label, self.label2id = None, None, {}
-        if cfg_path is not None and os.path.exists(cfg_path):
+        if cfg_path is not None:
             with open(cfg_path) as f:
                 parsed = parse_model_config(json.load(f))
             self.model_type = parsed["model_type"]
@@ -147,54 +99,6 @@ class OnnxBackend:
             self.label2id = parsed["label2id"]
         self._decode_cache: dict[int, str] = {}
         self._decode_skip_cache: dict[int, str] = {}
-        # decoder-capable checkpoints ship a merged decoder session next
-        # to the encoder (optimum layout); load it when staged so the
-        # generate loop can run the KV-cache path (reference constructors
-        # take decoder_merged_session, models.rb:890-904)
-        self.decoder_session = None
-        self._kv_dims: dict = {}
-        self._raw_config: dict = {}
-        if cfg_path is not None and os.path.exists(cfg_path):
-            with open(cfg_path) as f:
-                self._raw_config = json.load(f)
-        dec_path = os.path.join(
-            os.path.dirname(model_path), f"decoder_model_merged{suffix}.onnx"
-        )
-        if os.path.exists(dec_path):
-            from informers_spark.backend.kv_cache import kv_dims_from_config
-
-            self.decoder_session = ort.InferenceSession(
-                dec_path, providers=["CPUExecutionProvider"]
-            )
-            self._kv_dims = kv_dims_from_config(self._raw_config)
-        elif self.model_type in DECODER_ONLY_MODEL_TYPES:
-            # GPT-style checkpoint whose MAIN session is the decoder (no
-            # decoder_model_merged file, models.rb:1090-1096): the first
-            # generate step still needs zero-length past feeds, so derive
-            # the KV dims from config.json (n_layer/n_head/n_embd) here —
-            # decoder_forward's `self._kv_dims or {}` fallback used to
-            # leave this empty and the session rejected the missing
-            # past_key_values inputs
-            from informers_spark.backend.kv_cache import kv_dims_from_config
-
-            try:
-                self._kv_dims = kv_dims_from_config(self._raw_config)
-            except (ValueError, KeyError, TypeError):
-                # TypeError: config has n_layer but n_head/n_embd None —
-                # kv_dims_from_config divides them (ADVICE r4)
-                # family without a dim rule: unchanged behavior (the
-                # generate loop will surface the missing-past error)
-                pass
-
-    def set_padding_side(self, side: str) -> None:
-        """tokenizer.padding_side= (reference tokenizers.rb:141-143 →
-        enable_padding(direction:)); the text-generation pipeline sets
-        'left' before batch-encoding prompts (pipelines.rb:388) so
-        decoder-only models read next-token logits at the last position
-        for every row of an unequal-length batch."""
-        if side not in ("left", "right"):
-            raise ValueError(f"padding_side must be 'left' or 'right', got {side!r}")
-        self.tokenizer.enable_padding(direction=side)
 
     # --- tokenizer id/token conversion (reference tokenizers.rb:129-139) ----
     def id_to_token(self, tid: int) -> str | None:
@@ -304,61 +208,16 @@ class OnnxBackend:
         outs, _ = self._run(enc)
         return outs[0][:, 0].astype(np.float32)
 
-    GEN_VOCAB: list[str] = []  # populated only by decoder-capable backends
-
-    # --- KV-cache generation path (requires a staged merged decoder) -------
-
-    def seq2seq_forward(self, model_inputs: dict) -> dict:
-        """Encoder-once + cached decoder step (reference
-        models.rb:429-463); pure plumbing lives in kv_cache.py so the
-        transforms are offline-testable."""
-        from informers_spark.backend import kv_cache
-
-        if self.decoder_session is None:
-            raise RuntimeError("no decoder_model_merged staged for this checkpoint")
-
-        def encoder_forward(mi):
-            outs = self._run_feeds(
-                {
-                    "input_ids": np.asarray(mi["input_ids"], dtype=np.int64),
-                    "attention_mask": np.asarray(mi["attention_mask"], dtype=np.int64),
-                }
-            )
-            return outs[0]
-
-        return kv_cache.seq2seq_forward(
-            self.decoder_session,
-            model_inputs,
-            dims={"batch_size": len(model_inputs.get("decoder_input_ids", [1])), **self._kv_dims},
-            encoder_forward=encoder_forward,
-        )
-
-    def decoder_forward(self, model_inputs: dict) -> dict:
-        """Decoder-only forward with KV cache (reference
-        models.rb:665-689); the main session IS the decoder for GPT-style
-        checkpoints (MAIN session slot, models.rb:1090-1096)."""
-        from informers_spark.backend import kv_cache
-
-        session = self.decoder_session or self.session
-        dims = self._kv_dims or {}
-        return kv_cache.decoder_forward(
-            session,
-            model_inputs,
-            dims={"batch_size": len(model_inputs["input_ids"]), **dims},
-        )
+    GEN_VOCAB: list[str] = []  # generation runs on the hash backend only
 
     def next_logits(self, contexts, generated):
-        """Deterministic-vocab decoder step used by the offline generate
-        loop. The ONNX path instead runs seq2seq_forward/decoder_forward
-        over real token ids (KV-cache plumbing above); the string-vocab
-        contract here belongs to the hash backend, so absent a decoder
-        session this stays a designed failure rather than an
+        """The generate loop's decoder step. This port has no ONNX
+        generation (the reference's KV-cache decoder, models.rb:429-463,
+        :665-689), so this is a designed failure rather than an
         AttributeError."""
         raise NotImplementedError(
-            "OnnxBackend generation runs via seq2seq_forward/decoder_forward "
-            "over token ids (reference: models.rb:429-463, :665-689); the "
-            "string-vocab next_logits contract is the hash backend's — use "
-            "backend='hash' offline"
+            "OnnxBackend has no text generation; the string-vocab "
+            "next_logits contract is the hash backend's — use backend='hash'"
         )
 
     # --- vision / audio session plumbing ---------------------------------------
@@ -485,36 +344,6 @@ class OnnxBackend:
             self.id2label or [str(i) for i in range(logits.shape[-1])]
         )
         return logits, id2label
-
-    # --- MaskGeneration (SAM) session pair ------------------------------------
-    # The reference's last un-ported model_type: two sessions, no pipeline
-    # consumes them upstream either (MODEL_FOR_MASK_GENERATION_MAPPING_NAMES
-    # is empty, models.rb:1324-1325) — this is loading/forward parity only.
-
-    def sam_image_embeddings(self, pixel_values: np.ndarray) -> np.ndarray:
-        """vision_encoder run (first MaskGeneration session,
-        models.rb:156): pixel_values [B,C,H,W] f32 → image embeddings
-        (output slot 0). Run ONCE per image; the prompt decoder is then
-        cheap per point-prompt."""
-        if self.prompt_mask_session is None:
-            raise RuntimeError("not a MaskGeneration checkpoint (no session pair)")
-        outs = self._run_feeds({"pixel_values": np.asarray(pixel_values, np.float32)})
-        return outs[0].astype(np.float32)
-
-    def sam_mask_forward(self, feeds: dict) -> list:
-        """prompt_encoder_mask_decoder run (second MaskGeneration session,
-        models.rb:157), declared-inputs-only: feeds exactly the session's
-        inputs (image_embeddings / input_points / input_labels …,
-        models.rb:653-663 contract) and returns the raw output list
-        (masks, iou_scores)."""
-        if self.prompt_mask_session is None:
-            raise RuntimeError("not a MaskGeneration checkpoint (no session pair)")
-        names = {i.name for i in self.prompt_mask_session.get_inputs()}
-        feed = {k: np.asarray(v) for k, v in feeds.items() if k in names}
-        missing = names - set(feed)
-        if missing:
-            raise RuntimeError(f"session expects inputs {sorted(missing)}")
-        return self.prompt_mask_session.run(None, feed)
 
     def qa_batch(self, questions: list[str], contexts: list[str]):
         """Batched QA: ONE encode_batch + ONE session.run per Arrow batch

@@ -19,17 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from informers_spark.operators.graph import SMALL_EDGES, _small_edges, iterate
+from informers_spark.operators.graph import SMALL_EDGES, _driver_frame, _small_edges, iterate
 
 
-def _union_find_components(edges_rows, node_type, spark) -> "DataFrame":
-    """Driver-side union-find for BELOW-CUTOFF edge lists: identical
-    output contract to the distributed loop (component = min member),
-    at ~1000x less fixed cost (one job vs ~4 shuffles per loop round).
-    The size gate is the same trick AQE uses demoting a sort-merge join
-    to a broadcast join when a side turns out tiny."""
-    from pyspark.sql import types as T
-
+def _union_find_components(edges_rows) -> dict:
+    """Driver-side union-find for BELOW-CUTOFF edge lists → {"node",
+    "component"} columns for graph._driver_frame: identical output
+    contract to the distributed loop (component = min member), at ~1000x
+    less fixed cost (one job vs ~4 shuffles per loop round). The size
+    gate is the same trick AQE uses demoting a sort-merge join to a
+    broadcast join when a side turns out tiny."""
     parent: dict = {}
 
     def find(x):
@@ -51,14 +50,11 @@ def _union_find_components(edges_rows, node_type, spark) -> "DataFrame":
     groups: dict = {}
     for node in parent:
         groups.setdefault(find(node), []).append(node)
-    rows = []
+    nodes, comps = [], []
     for members in groups.values():
-        comp = min(members)
-        rows.extend((m, comp) for m in members)
-    schema = T.StructType(
-        [T.StructField("node", node_type), T.StructField("component", node_type)]
-    )
-    return spark.createDataFrame(rows, schema)
+        nodes.extend(members)
+        comps.extend([min(members)] * len(members))
+    return {"node": nodes, "component": comps}
 
 
 def connected_components(
@@ -88,14 +84,19 @@ def connected_components(
     pure fixed cost. Above the cutoff (any real KG run) the distributed
     loop runs unchanged; both paths emit the identical (node,
     component=min member) contract and are equality-tested against each
-    other. small_cutoff=0 forces the distributed path."""
+    other. small_cutoff=0 forces the distributed path. Edges with a NULL
+    endpoint are dropped before either path runs."""
+    edges = edges.dropna(subset=[src, dst])
     rows = _small_edges(edges, [src, dst], small_cutoff)
     if rows is not None:
         if metrics is not None:
             metrics["iterations"] = 0
             metrics["converged"] = True
             metrics["path"] = "driver_union_find"
-        return _union_find_components(rows, edges.schema[src].dataType, edges.sparkSession)
+        node_type = edges.schema[src].dataType
+        return _driver_frame(
+            edges.sparkSession, _union_find_components(rows), [node_type, node_type]
+        )
     if metrics is not None:
         metrics["path"] = "distributed_pointer_jumping"
     sym = (

@@ -23,7 +23,10 @@ Scale shape (the part that must survive 100 TB):
   on the driver over the collected rows (one Spark job, where each
   distributed round costs several checkpoint jobs of pure fixed cost at
   that size) and build the result from pandas; `metrics["path"]` records
-  which tier ran. `small_cutoff=0` forces the distributed loop.
+  which tier ran. `small_cutoff=0` forces the distributed loop. All four
+  first drop edges with a NULL endpoint (the rank walk also those with a
+  NULL weight, and personalized pagerank NULL seeds), so both tiers see
+  the same input and no NULL node reaches the result.
 - Above the cutoff, every iterative loop here and in canon runs on the
   one driver, `iterate`: it `localCheckpoint()`s each round, so the
   lineage stays O(1) instead of O(iters) and a star-shaped hot component
@@ -174,10 +177,10 @@ def _rank_walk(
     (1-d)/N, dangling share mass/N) and `personalized_pagerank`
     (teleport (1-d)·s(v), dangling share mass·s(v)).
 
+    Edges with a NULL endpoint or weight and NULL seeds are dropped first.
     Size-tiered: when the edges (and the seeds) are at most `small_cutoff`
     rows each, `_driver_rank_walk` runs the recurrence in numpy over the
-    collected rows. A NULL endpoint, weight or seed takes the distributed
-    path, whose joins drop it in ways the driver tier does not mirror.
+    collected rows.
 
     Distributed setup is ONE dual-explode aggregation: node universe, out-weights
     and dangling flags in a single shuffle (dst occurrences add an exact
@@ -189,16 +192,16 @@ def _rank_walk(
     broadcast of the 1-row dangling aggregate (the dangling flag rides
     the rank table, so it is a filter, not an anti-join)."""
     w_col = F.col(weight).cast("double") if weight is not None else F.lit(1.0)
+    edges = edges.dropna(subset=[src, dst] + ([weight] if weight is not None else []))
     rows = _small_edges(edges, [F.col(src), F.col(dst), w_col], small_cutoff)
     seed_vals = None
-    if rows is not None and seeds is not None:
-        seed_rows = _small_edges(seeds, seeds.columns[:1], small_cutoff)
-        seed_vals = None if seed_rows is None else [r[0] for r in seed_rows]
-        rows = None if seed_vals is None else rows
-    # (a Row's `in` tests its field names, hence the explicit `is None`)
-    if rows is not None and not any(
-        v is None for vals in [*rows, seed_vals or ()] for v in vals
-    ):
+    if seeds is not None:
+        seeds = seeds.dropna(subset=seeds.columns[:1])
+        if rows is not None:
+            seed_rows = _small_edges(seeds, seeds.columns[:1], small_cutoff)
+            seed_vals = None if seed_rows is None else [r[0] for r in seed_rows]
+            rows = None if seed_vals is None else rows
+    if rows is not None:
         ranks, sizes = _driver_rank_walk(rows, seed_vals, iterations, damping)
         if metrics is not None:
             metrics.update(iterations=iterations, path="driver_power_iteration", **sizes)
@@ -489,8 +492,10 @@ def label_propagation(
     hottest node's degree, same skew profile as the degree computation
     itself.
 
-    Size-tiered: at most `small_cutoff` edges run `_driver_label_vote`
-    over the collected rows instead (`metrics["path"]` says which)."""
+    Edges with a NULL endpoint are dropped. Size-tiered: at most
+    `small_cutoff` edges run `_driver_label_vote` over the collected rows
+    instead (`metrics["path"]` says which)."""
+    edges = edges.dropna(subset=[src, dst])
     rows = _small_edges(edges, [src, dst], small_cutoff)
     if rows is not None:
         if metrics is not None:
@@ -531,12 +536,12 @@ def label_propagation(
 
 def _driver_label_vote(rows, iterations: int) -> dict:
     """`label_propagation`'s rounds over collected (src, dst) rows →
-    {"node", "label"} columns. Self-loops and NULL endpoints are dropped,
-    as the distributed `nbr != node` filter drops them; each parallel edge
-    is one vote; the pick is (max count, min label)."""
+    {"node", "label"} columns. Self-loops are dropped, as the distributed
+    `nbr != node` filter drops them; each parallel edge is one vote; the
+    pick is (max count, min label)."""
     nbrs: dict = {}
     for u, v in rows:
-        if u is not None and v is not None and u != v:
+        if u != v:
             nbrs.setdefault(v, []).append(u)
             nbrs.setdefault(u, []).append(v)
     labels = {node: node for node in nbrs}

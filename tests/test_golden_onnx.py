@@ -4,9 +4,9 @@ against OnnxBackend running the same public checkpoints. Skips cleanly
 when the onnxruntime/tokenizers wheels are absent (this sandbox) or the
 checkpoint cannot be staged (offline); the day the wheels appear, these
 gate the exact path with the reference's own values. The offline
-counterpart — mocked-session coverage of the ONNX wiring (declared-
-inputs feed, present→past mapping, output slots) — lives in
-tests/test_kv_cache.py.
+counterpart — stubbed-module coverage of the ONNX wiring (one session
+per checkpoint, config labels, output-name selection) — lives in
+tests/test_onnx_backend.py.
 """
 
 import importlib.util

@@ -380,20 +380,46 @@ def test_size_tier_boundary(spark):
 
 
 def test_null_endpoint_tiers_agree(spark):
-    # label propagation's `nbr != node` filter drops a NULL endpoint, and so
-    # does its driver tier; pagerank's joins drop NULL keys in ways its
-    # driver recurrence does not mirror, so that input takes the
-    # distributed loop. Either way the rows equal small_cutoff=0's.
-    e = _edges(spark, [("a", "b"), ("b", None), (None, "c"), ("c", "a"), ("b", "c")])
-    m_lp, m_pr = {}, {}
-    lp = {r.node: r.label for r in label_propagation(e, iterations=3, metrics=m_lp).collect()}
-    lp0 = {r.node: r.label for r in label_propagation(e, iterations=3, small_cutoff=0).collect()}
-    assert m_lp["path"] == "driver_label_vote"
-    assert lp == lp0 and None not in lp
-    pr = {r.node: r.rank for r in pagerank(e, iterations=3, metrics=m_pr).collect()}
-    pr0 = {r.node: r.rank for r in pagerank(e, iterations=3, small_cutoff=0).collect()}
-    assert m_pr["path"] == "distributed_power_iteration"
-    assert pr == pytest.approx(pr0, abs=1e-12)
+    # every size-tiered operator drops an edge with a NULL endpoint (the
+    # rank walk also one with a NULL weight, personalized pagerank a NULL
+    # seed) before either tier runs: both tiers return the same rows, no
+    # NULL node appears and pagerank's rank mass stays 1
+    from informers_spark.operators.canon import connected_components
+
+    pairs = [("a", "b"), ("b", None), (None, "c"), ("c", "a"), ("b", "c"), ("d", "a")]
+    weights = [1.0, 2.0, 3.0, 1.0, None, 2.0]
+    e = spark.createDataFrame(
+        [(s, d, w) for (s, d), w in zip(pairs, weights)], "src string, dst string, w double"
+    )
+    seeds = spark.createDataFrame([("a",), (None,)], "node string")
+    runs = {
+        "cc": lambda c, m: connected_components(e, metrics=m, small_cutoff=c),
+        "pagerank": lambda c, m: pagerank(e, iterations=3, metrics=m, small_cutoff=c),
+        "pagerank_weighted": lambda c, m: pagerank(
+            e, iterations=3, weight="w", metrics=m, small_cutoff=c
+        ),
+        "ppr": lambda c, m: personalized_pagerank(
+            e, seeds, iterations=3, metrics=m, small_cutoff=c
+        ),
+        "lp": lambda c, m: label_propagation(e, iterations=3, metrics=m, small_cutoff=c),
+    }
+    for name, run in runs.items():
+        got, paths = {}, {}
+        for tier, cutoff in TIERS:
+            m = {}
+            got[tier] = dict(run(cutoff, m).collect())
+            paths[tier] = m["path"]
+        driver, loop = got["driver"], got["distributed"]
+        assert paths["driver"].startswith("driver_"), name
+        assert paths["distributed"].startswith("distributed_"), name
+        assert set(driver) == {"a", "b", "c", "d"}, name
+        assert None not in driver.values(), name
+        if name in ("cc", "lp"):
+            assert driver == loop, name
+        else:
+            _assert_ranks(loop, driver, name)
+            assert sum(driver.values()) == pytest.approx(1.0, abs=1e-12), name
+            assert sum(loop.values()) == pytest.approx(1.0, abs=1e-12), name
 
 
 def _sssp_reference(pairs, weights, seeds, k):
