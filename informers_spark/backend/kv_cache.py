@@ -2,7 +2,10 @@
 decoder_forward / seq2seq_forward (lib/informers/models.rb:429-463,
 :473-539, :605-634, :665-689), kept free of any onnxruntime import so
 the cache transforms are unit-testable offline with fabricated arrays
-(tests/test_kv_cache.py); OnnxBackend passes real InferenceSessions in.
+(tests/test_kv_cache.py). Nothing in the package calls it yet:
+OnnxBackend loads one encoder session and has no generation path, so
+this module is the tested core for wiring ONNX generation once the
+onnxruntime/tokenizers wheels and a decoder checkpoint are available.
 
 Sessions are duck-typed to the onnxruntime API surface actually used:
 `get_inputs()` / `get_outputs()` returning objects with `.name`, and

@@ -374,238 +374,3 @@ def test_greedy_generate_ids_seq2seq_stops_on_eos():
     )
     assert out == [2, 0]
     assert calls == [1]  # encoder ran exactly once
-
-
-def test_decoder_only_checkpoint_derives_kv_dims_without_merged_file(tmp_path, monkeypatch):
-    """GPT-style checkpoint whose MAIN session is the decoder (no
-    decoder_model_merged file): the constructor must derive _kv_dims from
-    config.json (n_layer/n_head/n_embd) so the FIRST generate step can
-    seed zero-length past feeds — previously `self._kv_dims or {}` left
-    them empty and the session rejected the missing past inputs
-    (reference decoder-only slot: models.rb:1090-1096)."""
-    import json
-    import sys
-    import types
-
-    (tmp_path / "onnx").mkdir()
-    (tmp_path / "onnx" / "model_quantized.onnx").write_bytes(b"")
-    (tmp_path / "tokenizer.json").write_text("{}")
-    (tmp_path / "config.json").write_text(
-        json.dumps({"model_type": "gpt2", "n_layer": 2, "n_head": 4, "n_embd": 16})
-    )
-
-    class _IO:
-        def __init__(self, name, shape=(1, 1, 8)):
-            self.name, self.shape = name, list(shape)
-
-    created = {}
-
-    class _Sess:
-        def __init__(self, path, providers=None):
-            self._inputs = [
-                _IO("input_ids"), _IO("attention_mask"),
-            ] + [
-                _IO(f"past_key_values.{i}.{kv}")
-                for i in range(2) for kv in ("key", "value")
-            ]
-            self._outputs = [_IO("logits")] + [
-                _IO(f"present.{i}.{kv}")
-                for i in range(2) for kv in ("key", "value")
-            ]
-            created["sess"] = self
-
-        def get_inputs(self):
-            return self._inputs
-
-        def get_outputs(self):
-            return self._outputs
-
-        def run(self, output_names, feed):
-            self.last_feed = feed
-            b, t = feed["input_ids"].shape
-            past_t = feed["past_key_values.0.key"].shape[2]
-            outs = [np.zeros((b, t, 8), dtype=np.float32)]
-            outs += [
-                np.zeros((b, 4, past_t + t, 4), dtype=np.float32) for _ in range(4)
-            ]
-            return outs
-
-    class _Tok:
-        @staticmethod
-        def from_file(path):
-            return _Tok()
-
-        def enable_padding(self, **kw):
-            pass
-
-        def enable_truncation(self, **kw):
-            pass
-
-    monkeypatch.setitem(
-        sys.modules, "onnxruntime", types.SimpleNamespace(InferenceSession=_Sess)
-    )
-    monkeypatch.setitem(
-        sys.modules, "tokenizers", types.SimpleNamespace(Tokenizer=_Tok)
-    )
-    import importlib
-
-    import informers_spark.backend as _bk
-
-    sys.modules.pop("informers_spark.backend.onnx_backend", None)
-    if hasattr(_bk, "onnx_backend"):
-        delattr(_bk, "onnx_backend")  # stale attr would shadow the re-import
-    try:
-        onnx_backend = importlib.import_module("informers_spark.backend.onnx_backend")
-
-        b = onnx_backend.OnnxBackend(str(tmp_path))
-        assert b.decoder_session is None  # no merged file staged
-        assert b._kv_dims == {
-            "is_encoder_decoder": False, "num_layers": 2, "num_heads": 4, "dim_kv": 4,
-        }
-        out = b.decoder_forward(
-            {"input_ids": np.array([[5, 6]]), "attention_mask": np.array([[1, 1]])}
-        )
-        # first step fed zero-length past tensors and got a cache back
-        assert created["sess"].last_feed["past_key_values.0.key"].shape == (1, 4, 0, 4)
-        assert out["past_key_values"]["past_key_values.1.value"].shape == (1, 4, 2, 4)
-    finally:
-        sys.modules.pop("informers_spark.backend.onnx_backend", None)
-        if hasattr(_bk, "onnx_backend"):
-            delattr(_bk, "onnx_backend")
-
-
-def test_mask_generation_checkpoint_loads_session_pair(tmp_path, monkeypatch):
-    """MaskGeneration (SAM) loading parity: config-driven dispatch must
-    construct the vision_encoder + prompt_encoder_mask_decoder session
-    PAIR (reference models.rb:154-158) — no tokenizer, no model.onnx —
-    and the prompt decoder must be fed declared-inputs-only."""
-    import json
-    import sys
-    import types
-
-    (tmp_path / "onnx").mkdir()
-    (tmp_path / "onnx" / "vision_encoder_quantized.onnx").write_bytes(b"")
-    (tmp_path / "onnx" / "prompt_encoder_mask_decoder_quantized.onnx").write_bytes(b"")
-    (tmp_path / "config.json").write_text(json.dumps({"model_type": "sam"}))
-
-    class _IO:
-        def __init__(self, name, shape=(1, 256, 64, 64)):
-            self.name, self.shape = name, list(shape)
-
-    created = []
-
-    class _Sess:
-        def __init__(self, path, providers=None):
-            self.path = path
-            if "vision_encoder" in path:
-                self._inputs = [_IO("pixel_values")]
-                self._outputs = [_IO("image_embeddings", (1, 256, "h", "w"))]
-            else:
-                self._inputs = [
-                    _IO("image_embeddings"), _IO("input_points"), _IO("input_labels"),
-                ]
-                self._outputs = [_IO("masks"), _IO("iou_scores")]
-            created.append(self)
-
-        def get_inputs(self):
-            return self._inputs
-
-        def get_outputs(self):
-            return self._outputs
-
-        def run(self, output_names, feed):
-            self.last_feed = feed
-            if "vision_encoder" in self.path:
-                b = feed["pixel_values"].shape[0]
-                return [np.zeros((b, 256, 4, 4), dtype=np.float32)]
-            return [np.zeros((1, 1, 3, 8, 8), np.float32), np.zeros((1, 1, 3), np.float32)]
-
-    monkeypatch.setitem(
-        sys.modules, "onnxruntime", types.SimpleNamespace(InferenceSession=_Sess)
-    )
-    monkeypatch.setitem(
-        sys.modules,
-        "tokenizers",
-        types.SimpleNamespace(Tokenizer=types.SimpleNamespace(from_file=None)),
-    )
-    import importlib
-
-    import informers_spark.backend as _bk
-
-    sys.modules.pop("informers_spark.backend.onnx_backend", None)
-    if hasattr(_bk, "onnx_backend"):
-        delattr(_bk, "onnx_backend")  # stale attr would shadow the re-import
-    try:
-        onnx_backend = importlib.import_module("informers_spark.backend.onnx_backend")
-
-        b = onnx_backend.OnnxBackend(str(tmp_path))
-        assert b.model_type == "sam" and b.tokenizer is None
-        assert [("vision" in s.path, "prompt" in s.path) for s in created] == [
-            (True, False), (False, True),
-        ]
-        emb = b.sam_image_embeddings(np.zeros((1, 3, 1024, 1024), np.float32))
-        assert emb.shape == (1, 256, 4, 4)
-        outs = b.sam_mask_forward(
-            {
-                "image_embeddings": emb,
-                "input_points": np.zeros((1, 1, 1, 2), np.float32),
-                "input_labels": np.ones((1, 1, 1), np.int64),
-                "not_an_input": np.zeros(1),  # must be filtered out
-            }
-        )
-        assert len(outs) == 2
-        assert "not_an_input" not in created[1].last_feed
-        # missing declared input -> loud failure, not a silent default
-        with pytest.raises(RuntimeError, match="expects inputs"):
-            b.sam_mask_forward({"image_embeddings": emb})
-    finally:
-        sys.modules.pop("informers_spark.backend.onnx_backend", None)
-        if hasattr(_bk, "onnx_backend"):
-            delattr(_bk, "onnx_backend")
-
-
-def test_onnx_encode_output_names_passthrough_and_validation(monkeypatch):
-    # offline wiring test for the model_output path (pipelines.rb:836-852):
-    # encode(output_names=...) must forward the names to session.run and
-    # reject undeclared names like the reference's unexpected-outputs
-    # Error — onnxruntime is absent here, so stub the module and build
-    # the backend shell via __new__ (no session construction)
-    import sys
-    import types
-
-    for mod in ("onnxruntime", "tokenizers"):
-        if mod not in sys.modules:
-            stub = types.ModuleType(mod)
-            if mod == "tokenizers":
-                stub.Tokenizer = object
-            monkeypatch.setitem(sys.modules, mod, stub)
-    from informers_spark.backend.onnx_backend import OnnxBackend
-
-    class Enc:
-        ids = [1, 2]
-        attention_mask = [1, 1]
-        type_ids = [0, 0]
-
-    class Tok:
-        def encode_batch(self, texts):
-            return [Enc() for _ in texts]
-
-    captured = {}
-
-    class Sess:
-        def run(self, output_names, feed):
-            captured["names"] = output_names
-            return [np.zeros((len(feed["input_ids"]), 2), dtype=np.float32)]
-
-    be = OnnxBackend.__new__(OnnxBackend)
-    be.tokenizer = Tok()
-    be.session = Sess()
-    be._input_names = {"input_ids", "attention_mask"}
-    be._output_names = ["logits", "sentence_embedding"]
-
-    out, mask = be.encode(["x"], output_names=["sentence_embedding"])
-    assert captured["names"] == ["sentence_embedding"]
-    assert out.shape == (1, 2) and mask.shape == (1, 2)
-
-    with pytest.raises(ValueError, match="unexpected outputs"):
-        be.encode(["x"], output_names=["nope"])
